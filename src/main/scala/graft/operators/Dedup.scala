@@ -210,36 +210,46 @@ object Dedup {
 
   /** Exact n-gram Jaccard for candidate pairs: join each side's distinct
     * shingle set back and compute |∩| / |∪| with integer arithmetic.
+    *
+    * Each candidate document is shingled ONCE: the texts are
+    * semi-joined to the ids the pairs mention, and that shingle frame is
+    * eagerly materialized before both pair sides join it. No join here
+    * carries a hint — the planner picks each one from the size
+    * statistics of the materialized frames (a shingle frame cut from a
+    * small store broadcasts; one cut from a large store falls back to a
+    * shuffle join).
     */
   def verifyJaccard(pairs: DataFrame, df: DataFrame, idCol: String,
       textCol: String, shingleN: Int = 3): DataFrame = {
-    // the candidate set feeds two consumers (the id semi-join and the
-    // final pair join) whose pruned aggregates don't canonicalize equal,
-    // so exchange reuse can't kick in — lazily localCheckpoint it: one
-    // computation, RDD-level blocks that the ContextCleaner frees on GC
-    // (nothing pinned in the cache manager, unlike persist)
+    // the candidate set feeds the id semi-join and the final pair joins:
+    // one computation, RDD-level blocks that the ContextCleaner frees on
+    // GC (nothing pinned in the cache manager, unlike persist). Lazy:
+    // adaptive execution already runs its shuffle stages here, and its
+    // last stage runs inside the semi-join's first job instead of a job
+    // of its own
     val p = pairs.localCheckpoint(false)
     // shingle only the docs that actually appear in a candidate pair — at
     // scale that's the small fraction surviving LSH, not the corpus
-    val ids = p.select(col("id_a").as("__id"))
-      .union(p.select(col("id_b").as("__id"))).distinct()
+    val ids = p.select(explode(array(col("id_a"), col("id_b"))).as("__id"))
     // shingles travel as xxhash64 longs, not n-gram strings: |∩| and |∪|
     // are unchanged (wordShingles is already distinct; a within-pair
-    // 64-bit collision needs ~2^32 shingles in one document), and the two
-    // pair joins below shuffle ~8 bytes per shingle instead of the text
+    // 64-bit collision needs ~2^32 shingles in one document), and the
+    // pair joins below move ~8 bytes per shingle instead of the text
     val sh = df.join(ids, col(idCol) === col("__id"), "left_semi")
       .select(col(idCol).as("__id"),
         transform(TextFunctions.wordShingles(col(textCol), shingleN),
           x => xxhash64(x)).as("__sh"))
-    p
-      .join(sh.withColumnRenamed("__id", "id_a")
-        .withColumnRenamed("__sh", "sh_a"), Seq("id_a"))
-      .join(sh.withColumnRenamed("__id", "id_b")
-        .withColumnRenamed("__sh", "sh_b"), Seq("id_b"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast(DoubleType) /
-          size(array_union(col("sh_a"), col("sh_b"))).cast(DoubleType))
-      .drop("sh_a", "sh_b")
+      .localCheckpoint(true)
+    // both sides join the SAME unrenamed frame, so a broadcast of it is
+    // built once and reused by the second join
+    val (a, b) = (sh.as("__a"), sh.as("__b"))
+    p.join(a, col("id_a") === col("__a.__id"))
+      .join(b, col("id_b") === col("__b.__id"))
+      .select(p.columns.map(c => p(c)).toIndexedSeq :+
+        (size(array_intersect(col("__a.__sh"), col("__b.__sh")))
+          .cast(DoubleType) /
+          size(array_union(col("__a.__sh"), col("__b.__sh")))
+            .cast(DoubleType)).as("jaccard"): _*)
   }
 
   /** Full MinHash+LSH near-dup pipeline: candidates → exact verification →
@@ -514,8 +524,9 @@ object Dedup {
     * bucket_sz)`. `bucket_sz` is frozen at build time so later
     * incremental probes apply the `maxBucketSize` guard as a plain scan
     * filter (parquet predicate pushdown) instead of re-aggregating the
-    * corpus. Write it `partitionBy("band")` and the probe join prunes
-    * per band at scale.
+    * corpus. `band` is a plain data column: an incremental probe
+    * broadcasts a batch index that covers every band, so partitioning a
+    * stored index by band prunes nothing and only multiplies its files.
     */
   def minhashIndex(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, k: Int = 32, bands: Int = 16): DataFrame =
@@ -533,10 +544,13 @@ object Dedup {
     *   - the corpus INDEX is only scanned (filtered by its frozen
     *     `bucket_sz`, then hash-joined against the BROADCAST batch index)
     *     — the corpus is never re-signed and never shuffled;
-    *   - corpus TEXTS are read only for ids that survive candidate
-    *     generation (the left-semi join inside [[verifyJaccard]]);
-    *   - batch-internal pairs come from the standard
-    *     [[minhashCandidates]] over the batch alone.
+    *   - corpus TEXTS are scanned once and semi-joined to the ids that
+    *     survive candidate generation; only those documents are
+    *     shingled ([[verifyJaccard]]). The scan still covers the whole
+    *     text store: texts are keyed by id, not by bucket;
+    *   - batch-internal pairs come from the same probe: the batch index
+    *     joins its own broadcast, with the [[minhashCandidates]] pair
+    *     semantics, cap and WARN.
     *
     * Returns verified pairs `(id_a, id_b, n_bands_matched, jaccard)`
     * with `jaccard >= threshold`, `id_a < id_b`, covering every pair
@@ -550,9 +564,11 @@ object Dedup {
       corpusIndex: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleN: Int = 3, k: Int = 32, bands: Int = 16,
       maxBucketSize: Int = 1000): DataFrame =
-    incrementalMinhashPairsFromIndex(batch, corpus, corpusIndex,
-      minhashIndex(batch, idCol, textCol, shingleN, k, bands), idCol,
-      textCol, threshold, shingleN, maxBucketSize)
+    incrementalMinhashPairsFromIndex(
+      batch.select(col(idCol), col(textCol))
+        .unionByName(corpus.select(col(idCol), col(textCol))),
+      corpusIndex, minhashIndex(batch, idCol, textCol, shingleN, k, bands),
+      idCol, textCol, threshold, shingleN, maxBucketSize)
 
   /** [[incrementalMinhashPairs]] over a PRE-BUILT batch [[minhashIndex]]
     * (r17 fusion): the append lifecycle
@@ -561,40 +577,44 @@ object Dedup {
     * this entry point, and appends the same frame as the batch's
     * segment — where the unfused form signed the batch once for the
     * probe's broadcast side, once for its batch-internal candidates,
-    * and once more for the segment write. `batchIndex` must be the
-    * [[minhashIndex]] of `batch` with the same `shingleN`/k/bands
-    * (its per-batch `bucket_sz` IS the window the unfused probe
-    * computed); results are identical by construction.
+    * and once more for the segment write. `docs` holds the texts of
+    * every batch and corpus document (the store passes its text store,
+    * into which the batch's texts have already landed). `batchIndex`
+    * must be the [[minhashIndex]] of the batch with the same
+    * `shingleN`/k/bands (its per-batch `bucket_sz` IS the size window
+    * of [[minhashCandidates]], which the batch-internal pairs rely on).
     */
-  def incrementalMinhashPairsFromIndex(batch: DataFrame, corpus: DataFrame,
+  def incrementalMinhashPairsFromIndex(docs: DataFrame,
       corpusIndex: DataFrame, batchIndex: DataFrame, idCol: String,
       textCol: String, threshold: Double, shingleN: Int = 3,
       maxBucketSize: Int = 1000): DataFrame = {
     val bIdx = batchIndex
       .filter(col("bucket_sz") <= maxBucketSize)
       .select(col("id").as("id_new"), col("band"), col("bucket"))
-    val cIdx = observeCaps(corpusIndex, "bucket_sz", maxBucketSize,
-        "incrementalMinhashPairs")
-      .filter(col("bucket_sz") <= maxBucketSize)
-      .select(col("id").as("id_old"), col("band"), col("bucket"))
+    // ONE pair generator for both pair classes: the corpus index and the
+    // batch index (flagged) probe the same broadcast batch index. Batch
+    // rows keep only `id_old < id_new`, which yields each batch-internal
+    // pair once per shared band — the count the window + collect_list
+    // pair expansion gave, since the batch's frozen `bucket_sz` is that
+    // window's size. Each side keeps its own cap accounting and op name.
+    def side(idx: DataFrame, opName: String, inBatch: Boolean) =
+      observeCaps(idx, "bucket_sz", maxBucketSize, opName)
+        .filter(col("bucket_sz") <= maxBucketSize)
+        .select(col("id").as("id_old"), col("band"), col("bucket"),
+          lit(inBatch).as("__in_batch"))
     // broadcast the (small) batch index: the corpus index streams through
     // a map-side join — no corpus shuffle; output is bounded by batch
     // bucket membership, and the pair-count shuffle that follows carries
     // only matches
-    val cross = cIdx.join(broadcast(bIdx), Seq("band", "bucket"))
+    val pairs = side(corpusIndex, "incrementalMinhashPairs", inBatch = false)
+      .unionByName(side(batchIndex, "minhashCandidates", inBatch = true))
+      .join(broadcast(bIdx), Seq("band", "bucket"))
+      .filter(!col("__in_batch") || col("id_old") < col("id_new"))
       .select(least(col("id_old"), col("id_new")).as("id_a"),
         greatest(col("id_old"), col("id_new")).as("id_b"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_bands_matched"))
-    // batch-internal pairs off the same index frame (bandPairs recomputes
-    // its own size window — identical to bucket_sz — so the observeCaps
-    // accounting keeps the minhashCandidates op name and semantics)
-    val internal = bandPairs(
-      batchIndex.select(col("id"), col("band"), col("bucket")),
-      maxBucketSize, "minhashCandidates")
-    val docs = batch.select(col(idCol), col(textCol))
-      .unionByName(corpus.select(col(idCol), col(textCol)))
-    verifyJaccard(cross.unionByName(internal), docs, idCol, textCol, shingleN)
+    verifyJaccard(pairs, docs, idCol, textCol, shingleN)
       .filter(col("jaccard") >= threshold)
   }
 

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.Dedup
 
@@ -12,19 +13,25 @@ import graft.operators.Dedup
   * `/root/reference/secedgar/core/daily.py:8-60`, which lands one new
   * slice per day against an ever-growing standing corpus).
   *
-  * The standing MinHash LSH index lives ON STORAGE, `partitionBy("band")`
-  * (probe joins prune per band — see [[graft.operators.Dedup.minhashIndex]]),
-  * beside a text store for Jaccard verification of survivors. Each
-  * micro-batch:
+  * The standing MinHash LSH index lives ON STORAGE as flat segments —
+  * one directory per `ingest_batch`, parquet files directly inside,
+  * `band` a plain data column (the probe's broadcast batch side covers
+  * every band, so band partitions would prune nothing; see
+  * [[graft.operators.Dedup.minhashIndex]]) — beside a text store for
+  * Jaccard verification of survivors. Each micro-batch:
   *
-  *   1. probes the standing index + text store via
-  *      [[graft.operators.Dedup.incrementalMinhashPairs]] — corpus side is
-  *      scanned, never re-signed or shuffled; batch index is broadcast;
-  *   2. hands the verified pairs to the caller's sink (eagerly
-  *      materialized FIRST — the append below must not leak this batch's
-  *      own rows into its probe);
-  *   3. APPENDS the batch's band keys and texts — so batch N+1 dedups
-  *      against batch N, closing the intra-day duplicate window the
+  *   1. appends the batch's texts (texts are only looked up by
+  *      candidate id, so this early segment changes no probe result);
+  *   2. probes the standing index via
+  *      [[graft.operators.Dedup.incrementalMinhashPairsFromIndex]] — the
+  *      index is scanned, never re-signed or shuffled; the batch index
+  *      is broadcast; candidate texts are semi-joined out of the text
+  *      store and shingled once;
+  *   3. hands the verified pairs to the caller's sink (eagerly
+  *      materialized FIRST — the index append below must not leak this
+  *      batch's own rows into its probe);
+  *   4. APPENDS the batch's band keys — so batch N+1 dedups against
+  *      batch N, closing the intra-day duplicate window the
   *      frozen-index variant leaves open.
   *
   * Bucket-size caps are per-SEGMENT under append (each batch freezes its
@@ -34,10 +41,11 @@ import graft.operators.Dedup
   * re-freezes GLOBAL bucket sizes; run it on the compaction cadence the
   * store already needs for small-file hygiene.
   *
-  * Scale shape: per batch the standing index is read band-pruned and
-  * map-side joined against a broadcast batch index; writes are one new
-  * segment per batch. State lives in the store, not the driver — a
-  * checkpoint-restarted stream resumes against the same standing index.
+  * Scale shape: per batch the standing index is scanned and map-side
+  * joined against a broadcast batch index; writes are one new segment
+  * per batch, one file per write task. State lives in the store, not
+  * in the stream's process — a checkpoint-restarted stream resumes
+  * against the same standing index.
   * Segment plumbing (exactly-once writes keyed by `ingest_batch`) is
   * shared via [[graft.operators.SegmentStore]] — the same recipe
   * [[graft.operators.FamilyStore]] and [[graft.operators.SuffixStore]]
@@ -46,21 +54,23 @@ import graft.operators.Dedup
 object StreamingMinhashDedup {
 
   /** One-time bootstrap: sign the standing corpus, write its LSH index
-    * (partitioned by ingest batch then band — the bootstrap corpus is
-    * `ingest_batch = -1`) and its text store.
+    * and its text store as segment `ingest_batch = -1`. An empty corpus
+    * writes empty segments; later batches read them with an explicit
+    * schema.
     */
   def initIndex(corpus: DataFrame, idCol: String, textCol: String,
       indexPath: String, textPath: String, shingleN: Int = 3,
       k: Int = 32, bands: Int = 16): Unit = {
     graft.operators.SegmentStore.writeSegment(
       Dedup.minhashIndex(corpus, idCol, textCol, shingleN, k, bands),
-      -1L, indexPath, Seq("band"))
+      -1L, indexPath)
     graft.operators.SegmentStore.writeSegment(
       corpus.select(col(idCol), col(textCol)), -1L, textPath)
   }
 
-  /** The foreachBatch body: probe the standing index, return verified
-    * pairs (eager), then append this batch's index rows and texts.
+  /** The foreachBatch body: append this batch's texts, probe the
+    * standing index, return verified pairs (eager), then append this
+    * batch's index rows.
     * Batch ids must be disjoint from everything already in the store
     * (the natural monotonically-assigned shape).
     *
@@ -75,35 +85,43 @@ object StreamingMinhashDedup {
       textCol: String, indexPath: String, textPath: String,
       threshold: Double, shingleN: Int = 3, k: Int = 32, bands: Int = 16,
       maxBucketSize: Int = 1000): DataFrame = {
+    import graft.operators.SegmentStore
     val spark = batch.sparkSession
-    // a REPLAYED batch must not probe its own previously-written rows:
-    // partition-prune them out of the standing read (self-pairs and
-    // double-counted band matches otherwise). The marker-aware view
-    // (shared fold plumbing): mid-[[compactPrefix]] the folded
-    // segments' rows are served from the staged bootstrap segment.
-    val standingIdx = graft.operators.SegmentStore
-      .readRawView(spark, indexPath)
-      .filter(col("ingest_batch") =!= batchId)
-    val standingTexts = graft.operators.SegmentStore
-      .readRawView(spark, textPath)
-      .filter(col("ingest_batch") =!= batchId)
-      .drop("ingest_batch")
     // sign the batch ONCE (r17 fusion): the checkpointed 16-rows/doc
     // index frame serves the probe's broadcast side, its batch-internal
     // candidates, AND the segment append below — the unfused form ran
     // the shingle+signature pass three times per batch
     val bIdx = Dedup.minhashIndex(batch, idCol, textCol, shingleN, k,
       bands).localCheckpoint(true)
-    // eager: the probe must see the PRE-append store (lazy evaluation
+    // both stores are read with the schema the batch implies — no
+    // inference job per batch, and an empty bootstrap segment reads as
+    // an empty frame. The reads are marker-aware: mid-[[compactPrefix]]
+    // the folded segments' rows are served from the staged bootstrap
+    // segment.
+    val segmentCol = StructField("ingest_batch", LongType)
+    // a REPLAYED batch must not probe its own previously-written index
+    // rows: they are partition-pruned out (self-pairs and double-counted
+    // band matches otherwise)
+    val standingIdx = SegmentStore.read(spark, indexPath,
+      StructType(bIdx.schema.fields :+ segmentCol), Some(batchId))
+    // the batch's texts land FIRST, so verification reads batch and
+    // corpus texts from the one store, whose scan size the planner sees
+    // (a stream's micro-batch frame carries no size estimate). Texts are
+    // only looked up by candidate id, so the early segment changes no
+    // probe; a replay overwrites it in place. A failure below leaves
+    // this segment without its index segment — [[maybeCompactChecked]]
+    // decides on the text store so such a segment is never folded.
+    SegmentStore.writeSegment(batch.select(col(idCol), col(textCol)),
+      batchId, textPath, dynamic = true)
+    val texts = SegmentStore.read(spark, textPath,
+      StructType(Seq(batch.schema(idCol), batch.schema(textCol),
+        segmentCol))).drop("ingest_batch")
+    // eager: the probe must see the PRE-append index (lazy evaluation
     // after the append would join the batch against its own rows)
-    val pairs = Dedup.incrementalMinhashPairsFromIndex(batch,
-      standingTexts, standingIdx, bIdx, idCol, textCol, threshold,
-      shingleN, maxBucketSize).localCheckpoint(true)
-    graft.operators.SegmentStore.writeSegment(
-      bIdx, batchId, indexPath, Seq("band"), dynamic = true)
-    graft.operators.SegmentStore.writeSegment(
-      batch.select(col(idCol), col(textCol)), batchId, textPath,
-      dynamic = true)
+    val pairs = Dedup.incrementalMinhashPairsFromIndex(texts, standingIdx,
+      bIdx, idCol, textCol, threshold, shingleN, maxBucketSize)
+      .localCheckpoint(true)
+    SegmentStore.writeSegment(bIdx, batchId, indexPath, dynamic = true)
     pairs
   }
 
@@ -158,6 +176,13 @@ object StreamingMinhashDedup {
     * replay-safe by construction, so a never-idle stream's in-stream
     * policy calls make progress); only a store with NOTHING committed
     * defers.
+    *
+    * The decision reads the TEXT store's segments: [[processBatch]]
+    * writes a batch's texts before its index rows, so a batch that
+    * failed mid-probe leaves a text segment with no index segment. The
+    * text store's ids therefore cover every index segment, and such an
+    * uncommitted text segment limits the fold to the prefix before it
+    * (folded into -1, its replay would add a second copy of its texts).
     */
   def maybeCompactChecked(spark: SparkSession, indexPath: String,
       textPath: String, checkpointDir: String, maxSegments: Long = 64L)
@@ -165,7 +190,7 @@ object StreamingMinhashDedup {
     import graft.operators.SegmentStore
     if (segmentCount(spark, indexPath) <= maxSegments)
       SegmentStore.CompactIdle
-    else SegmentStore.checkedFold(spark, indexPath, checkpointDir)(
+    else SegmentStore.checkedFold(spark, textPath, checkpointDir)(
       upTo => compactPrefix(spark, indexPath, textPath, upTo))
   }
 
@@ -190,9 +215,8 @@ object StreamingMinhashDedup {
       .drop("bucket_sz", "ingest_batch")
       .withColumn("bucket_sz", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")))
-      .repartition(col("band"))
       .localCheckpoint(true)
-    SegmentStore.foldPrefix(spark, indexPath, upTo, idx, Seq("band"))
+    SegmentStore.foldPrefix(spark, indexPath, upTo, idx)
     val txt = spark.read.parquet(textPath)
       .filter(col("ingest_batch") <= upTo)
       .drop("ingest_batch")
@@ -204,16 +228,17 @@ object StreamingMinhashDedup {
     * the bootstrap segment (-1), re-freezing GLOBAL bucket sizes in the
     * same pass. The only job that re-aggregates the index; run it on
     * the compaction cadence, never per batch. Folding re-arms the
-    * [[maybeCompact]] segment-count trigger and restores one file set
-    * per band (the pre-r17 rewrite preserved per-batch partitioning, so
-    * the segment count never dropped and a count-triggered policy would
-    * re-fire forever).
+    * [[maybeCompact]] segment-count trigger (the pre-r17 rewrite
+    * preserved per-batch partitioning, so the segment count never
+    * dropped and a count-triggered policy would re-fire forever).
     *
     * REPLAY NOTE (the [[graft.operators.SuffixStore.compact]] /
     * [[graft.operators.FamilyStore.compact]] trade): a batch folded
     * into -1 can no longer prune its own rows out of a replayed probe —
     * run compaction after the stream's checkpoint has advanced past the
-    * folded batches.
+    * folded batches. That includes a text segment left by a batch that
+    * failed after its text append (it has no index segment yet): folded
+    * here, its replay would store its texts twice.
     */
   def compactIndex(spark: SparkSession, indexPath: String,
       textPath: String): Unit = {
@@ -223,8 +248,7 @@ object StreamingMinhashDedup {
         org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")))
       .localCheckpoint(true)
     graft.operators.SegmentStore.wipe(spark, indexPath)
-    graft.operators.SegmentStore.writeSegment(
-      idx.repartition(col("band")), -1L, indexPath, Seq("band"))
+    graft.operators.SegmentStore.writeSegment(idx, -1L, indexPath)
     val txt = spark.read.parquet(textPath).drop("ingest_batch")
       .localCheckpoint(true)
     graft.operators.SegmentStore.wipe(spark, textPath)

@@ -1,11 +1,14 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -466,5 +469,129 @@ class DedupSpec extends AnyFunSuite {
     assert(ham(sk(0L), sk(2L)) <= 8)
     assert(ham(sk(0L), sk(3L)) > 8)
     assert(sk.values.forall(s => s >= 0 && s < (1L << 52)))
+  }
+
+  /** WARN lines the `graft.operators.Dedup` logger emits while `body`
+    * runs, collected until `expect` of them arrived or 20 s passed (the
+    * cap observers log from daemon threads after the action completes).
+    */
+  private def dedupWarnings(expect: Int)(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val logger = LogManager.getLogger("graft.operators.Dedup")
+      .asInstanceOf[Logger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("dedup-spec-capture", null, null, true,
+        Array.empty) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN)
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    logger.addAppender(app)
+    try {
+      body
+      val deadline = System.nanoTime() + 20000000000L
+      while (seen.size < expect && System.nanoTime() < deadline)
+        Thread.sleep(50)
+    } finally {
+      logger.removeAppender(app)
+      app.stop()
+    }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  test("fused incremental pair generator equals cross ∪ bandPairs row " +
+    "for row, n_bands_matched included, and both caps still WARN") {
+    val cap = 4
+    val boilerA = "standing boilerplate footer that every corpus filing " +
+      "repeats word for word at the bottom of the page " * 3
+    val boilerB = "batch boilerplate header copied verbatim into every " +
+      "document of the arriving slice of the stream " * 3
+    val corpusDocs = ((0L until 6L).map(i => (i, boilerA.trim)) ++ Seq(
+      (10L, base.trim),
+      (11L, "completely different text about spark engines and columnar data")
+    )).toDF("doc_id", "text")
+    val batchDocs = ((100L until 105L).map(i => (i, boilerB.trim)) ++ Seq(
+      (110L, base.trim.replace("lazy dog", "sleepy dog")),
+      (111L, base.trim.replace("quick brown", "slow brown")
+        .replace("lazy dog", "sleepy dog")),
+      (112L, "a fresh document with entirely novel content and no overlap")
+    )).toDF("doc_id", "text")
+    val cIdx = Dedup.minhashIndex(corpusDocs, "doc_id", "text")
+      .localCheckpoint(true)
+    val bIdx = Dedup.minhashIndex(batchDocs, "doc_id", "text")
+      .localCheckpoint(true)
+    // the input really has an over-cap bucket on each side
+    assert(!cIdx.filter($"bucket_sz" > cap).isEmpty)
+    assert(!bIdx.filter($"bucket_sz" > cap).isEmpty)
+    // reference: the pre-fusion pair expression, a corpus probe against
+    // the broadcast batch index UNION the window + collect_list
+    // expansion of the batch index alone
+    val probe = bIdx.filter($"bucket_sz" <= cap)
+      .select($"id".as("id_new"), $"band", $"bucket")
+    val cross = cIdx.filter($"bucket_sz" <= cap)
+      .select($"id".as("id_old"), $"band", $"bucket")
+      .join(broadcast(probe), Seq("band", "bucket"))
+      .select(least($"id_old", $"id_new").as("id_a"),
+        greatest($"id_old", $"id_new").as("id_b"))
+      .groupBy($"id_a", $"id_b").agg(count(lit(1)).as("n_bands_matched"))
+    val internal = bIdx.select($"id", $"band", $"bucket")
+      .withColumn("sz", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")))
+      .filter($"sz" <= cap)
+      .groupBy($"band", $"bucket").agg(collect_list($"id").as("ids"))
+      .select(explode($"ids").as("id_a"), $"ids")
+      .select($"id_a", explode($"ids").as("id_b"))
+      .filter($"id_a" < $"id_b")
+      .groupBy($"id_a", $"id_b").agg(count(lit(1)).as("n_bands_matched"))
+    val want = cross.unionByName(internal).localCheckpoint(true)
+    // threshold 0: every candidate pair survives verification
+    var got: DataFrame = null
+    val warnings = dedupWarnings(expect = 2) {
+      got = Dedup.incrementalMinhashPairsFromIndex(
+          batchDocs.unionByName(corpusDocs), cIdx, bIdx, "doc_id", "text",
+          threshold = 0.0, maxBucketSize = cap)
+        .select($"id_a", $"id_b", $"n_bands_matched")
+        .localCheckpoint(true)
+    }
+    assert(want.exceptAll(got).isEmpty && got.exceptAll(want).isEmpty,
+      s"fused ${got.collect().toSeq} != reference ${want.collect().toSeq}")
+    // both pair classes and partial band matches are exercised
+    val rows = got.as[(Long, Long, Long)].collect()
+    assert(rows.exists(r => r._1 < 100L && r._2 >= 100L))
+    assert(rows.exists(r => r._1 >= 100L))
+    assert(rows.exists(_._3 < 16L))
+    // capped boilerplate pairs on neither side
+    assert(!rows.exists(r => r._1 < 6L || (r._1 >= 100L && r._2 < 105L)))
+    assert(warnings.exists(_.startsWith("incrementalMinhashPairs:")),
+      s"corpus-side cap must WARN: $warnings")
+    assert(warnings.exists(_.startsWith("minhashCandidates:")),
+      s"batch-side cap must WARN: $warnings")
+  }
+
+  test("verifyJaccard lets the planner choose: the shingle frame is " +
+    "broadcast from small-store statistics and never with broadcast " +
+    "joins disabled") {
+    def shingleBroadcasts(s: org.apache.spark.sql.SparkSession): Int = {
+      import s.implicits._
+      val dir = java.nio.file.Files.createTempDirectory("graft_vj").toString
+      corpus.write.mode("overwrite").parquet(s"$dir/docs")
+      val docs = s.read.parquet(s"$dir/docs")
+      val out = Dedup.minhashDedupPairs(docs, "doc_id", "text",
+        threshold = 0.5)
+      assert(out.select($"id_a", $"id_b").as[(Long, Long)].collect()
+        .contains((0L, 1L)))
+      collect(out.queryExecution.executedPlan) {
+        case b: BroadcastExchangeExec if b.output.exists(_.name == "__sh") => b
+      }.size
+    }
+    assert(shingleBroadcasts(spark.newSession()) > 0,
+      "a small store's shingle frame should broadcast without a hint")
+    val noBroadcast = spark.newSession()
+    noBroadcast.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    assert(shingleBroadcasts(noBroadcast) == 0,
+      "with broadcast joins disabled the shingle frame must be shuffled")
   }
 }

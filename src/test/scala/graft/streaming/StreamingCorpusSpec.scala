@@ -397,6 +397,48 @@ class StreamingCorpusSpec extends AnyFunSuite {
     assert(probePairs() == before)
   }
 
+  test("a batch that failed after its text append leaves an uncommitted " +
+    "text segment: the checked fold keeps it out of the prefix, and " +
+    "the replay emits every pair once") {
+    import spark.implicits._
+    import graft.operators.SegmentStore
+    val base = "the quick brown fox jumps over the lazy dog " * 8
+    val novel = "fresh unrelated prose mentioning parquet shuffles " +
+      "broadcast joins and adaptive execution plans " * 6
+    val dir = java.nio.file.Files.createTempDirectory("smhfail").toString
+    val (idxP, txtP) = (s"$dir/index", s"$dir/texts")
+    StreamingMinhashDedup.initIndex(
+      Seq((0L, base.trim)).toDF("doc_id", "text"), "doc_id", "text",
+      idxP, txtP)
+    Seq(Seq((100L, novel.trim)), Seq((110L, "novel prose about shuffles")))
+      .zipWithIndex.foreach { case (b, i) =>
+        StreamingMinhashDedup.processBatch(b.toDF("doc_id", "text"),
+          i.toLong, "doc_id", "text", idxP, txtP, threshold = 0.5)
+      }
+    // batch 2 dups the corpus AND batch 0; it failed mid-probe: its text
+    // segment is on disk, its index segment and commit are not
+    val failed = Seq((120L, base.trim.replace("lazy", "sleepy")),
+      (121L, novel.trim.replace("joins", "hashes"))).toDF("doc_id", "text")
+    SegmentStore.writeSegment(failed, 2L, txtP, dynamic = true)
+    val ckpt = java.nio.file.Files.createTempDirectory("smhfailck")
+      .toString
+    val commits = java.nio.file.Paths.get(ckpt, "commits")
+    java.nio.file.Files.createDirectories(commits)
+    java.nio.file.Files.writeString(commits.resolve("0"), "v1\n{}")
+    java.nio.file.Files.writeString(commits.resolve("1"), "v1\n{}")
+    assert(StreamingMinhashDedup.maybeCompactChecked(spark, idxP, txtP,
+      ckpt, maxSegments = 1) == SegmentStore.CompactedPrefix)
+    assert(SegmentStore.segmentIds(spark, txtP).sorted == Seq(-1L, 2L),
+      "the uncommitted text segment must stay out of the fold")
+    // the stream restarts and replays batch 2
+    val replayed = StreamingMinhashDedup.processBatch(failed, 2L,
+      "doc_id", "text", idxP, txtP, threshold = 0.5)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSeq
+    assert(replayed.sorted == Seq((0L, 120L), (100L, 121L)),
+      s"every replayed pair exactly once: $replayed")
+    assert(spark.read.parquet(txtP).count() == 5L)
+  }
+
   test("index-append is replay-idempotent: reprocessing a micro-batch " +
     "(foreachBatch at-least-once) overwrites its own partition instead " +
     "of duplicating it") {
@@ -429,5 +471,73 @@ class StreamingCorpusSpec extends AnyFunSuite {
       "doc_id", "text", s"$dir/index", s"$dir/texts", threshold = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs2.contains((101L, 200L)))
+  }
+
+  test("an empty bootstrap corpus: the first processBatch reads the " +
+    "empty store with an explicit schema and returns the batch-internal " +
+    "pairs") {
+    import spark.implicits._
+    val base = "the quick brown fox jumps over the lazy dog " * 8
+    val dir = java.nio.file.Files.createTempDirectory("smhe").toString
+    val (idxP, txtP) = (s"$dir/index", s"$dir/texts")
+    StreamingMinhashDedup.initIndex(
+      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text",
+      idxP, txtP)
+    val batch = Seq((100L, base.trim),
+      (101L, base.trim.replace("lazy", "sleepy")),
+      (102L, "novel prose about shuffles and columnar storage formats"))
+      .toDF("doc_id", "text")
+    val pairs = StreamingMinhashDedup.processBatch(batch, 0L, "doc_id",
+      "text", idxP, txtP, threshold = 0.5)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(pairs == Set((100L, 101L)), s"batch-internal pairs: $pairs")
+    // and the next batch probes the appended segment
+    val next = StreamingMinhashDedup.processBatch(
+      Seq((200L, base.trim)).toDF("doc_id", "text"), 1L, "doc_id", "text",
+      idxP, txtP, threshold = 0.5)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(next.contains((100L, 200L)), s"cross-batch pairs: $next")
+  }
+
+  test("minhash store segments are flat: parquet files directly under " +
+    "each ingest_batch directory, no band= sub-partition, after " +
+    "processBatch, compactPrefix and compactIndex") {
+    import spark.implicits._
+    val base = "the quick brown fox jumps over the lazy dog " * 8
+    val dir = java.nio.file.Files.createTempDirectory("smhl").toString
+    val (idxP, txtP) = (s"$dir/index", s"$dir/texts")
+    def assertFlat(stage: String): Unit = Seq(idxP, txtP).foreach { p =>
+      val segs = new java.io.File(p).listFiles()
+        .filter(_.getName.startsWith("ingest_batch="))
+      assert(segs.nonEmpty, s"$stage: no segments under $p")
+      segs.foreach { seg =>
+        val kids = seg.listFiles().toSeq
+        assert(kids.forall(_.isFile),
+          s"$stage: $seg holds directories ${kids.filter(_.isDirectory)}")
+        assert(kids.exists(_.getName.endsWith(".parquet")),
+          s"$stage: $seg holds no parquet file")
+      }
+      assert(!java.nio.file.Files.walk(java.nio.file.Paths.get(p))
+        .anyMatch(_.getFileName.toString.startsWith("band=")),
+        s"$stage: band= directory under $p")
+    }
+    StreamingMinhashDedup.initIndex(
+      Seq((0L, base.trim)).toDF("doc_id", "text"), "doc_id", "text",
+      idxP, txtP)
+    Seq(Seq((100L, base.trim)),
+      Seq((110L, "fresh prose about parquet shuffles and broadcast joins")))
+      .zipWithIndex.foreach { case (b, i) =>
+        StreamingMinhashDedup.processBatch(b.toDF("doc_id", "text"),
+          i.toLong, "doc_id", "text", idxP, txtP, threshold = 0.5)
+      }
+    assertFlat("processBatch")
+    StreamingMinhashDedup.compactPrefix(spark, idxP, txtP, upTo = 0L)
+    assert(graft.operators.SegmentStore.segmentIds(spark, idxP).sorted ==
+      Seq(-1L, 1L))
+    assertFlat("compactPrefix")
+    StreamingMinhashDedup.compactIndex(spark, idxP, txtP)
+    assertFlat("compactIndex")
+    // band stays a data column
+    assert(spark.read.parquet(idxP).columns.contains("band"))
   }
 }
