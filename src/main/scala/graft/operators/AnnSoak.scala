@@ -171,7 +171,7 @@ object AnnSoak {
           timed(report(probes, corpus))
         // POLICY-ON: the rebuild response runs right where the witness
         // fires, mid-chain, and the chain continues against the
-        // rebuilt index — the FamilyStore.maybeCompact discipline
+        // rebuilt index — the FamilyStore.maybeCompactChecked discipline
         var rebuiltSec = -1.0
         var recallAfter = -1.0
         var fireAfter = false

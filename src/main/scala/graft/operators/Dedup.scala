@@ -976,9 +976,9 @@ object Dedup {
     * above-cap ([[SuffixDedup.familyLabels]],
     * [[SuffixDedup.suffixFamilies]]) pass true: at 100 TB the wasted
     * partial execution of a corpus-wide gram pass would dwarf the job
-    * it saves. ([[FamilyStore.compact]]/`compactPrefix` used to pass
-    * true; since r17 they localCheckpoint their `latest` table
-    * upstream — a checkpointed INPUT gives the fallback the same
+    * it saves. ([[FamilyStore.compactPrefix]] used to pass true; since
+    * r17 it localCheckpoints its `latest` table upstream — a
+    * checkpointed INPUT gives the fallback the same
     * re-read-not-re-derive property with a materialization the caller
     * reuses anyway, so eagerInput would only duplicate it.) Callers whose graphs are
     * batch/pair-scale BY CONSTRUCTION (the family probe, the

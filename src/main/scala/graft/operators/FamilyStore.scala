@@ -45,11 +45,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *     ids latest-segment-first ([[fetchPointerClosure]]) and folds the
   *     rows into the probe's single components pass — union-find with
   *     path compression done relationally; chains deepen by at most one
-  *     generation per bridging batch and flatten at [[compact]].
+  *     generation per bridging batch and flatten at [[compactPrefix]].
   *
   * '''Depth-bounded chase (r16).''' The store records an upper bound on
   * its pointer-chain depth as [[SegmentStore]] metadata
-  * (`labelsPath/_depth`): [[init]] and [[compact]] set it to 1 (0 when
+  * (`labelsPath/_depth`): [[init]] and a full fold set it to 1 (0 when
   * the labels store is empty — a first-day corpus with no duplicate
   * families is a valid store, served with an explicit read schema, not
   * an inference error), and [[processBatch]] bumps it by one exactly
@@ -64,7 +64,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * the dominant term of its fixed-phase floor). A store without the
   * metadata file (pre-r16 layout) falls back to the dynamic per-hop
   * loop. Depth past `maxChase` still throws loudly — chains deeper
-  * than the bridging generations since the last [[compact]] mean
+  * than the bridging generations since the last fold mean
   * compaction is overdue, and a silent partial closure would mislabel.
   *
   * Equality contract (the `q_family_append` / `q_family_chain`
@@ -86,7 +86,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * broadcast batch-key semi-join (band partitioning keeps files
   * bounded; the probe never shuffles the index), labels store scanned
   * `depth` times inside one job through broadcast frontier semi-joins
-  * (depth = bridging generations since the last [[compact]], typically
+  * (depth = bridging generations since the last fold, typically
   * 1 on any sane compaction cadence), writes are one new segment pair.
   * Nothing corpus-sized ever shuffles on the hot path.
   */
@@ -154,9 +154,9 @@ object FamilyStore {
     * batch recomputes against the same pre-append state and overwrites
     * its own segments instead of duplicating them (the
     * [[graft.streaming.StreamingMinhashDedup.processBatch]] recipe;
-    * exactly-once for a batch holds until [[compact]] folds its label
-    * segment — see the compact doc). Batch ids must be disjoint from
-    * everything already in the store.
+    * exactly-once for a batch holds until a fold covers its segments —
+    * see the [[compactPrefix]] replay note). Batch ids must be disjoint
+    * from everything already in the store.
     */
   def processBatch(batch: DataFrame, batchId: Long, idCol: String,
       textCol: String, indexPath: String, labelsPath: String, minLen: Int,
@@ -266,8 +266,8 @@ object FamilyStore {
 
   /** Segment count of the index store and the recorded pointer-chain
     * depth bound — the two observables the auto-compaction policy
-    * ([[maybeCompact]]) thresholds on. Driver-side file listing plus
-    * one metadata read; no Spark job.
+    * ([[maybeCompactChecked]]) thresholds on. Driver-side file listing
+    * plus one metadata read; no Spark job.
     */
   def stats(spark: SparkSession, indexPath: String,
       labelsPath: String): (Long, Long) = {
@@ -277,34 +277,20 @@ object FamilyStore {
     (nSegments, depth)
   }
 
-  /** Threshold-triggered [[compact]]: fires when the recorded chain
-    * depth exceeds `maxDepth` (probe cost grows with depth) or the
-    * index store has accumulated more than `maxSegments` segments
-    * (small-file pressure). Returns whether compaction ran. A legacy
-    * store without depth metadata compacts on the segment trigger
-    * only. Call it where [[compact]] is safe — after the stream's
-    * checkpoint has advanced past the folded batches (see the compact
-    * replay note).
-    */
-  def maybeCompact(spark: SparkSession, indexPath: String,
-      labelsPath: String, maxDepth: Long = 4L, maxSegments: Long = 64L,
-      maxDocsPerGram: Int = 1000): Boolean = {
-    val (nSegments, depth) = stats(spark, indexPath, labelsPath)
-    val fire = depth > maxDepth || nSegments > maxSegments
-    if (fire) compact(spark, indexPath, labelsPath, maxDocsPerGram)
-    fire
-  }
-
-  /** [[maybeCompact]] under the AUTOMATED checkpoint-safety rule (r16
-    * verdict #4 — the plain form trusts the caller to invoke it "where
-    * compact is safe"): reads the owning stream's committed offsets
-    * from its checkpoint ([[SegmentStore.lastCommittedBatch]]) and
-    * never folds a segment whose batch is still replayable — its batch
-    * has no commit file yet, and a post-fold restart would replay it
-    * against a store that can no longer prune its rows (the compact
-    * replay note above). All folding routes through [[compactPrefix]]
-    * (the staged, crash-consistent protocol): with every appended
-    * segment committed the whole store folds
+  /** The store's compaction policy, under the AUTOMATED
+    * checkpoint-safety rule (r16 verdict #4): fires when the recorded
+    * chain depth exceeds `maxDepth` (probe cost grows with depth) or
+    * the index store has accumulated more than `maxSegments` segments
+    * (small-file pressure) — a legacy store without depth metadata
+    * fires on the segment trigger only — and otherwise returns
+    * [[SegmentStore.CompactIdle]]. Reads the owning stream's committed
+    * offsets from its checkpoint ([[SegmentStore.lastCommittedBatch]])
+    * and never folds a segment whose batch is still replayable — its
+    * batch has no commit file yet, and a post-fold restart would replay
+    * it against a store that can no longer prune its rows (the
+    * [[compactPrefix]] replay note). All folding routes through
+    * [[compactPrefix]] (the staged, crash-consistent protocol): with
+    * every appended segment committed the whole store folds
     * ([[SegmentStore.Compacted]]); with a replayable tail the
     * COMMITTED PREFIX folds and the tail keeps its replay protection
     * ([[SegmentStore.CompactedPrefix]]) — which is what lets a
@@ -327,14 +313,30 @@ object FamilyStore {
         compactPrefix(spark, indexPath, labelsPath, upTo, maxDocsPerGram))
   }
 
-  /** Committed-prefix [[compact]]: flatten and fold only the segments
-    * with `ingest_batch <= upTo` (the bootstrap plus every COMMITTED
-    * batch), leaving newer — still replayable — segments in place with
-    * their replay protection intact. This is also the ONLY fold that
-    * can bound the INDEX store's segment count: [[compact]]
-    * deliberately preserves per-batch index partitioning because it
-    * cannot know which batches are still replayable, but a committed
-    * batch is never replayed, so its index segment folds freely.
+  /** The store's one fold — maintenance, the only job that touches
+    * corpus-scale state, run on the compaction cadence, never per
+    * batch. Flattens and folds the segments with `ingest_batch <= upTo`
+    * (the bootstrap plus every COMMITTED batch) into the bootstrap
+    * segment (-1) of BOTH stores through the staged
+    * [[SegmentStore.foldPrefix]] protocol, leaving newer — still
+    * replayable — segments in place with their replay protection
+    * intact. `upTo = Long.MaxValue` folds everything (what
+    * [[maybeCompactChecked]] runs once every batch is committed):
+    * afterwards [[fetchPointerClosure]] closes in one generation until
+    * the next bridging batch and the index store is one segment.
+    *
+    * INDEX: over-cap is re-resolved ACROSS the WHOLE store — a gram
+    * whose COMBINED count exceeds the cap can never contribute new
+    * edges again (counts only grow), so its folded posting rows collapse
+    * to one marker carrying their count; the probe's combined-count
+    * formula reads the same total from the markers. Under-cap rows are
+    * untouched.
+    *
+    * REPLAY NOTE: a batch folded into -1 can no longer prune its own
+    * rows out of a replayed probe (and standing labels that survived
+    * only in its segment now live in -1, where the prune cannot drop
+    * them either). Fold only batches the owning stream has committed —
+    * [[maybeCompactChecked]] derives `upTo` from the checkpoint.
     *
     * LABELS correctness across the partial fold: the flatten is pure
     * path compression of the prefix pointer graph (every prefix id
@@ -416,89 +418,6 @@ object FamilyStore {
       .unionByName(collapsed)
       .repartition(col("band")))
     SegmentStore.foldPrefix(spark, indexPath, upTo, foldedIdx, Seq("band"))
-  }
-
-  /** Periodic maintenance — the only job that touches corpus-scale
-    * state, run on the store's compaction cadence, never per batch:
-    *
-    *   1. LABELS: flatten pointer chains (full path compression) —
-    *      min-label CC over the whole pointer graph, each id rewritten
-    *      to its final label, superseded rows dropped, and the whole
-    *      flattened table folded into the BOOTSTRAP segment (-1). After
-    *      this, [[fetchPointerClosure]] closes in one generation until
-    *      the next bridging batch (depth metadata reset to 1, or 0 for
-    *      an empty store).
-    *   2. INDEX: re-resolve over-cap ACROSS segments — a gram whose
-    *      COMBINED count exceeds the cap can never contribute new
-    *      edges again (counts only grow), so its posting rows collapse
-    *      to one marker per segment carrying that segment's count; the
-    *      probe's combined-count formula reads the same total from the
-    *      markers. Under-cap rows are untouched. Also compacts small
-    *      files.
-    *
-    * REPLAY NOTE: the index rewrite preserves `ingest_batch`
-    * partitioning, so index replay idempotence survives compaction —
-    * but the labels fold does NOT: a batch whose label segment was
-    * folded into -1 can no longer prune its own rows out of a replayed
-    * probe (and standing labels that survived only in its segment now
-    * live in -1, where the prune cannot drop them either — keeping
-    * per-id rows in their LATEST segment, the pre-r16 layout, was
-    * strictly worse: a replay would prune SURVIVING standing labels
-    * and recompute against a corrupted pre-append view). Same trade as
-    * [[SuffixStore.compact]] / [[graft.streaming.StreamingMinhashDedup
-    * .compactIndex]]: run compaction on the maintenance cadence, after
-    * the stream's checkpoint has advanced past the folded batches.
-    */
-  def compact(spark: SparkSession, indexPath: String, labelsPath: String,
-      maxDocsPerGram: Int = 1000): Unit = {
-    // ---- labels: full path compression, folded into segment -1 ----
-    val lbl = SegmentStore.read(spark, labelsPath, LabelSchema)
-    // materialize the latest-row table ONCE (r17, the compactPrefix
-    // rationale): it feeds the CC edge list AND the flatten join —
-    // store-scale, so size-tiered (r18, §5)
-    val latest = Materialize.eager(lbl.groupBy(col("id"))
-      .agg(max_by(struct(col("label"), col("ingest_batch")),
-        col("ingest_batch")).as("b"))
-      .select(col("id"), col("b.label").as("label")))
-    // bounded components (guarded driver union-find): the pointer graph
-    // is labels-store-scale — small stores flatten on the driver, big
-    // stores fall back to the distributed pass via the cap
-    val resolved = Dedup.connectedComponentsBounded(
-        latest.select(col("id").as("id_a"), col("label").as("id_b")),
-        tag = "FamilyStore.compact")
-      .withColumnRenamed("label", "final")
-    val obsF = org.apache.spark.sql.Observation()
-    val flat = Materialize.eager(latest.join(resolved, Seq("id"), "left")
-      .select(col("id"), coalesce(col("final"), col("label")).as("label"))
-      .filter(col("id") =!= col("label"))
-      .observe(obsF, count(lit(1)).as("n")))
-    writeLabelSegment(flat, -1L, labelsPath)
-    SegmentStore.writeMeta(spark, labelsPath, "depth",
-      if (observedCount(obsF, flat) == 0L) 0L else 1L)
-    SegmentStore.writeMeta(spark, labelsPath, "depth_batch", -1L)
-
-    // ---- index: collapse globally-over-cap postings to markers ----
-    val idx = SegmentStore.read(spark, indexPath, IndexSchema)
-    val totals = idx.groupBy(col("h"))
-      .agg((sum(when(col("doc_id").isNotNull, 1L).otherwise(0L)) +
-        coalesce(sum(when(col("doc_id").isNull, col("n_docs"))), lit(0L)))
-        .as("__tot"))
-      .filter(col("__tot") > maxDocsPerGram)
-      .select(col("h"))
-    val over = idx.join(totals, Seq("h"), "left_semi")
-    val under = idx.join(totals, Seq("h"), "left_anti")
-    // per (h, segment): one marker carrying postings-count + existing
-    // marker counts (a segment can hold either shape pre-compaction)
-    val collapsed = over.groupBy(col("h"), col("ingest_batch"), col("band"))
-      .agg((sum(when(col("doc_id").isNotNull, 1L).otherwise(0L)) +
-        coalesce(sum(when(col("doc_id").isNull, col("n_docs"))), lit(0L)))
-        .as("n_docs"))
-      .select(col("h"), lit(null).cast("long").as("doc_id"),
-        col("n_docs"), col("ingest_batch"), col("band"))
-    val rewritten = Materialize.eager(under.unionByName(collapsed)
-      .repartition(col("ingest_batch"), col("band")))
-    rewritten.write.mode("overwrite").partitionBy("ingest_batch", "band")
-      .parquet(indexPath)
   }
 
   /** The probe core: standing reads (optionally excluding a replayed
@@ -594,8 +513,8 @@ object FamilyStore {
           throw new IllegalStateException(
             s"FamilyStore.fetchPointerClosure: recorded pointer-chain " +
               s"depth $depth exceeds maxChase=$maxChase — run " +
-              "FamilyStore.compact to flatten the labels store (or " +
-              "raise maxChase deliberately)")
+              "FamilyStore.maybeCompactChecked to flatten the labels " +
+              "store (or raise maxChase deliberately)")
         var frontier = touched.select(col("id"))
         var acc: Option[DataFrame] = None
         var gen = 0L
@@ -635,8 +554,9 @@ object FamilyStore {
         if (!closed)
           throw new IllegalStateException(
             s"FamilyStore.fetchPointerClosure: pointer chains deeper " +
-              s"than maxChase=$maxChase — run FamilyStore.compact to " +
-              "flatten the labels store (or raise maxChase deliberately)")
+              s"than maxChase=$maxChase — run " +
+              "FamilyStore.maybeCompactChecked to flatten the labels " +
+              "store (or raise maxChase deliberately)")
         pointers.getOrElse(empty)
     }
   }

@@ -152,7 +152,7 @@ object IvfPq {
     *
     * Not atomic against concurrent probes (the overwrite replaces
     * `codes/` then `model/`): run it on the maintenance cadence, like
-    * [[FamilyStore.compact]].
+    * [[FamilyStore.compactPrefix]].
     */
   def rebuildIndex(corpus: DataFrame, path: String, nlist: Int, m: Int,
       ksub: Int, iters: Int = 2, pqIters: Int = 3,

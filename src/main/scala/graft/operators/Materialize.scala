@@ -39,6 +39,10 @@ import org.apache.spark.sql.DataFrame
   * `spark.graft.localCheckpoint.measureMinPartitions` (default 16)
   * skip the storage lookup outright — see the fast-path comment in
   * [[eager]] for why that lookup must not run per tiny frame.
+  * Both ways of staying on the local tier without a measurement are
+  * logged: the fast-path skip at INFO (the expected case at gate
+  * scale), a storage lookup that finds no entry at WARN (a frame of
+  * any size then stays local unmeasured).
   *
   * Both tiers are EAGER and both truncate lineage — callers that rely
   * on "materialized before the next write mutates the store" (the
@@ -48,6 +52,8 @@ import org.apache.spark.sql.DataFrame
   */
 object Materialize {
 
+  private lazy val log =
+    org.slf4j.LoggerFactory.getLogger("graft.operators.Materialize")
   private val DefaultMaxLocalBytes: Long = 8L * 1024 * 1024 * 1024
   private val DefaultMeasureMinPartitions = 16
 
@@ -80,13 +86,22 @@ object Materialize {
     val minParts = confLong(
       "spark.graft.localCheckpoint.measureMinPartitions",
       DefaultMeasureMinPartitions.toLong)
-    if (rdd.forall(_.getNumPartitions < minParts)) return ck
+    if (rdd.forall(_.getNumPartitions < minParts)) {
+      log.info(s"eager: ${rdd.map(_.getNumPartitions).mkString} partitions " +
+        s"< measureMinPartitions=$minParts — tier measurement skipped, " +
+        "frame stays on the local tier")
+      return ck
+    }
     // the checkpointed blocks' REAL footprint (driver-side status
     // read, no job) — only consulted for plausibly-big frames
     val measured = rdd.flatMap { r =>
       sc.getRDDStorageInfo.find(_.id == r.id)
         .map(i => i.memSize + i.diskSize)
     }
+    if (measured.isEmpty)
+      log.warn("eager: no storage entry for the checkpointed frame " +
+        s"(rdd ${rdd.map(_.id).mkString}) — footprint " +
+        "unmeasured, frame stays on the local tier")
     if (measured.exists(_ > maxLocal)) {
       if (sc.getCheckpointDir.isEmpty)
         sc.setCheckpointDir(

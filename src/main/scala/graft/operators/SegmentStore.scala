@@ -5,11 +5,12 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Shared plumbing for the segment-partitioned standing stores
   * ([[FamilyStore]], [[SuffixStore]],
-  * [[graft.streaming.StreamingMinhashDedup]]) — extracted once (r15
+  * [[graft.streaming.StreamingMinhashDedup]],
+  * [[graft.streaming.StreamingAnnIngest]]) — extracted once (r15
   * verdict: three copies of the exactly-once recipe) so every store
   * family carries the SAME load-bearing invariants:
   *
@@ -25,12 +26,17 @@ import org.apache.spark.sql.types.StructType
   *     `unable to infer schema` — bricking a store on a plausible
   *     first-day corpus. An explicit schema returns the empty frame the
   *     caller expects.
-  *   - '''Path-own-filesystem wipes''' ([[wipe]]): full-store rewrites
+  *   - '''Path-own-filesystem wipes''' ([[wipe]]): store resets
   *     delete through `Path.getFileSystem`, never `FileSystem.get` —
   *     the latter resolves the DEFAULT filesystem, so on a cluster
   *     whose default fs differs from the store location (hdfs default,
   *     file:/s3a store) the delete would target the wrong fs and the
-  *     following overwrite would land on a stale store.
+  *     following write would land on a stale store.
+  *   - '''One fold''' ([[foldPrefix]] behind [[checkedFold]]): every
+  *     store family compacts through its staged committed-prefix fold
+  *     only; "fold everything" is the same fold with `upTo =
+  *     Long.MaxValue`, so no store has a wipe-and-rewrite window in
+  *     which a crash leaves it empty.
   *   - '''Driver-free metadata''' ([[readMeta]]/[[writeMeta]]): tiny
   *     underscore-prefixed files inside the store directory (ignored by
   *     parquet listing, like `_SUCCESS`) carry store-level scalars —
@@ -86,6 +92,13 @@ object SegmentStore {
       d.filter(col("ingest_batch") =!= b))
   }
 
+  /** The [[read]] schema of a store whose segments are written from
+    * frames shaped like `rows`: their columns plus `ingest_batch`.
+    * Derived from the writer's own frame, so no read infers it.
+    */
+  def schemaOf(rows: DataFrame): StructType =
+    StructType(rows.schema.fields :+ StructField("ingest_batch", LongType))
+
   /** Delete a store directory on ITS OWN filesystem (see object doc).
     * No-op when the path does not exist.
     */
@@ -137,20 +150,6 @@ object SegmentStore {
       .maxOption
   }
 
-  /** The automated compaction-safety predicate shared by every store
-    * family's `maybeCompactChecked`: folding is safe iff every
-    * appended segment's batch has a commit file — a segment whose
-    * batch is still replayable must keep its own partition so the
-    * replay can prune its rows out of the standing reads.
-    */
-  def foldIsSafe(spark: SparkSession, storePath: String,
-      checkpointDir: String): Boolean = {
-    val appended = segmentIds(spark, storePath).filter(_ >= 0L)
-    appended.isEmpty ||
-      lastCommittedBatch(spark, checkpointDir)
-        .exists(_ >= appended.max)
-  }
-
   /** Outcome of a checkpoint-safe compaction policy call. */
   sealed trait CompactOutcome
   /** Trigger not met — nothing to do. */
@@ -192,7 +191,7 @@ object SegmentStore {
   //      `_fold_staging/` — underscore-prefixed, so segment listings
   //      and parquet reads of the store root do not see it;
   //   2. COMMIT: create `_fold_upto = upTo`. Marker-aware reads
-  //      ([[read]] / [[readRawView]]) now serve
+  //      ([[read]]) now serve
   //      staging ∪ segments > upTo; before the marker they served the
   //      unchanged original store. Either side of this instant is a
   //      complete, consistent view;
@@ -218,32 +217,6 @@ object SegmentStore {
     */
   def pendingFoldUpto(spark: SparkSession, path: String): Option[Long] =
     readMeta(spark, path, FoldMeta)
-
-  /** The consistent standing view for callers that read raw
-    * (schema-inferred) parquet rather than [[read]]: without a marker,
-    * the store as-is; with one, the folded view — staging (as segment
-    * -1) when it has not been renamed into place yet, plus the
-    * segments newer than the fold's bound.
-    */
-  def readRawView(spark: SparkSession, path: String): DataFrame = {
-    val base = spark.read.parquet(path)
-    pendingFoldUpto(spark, path) match {
-      case None => base
-      case Some(upTo) =>
-        val st = stagingPath(path)
-        val fs = st.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(st)) {
-          // staging is never empty (foldPrefix short-circuits zero-row
-          // folds), so the inferred read is safe
-          val live = base.filter(col("ingest_batch") > upTo)
-          spark.read.parquet(st.toString)
-            .withColumn("ingest_batch", lit(-1L))
-            .select(base.columns.map(col).toIndexedSeq: _*)
-            .unionByName(live)
-        } else base.filter(
-          col("ingest_batch") === -1L || col("ingest_batch") > upTo)
-    }
-  }
 
   /** Steps 3-5 of the fold protocol: swap staging into the bootstrap
     * directory, delete the folded segment directories, clear the
@@ -300,12 +273,10 @@ object SegmentStore {
     * when a replayable tail exists ([[CompactedPrefix]]), and not at
     * all only when nothing is committed yet ([[CompactDeferred]]).
     * Routing the all-committed case through the same staged fold keeps
-    * the checked policy crash-consistent everywhere (the plain
-    * `compact`s keep their documented wipe-and-rewrite maintenance
-    * trade) — and for [[FamilyStore]] it is also what lets the checked
-    * policy bound the INDEX store's segment count, which the plain
-    * compact must conservatively preserve. Heals a crashed fold first
-    * (cheap no-op otherwise). `decisionPath` is the store whose
+    * every compaction crash-consistent — the store's fold is its only
+    * compaction, and maintenance callers that know every batch is
+    * committed call it directly with `Long.MaxValue`. Heals a crashed
+    * fold first (cheap no-op otherwise). `decisionPath` is the store whose
     * segments gate the decision (the appended superset — e.g.
     * [[FamilyStore]] decides on the index store); sibling stores are
     * healed by the store's own compactPrefix.

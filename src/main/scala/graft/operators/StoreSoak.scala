@@ -38,15 +38,17 @@ import org.apache.spark.sql.functions._
   * (`exceptAll` both ways vs the one-shot whole-corpus rerun
   * restricted to the batch) is asserted after EVERY step, the
   * auto-compaction policy runs policy-ON every step
-  * ([[FamilyStore.maybeCompact]] `maxDepth = 4` — it must fire
-  * mid-chain and the chain must keep going), and a held-out batch is
-  * probed read-only at the END so the post-chain probe cost lands
-  * beside the n=1 numbers above. The SUFFIX store runs the same
+  * ([[FamilyStore.maybeCompactChecked]] `maxDepth = 4` against a
+  * scratch checkpoint that commits each step, so a firing policy
+  * folds everything — it must fire mid-chain and the chain must keep
+  * going), and a held-out batch is probed read-only at the END so the
+  * post-chain probe cost lands beside the n=1 numbers above. The
+  * SUFFIX store runs the same
   * 10-append chain afterwards (simpler semantics — counts SUM across
   * segments, no pointer topology), parity per step against
   * `duplicatedSpans` over everything appended so far, with
-  * `maybeCompact(maxSegments = 5)` policy-ON (fires twice across 11
-  * segments). One JSON line per step:
+  * `maybeCompactChecked(maxSegments = 5)` policy-ON (fires twice across
+  * 11 segments). One JSON line per step:
   * `{"mode":"chain","step":k,"docs_so_far":N,"batch":N,
   *   "append_sec":…,"parity":bool,"depth":D,"segments":S,
   *   "compacted":bool,"compact_sec":…}` plus a final
@@ -222,6 +224,27 @@ object StoreSoak {
   private[operators] def bridgeText(k: Int): String =
     s"br${k}aa" + P(k) + s"br${k}bb" + P(k + 1) + "zz"
 
+  /** Mark `batchId` committed in a scratch checkpoint directory, as a
+    * stream's commit log does once its foreachBatch returns: the chain
+    * soak appends outside a stream, and every step it finishes is
+    * committed, so [[SegmentStore.checkedFold]] may fold all of it.
+    */
+  private def commit(ckptDir: String, batchId: Long): Unit = {
+    val commits = java.nio.file.Paths.get(ckptDir, "commits")
+    java.nio.file.Files.createDirectories(commits)
+    java.nio.file.Files.writeString(commits.resolve(batchId.toString),
+      "v1\n{}")
+  }
+
+  /** Whether the checked policy of a committed chain step folded: with
+    * every batch committed it either stays idle or folds everything.
+    */
+  private def foldedAll(o: SegmentStore.CompactOutcome): Boolean = {
+    require(o == SegmentStore.CompactIdle || o == SegmentStore.Compacted,
+      s"every chain step is committed, so the policy must not defer: $o")
+    o == SegmentStore.Compacted
+  }
+
   /** The 10-append chain soak (see object doc). */
   private def runChain(spark: org.apache.spark.sql.SparkSession,
       dir: String, minLen: Int): Unit = {
@@ -276,9 +299,12 @@ object StoreSoak {
       val (segs, depth) = FamilyStore.stats(spark, idxP, lblP)
       // policy ON every step: must fire mid-chain (depth > 4) and the
       // chain must keep going afterwards
-      val (fired, compactSec) = timed {
-        FamilyStore.maybeCompact(spark, idxP, lblP, maxDepth = 4)
+      commit(s"$scratch/ckpt", k.toLong)
+      val (outcome, compactSec) = timed {
+        FamilyStore.maybeCompactChecked(spark, idxP, lblP,
+          s"$scratch/ckpt", maxDepth = 4)
       }
+      val fired = foldedAll(outcome)
       val nBatch = batch.count()
       val nAll = all.count()
       println(s"""{"mode":"chain","step":$k,"docs_so_far":$nAll,""" +
@@ -316,8 +342,8 @@ object StoreSoak {
     // ---- the suffix-store chain: same 10-append shape, simpler
     // semantics (counts SUM across segments — no pointer topology), so
     // parity per step is spans ≡ duplicatedSpans over everything
-    // appended so far, restricted to the batch; maybeCompact runs
-    // policy-ON against the segment-count trigger ----
+    // appended so far, restricted to the batch; maybeCompactChecked
+    // runs policy-ON against the segment-count trigger ----
     val sfxP = s"$scratch/sfx/idx"
     val (_, sInitSec) = timed {
       SuffixStore.init(bootstrap, "doc_id", "text", sfxP, minLen)
@@ -340,13 +366,16 @@ object StoreSoak {
           .localCheckpoint(true)
         want.exceptAll(spans).isEmpty && spans.exceptAll(want).isEmpty
       }
-      val (fired, compactSec) = timed {
-        SuffixStore.maybeCompact(spark, sfxP, maxSegments = 5)
+      commit(s"$scratch/sfx/ckpt", k.toLong)
+      val (outcome, compactSec) = timed {
+        SuffixStore.maybeCompactChecked(spark, sfxP, s"$scratch/sfx/ckpt",
+          maxSegments = 5)
       }
+      val fired = foldedAll(outcome)
       println(s"""{"mode":"chain","store":"suffix","step":$k,""" +
         s""""append_sec":$appendSec,"parity":$parityS,""" +
         s""""parity_rerun_sec":$paritySec,""" +
-        s""""segments":${SuffixStore.segmentCount(spark, sfxP)},""" +
+        s""""segments":${SegmentStore.segmentCount(spark, sfxP)},""" +
         s""""compacted":$fired,""" +
         s""""compact_sec":${if (fired) compactSec else 0.0}}""")
       require(parityS, s"suffix chain parity broke at step $k")
@@ -366,17 +395,17 @@ object StoreSoak {
     println(s"""{"mode":"chain","store":"suffix","step":"probe",""" +
       s""""probe_rows":$sProbeRows,"probe_sec":$sProbeSec,""" +
       s""""parity":$sParity,"rerun_sec":$sRerunSec,""" +
-      s""""segments":${SuffixStore.segmentCount(spark, sfxP)}}""")
+      s""""segments":${SegmentStore.segmentCount(spark, sfxP)}}""")
 
     // ---- the MinHash store chain (r16 verdict #2 — the last store
     // family whose append induction was inherited, not exercised):
     // same 10-append shape with a PLANTED near-dup per batch that only
     // the previous batch's appended segment can catch, per-step parity
     // vs the one-shot batch pipeline restricted to batch-involving
-    // pairs, maybeCompact policy-ON against the segment-count trigger
-    // (fires mid-chain, chain keeps going), and a REPLAY at step 5
-    // (the at-least-once restart shape: same batch id reprocessed —
-    // pairs identical, store unchanged) ----
+    // pairs, maybeCompactChecked policy-ON against the segment-count
+    // trigger (fires mid-chain, chain keeps going), and a REPLAY at
+    // step 5 (the at-least-once restart shape: same batch id
+    // reprocessed — pairs identical, store unchanged) ----
     import graft.streaming.StreamingMinhashDedup
     val T = ("planted minhash chain template about tungsten codegen " +
       "shuffles broadcast joins and adaptive plans ") * 4
@@ -436,15 +465,17 @@ object StoreSoak {
           spark.read.parquet(mhIdxP).count() == idxRows
         require(replayOk, s"minhash replay broke at step $k")
       }
-      val (fired, compactSec) = timed {
-        StreamingMinhashDedup.maybeCompact(spark, mhIdxP, mhTxtP,
-          maxSegments = 5)
+      commit(s"$scratch/mh/ckpt", k.toLong)
+      val (outcome, compactSec) = timed {
+        StreamingMinhashDedup.maybeCompactChecked(spark, mhIdxP, mhTxtP,
+          s"$scratch/mh/ckpt", maxSegments = 5)
       }
+      val fired = foldedAll(outcome)
       println(s"""{"mode":"chain","store":"minhash","step":$k,""" +
         s""""append_sec":$appendSec,"parity":$parityM,""" +
         s""""parity_rerun_sec":$paritySec,"cross_caught":$crossCaught,""" +
         s""""replay_ok":$replayOk,""" +
-        s""""segments":${StreamingMinhashDedup.segmentCount(spark, mhIdxP)},""" +
+        s""""segments":${SegmentStore.segmentCount(spark, mhIdxP)},""" +
         s""""compacted":$fired,""" +
         s""""compact_sec":${if (fired) compactSec else 0.0}}""")
       require(parityM, s"minhash chain parity broke at step $k")
@@ -467,7 +498,7 @@ object StoreSoak {
     println(s"""{"mode":"chain","store":"minhash","step":"probe",""" +
       s""""probe_rows":$mProbeRows,"probe_sec":$mProbeSec,""" +
       s""""parity":$mParity,"rerun_sec":$mRerunSec,""" +
-      s""""segments":${StreamingMinhashDedup.segmentCount(spark, mhIdxP)}}""")
+      s""""segments":${SegmentStore.segmentCount(spark, mhIdxP)}}""")
   }
 
   /** The NEVER-IDLE streaming chain soak (r17 committed-prefix fold):
@@ -640,7 +671,7 @@ object StoreSoak {
             mhTxtP, mhCkpt, maxSegments = 3)
         }
         mhObs += ((id, o.toString, foldSec,
-          StreamingMinhashDedup.segmentCount(spark, mhIdxP),
+          SegmentStore.segmentCount(spark, mhIdxP),
           SegmentStore.segmentIds(spark, mhIdxP).contains(id)))
         (): Unit
       }.start()
@@ -677,10 +708,14 @@ object StoreSoak {
     // post-chain read-only probe with one-shot parity (batch-involving
     // pairs of a held-out batch)
     val ((mProbeRows, mProbe), mProbeSec) = timed {
+      // the stores are read with the schema of the frames written to
+      // them: the probe batch's columns and its own minhash index
       val p = Dedup.incrementalMinhashPairs(probeB,
-          SegmentStore.readRawView(spark, mhTxtP).drop("ingest_batch"),
-          SegmentStore.readRawView(spark, mhIdxP), "doc_id", "text",
-          threshold)
+          SegmentStore.read(spark, mhTxtP, SegmentStore.schemaOf(probeB))
+            .drop("ingest_batch"),
+          SegmentStore.read(spark, mhIdxP, SegmentStore.schemaOf(
+            Dedup.minhashIndex(probeB, "doc_id", "text"))),
+          "doc_id", "text", threshold)
         .select(col("id_a"), col("id_b")).localCheckpoint(true)
       (p.count(), p)
     }
@@ -703,6 +738,6 @@ object StoreSoak {
       s""""probe_rows":$mProbeRows,"probe_sec":$mProbeSec,""" +
       s""""parity":$mParity,"rerun_sec":$mRerunSec,""" +
       s""""prefix_folds":$mhFolds,""" +
-      s""""segments":${StreamingMinhashDedup.segmentCount(spark, mhIdxP)}}""")
+      s""""segments":${SegmentStore.segmentCount(spark, mhIdxP)}}""")
   }
 }

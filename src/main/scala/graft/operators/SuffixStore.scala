@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * layouts). No labels store, no pointer chains, no cap markers —
   * duplicated-span detection has no cross-doc topology to freeze.
   * Plumbing (exactly-once segment writes, empty-store-safe schema
-  * reads, path-own-filesystem wipes) is shared via [[SegmentStore]].
+  * reads, the staged fold) is shared via [[SegmentStore]].
   *
   * Lifecycle per batch ([[processBatch]]): probe the standing segments
   * (own segment pruned out, so replay sees pre-append state), hand the
@@ -33,14 +33,12 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * class — counts sum exactly across segments because doc (and hence
   * position) spaces are disjoint by contract.
   *
-  * [[compact]] folds all segments' counts into the bootstrap segment
-  * (-1) and drops the rest: pure file hygiene plus one-row-per-hash
-  * restoration. It TRUNCATES replay protection for already-compacted
-  * batches — the same trade [[graft.streaming.StreamingMinhashDedup
-  * .compactIndex]] documents: run it on the maintenance cadence, after
-  * the stream's checkpoint has advanced past the folded batches.
-  * [[maybeCompact]] is the threshold-triggered form (segment count —
-  * the only dimension this store accumulates).
+  * [[compactPrefix]] folds the committed segments' counts into the
+  * bootstrap segment (-1) and drops them: pure file hygiene plus
+  * one-row-per-hash restoration. A folded batch loses its replay
+  * protection, so [[maybeCompactChecked]] — the threshold-triggered
+  * form (segment count, the only dimension this store accumulates) —
+  * folds only batches the owning stream's checkpoint has committed.
   */
 object SuffixStore {
 
@@ -92,25 +90,9 @@ object SuffixStore {
     spans
   }
 
-  /** Segment count of the store — the observable [[maybeCompact]]
-    * thresholds on. Driver-side file listing; no Spark job.
-    */
-  def segmentCount(spark: SparkSession, path: String): Long =
-    SegmentStore.segmentCount(spark, path)
-
-  /** Threshold-triggered [[compact]]: fires when more than
-    * `maxSegments` segments have accumulated. Returns whether
-    * compaction ran. Call it where [[compact]] is safe — after the
-    * stream's checkpoint has advanced past the folded batches.
-    */
-  def maybeCompact(spark: SparkSession, path: String,
-      maxSegments: Long = 64L, nBands: Int = 64): Boolean = {
-    val fire = segmentCount(spark, path) > maxSegments
-    if (fire) compact(spark, path, nBands)
-    fire
-  }
-
-  /** [[maybeCompact]] under the AUTOMATED checkpoint-safety rule (the
+  /** The store's compaction policy: quiet ([[SegmentStore.CompactIdle]])
+    * until more than `maxSegments` segments have accumulated, then
+    * under the AUTOMATED checkpoint-safety rule (the
     * [[FamilyStore.maybeCompactChecked]] shape, shared decision core
     * [[SegmentStore.checkedFold]]): folds everything when every
     * appended segment's batch has a commit file in the owning stream's
@@ -122,19 +104,21 @@ object SuffixStore {
   def maybeCompactChecked(spark: SparkSession, path: String,
       checkpointDir: String, maxSegments: Long = 64L,
       nBands: Int = 64): SegmentStore.CompactOutcome = {
-    if (segmentCount(spark, path) <= maxSegments) SegmentStore.CompactIdle
+    if (SegmentStore.segmentCount(spark, path) <= maxSegments)
+      SegmentStore.CompactIdle
     else SegmentStore.checkedFold(spark, path, checkpointDir)(
       upTo => compactPrefix(spark, path, upTo, nBands))
   }
 
-  /** Committed-prefix [[compact]]: fold only the segments with
-    * `ingest_batch <= upTo` (the bootstrap plus every COMMITTED batch)
-    * into segment -1, leaving newer — still replayable — segments in
-    * place with their replay protection intact. Exact for this store at
-    * every instant: the probe SUMS `n_occ` across segments, and the
-    * fold preserves per-hash totals; the [[SegmentStore.foldPrefix]]
-    * marker keeps concurrent readers from double-counting between the
-    * -1 rewrite and the folded-segment deletes.
+  /** The store's one fold: the segments with `ingest_batch <= upTo`
+    * (the bootstrap plus every COMMITTED batch; `Long.MaxValue` folds
+    * everything) into segment -1, one row per hash, leaving newer —
+    * still replayable — segments in place with their replay protection
+    * intact. Exact for this store at every instant: the probe SUMS
+    * `n_occ` across segments, and the fold preserves per-hash totals;
+    * the [[SegmentStore.foldPrefix]] marker keeps concurrent readers
+    * from double-counting between the -1 rewrite and the
+    * folded-segment deletes.
     */
   def compactPrefix(spark: SparkSession, path: String, upTo: Long,
       nBands: Int = 64): Unit = {
@@ -150,31 +134,14 @@ object SuffixStore {
     SegmentStore.foldPrefix(spark, path, upTo, folded, Seq("band"))
   }
 
-  /** Maintenance: fold every segment's counts into one row per hash in
-    * the bootstrap segment (see object doc for the replay trade). */
-  def compact(spark: SparkSession, path: String,
-      nBands: Int = 64): Unit = {
-    // store-scale fold output: size-tiered materialization (r18, §5)
-    val folded = Materialize.eager(SegmentStore.read(spark, path, Schema)
-      .groupBy(col("h"))
-      .agg(sum(col("n_occ")).as("n_occ")))
-    writeSegment(folded, -1L, path, nBands, wipe = true)
-  }
-
   private def readIndex(spark: SparkSession, path: String,
       excludeBatch: Option[Long]): DataFrame =
     SegmentStore.read(spark, path, Schema, excludeBatch)
       .select(col("h"), col("n_occ"))
 
   private def writeSegment(index: DataFrame, batchId: Long, path: String,
-      nBands: Int, dynamic: Boolean = false,
-      wipe: Boolean = false): Unit = {
+      nBands: Int, dynamic: Boolean = false): Unit = {
     require(nBands >= 1, s"nBands must be >= 1, got $nBands")
-    // full-store rewrite (compaction): clear superseded segments on the
-    // store's OWN filesystem — the folded frame is eagerly checkpointed
-    // by the caller, so the delete cannot pull the rug from under its
-    // own input
-    if (wipe) SegmentStore.wipe(index.sparkSession, path)
     SegmentStore.writeSegment(
       index
         .withColumn("band", pmod(col("h"), lit(nBands.toLong)))

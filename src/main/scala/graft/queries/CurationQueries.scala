@@ -364,7 +364,8 @@ object CurationQueries {
         minLen = 25)
       graft.operators.SuffixStore.processBatch(appended, 0L, "doc_id",
         "text", base, minLen = 25)
-      graft.operators.SuffixStore.compact(s, base)
+      graft.operators.SuffixStore.compactPrefix(s, base,
+        upTo = Long.MaxValue)
       graft.operators.SuffixStore.probe(probe, "doc_id", "text", base,
         minLen = 25)
         .select(col("doc_id"), col("span_start"), col("span_len"),
@@ -444,10 +445,12 @@ object CurationQueries {
         idxP, lblP, minLen = 25)
       graft.operators.FamilyStore.processBatch(appended, 0L, "doc_id",
         "text", idxP, lblP, minLen = 25)
-      // compaction INSIDE the gate (label path compression + over-cap
-      // collapse must preserve the one-shot equality; the pre-compact
-      // probe path stays gated by q_stream_family + FamilyStoreSpec)
-      graft.operators.FamilyStore.compact(s, idxP, lblP)
+      // the full fold INSIDE the gate (label path compression +
+      // over-cap collapse + both stores folded to one segment must
+      // preserve the one-shot equality; the pre-compact probe path
+      // stays gated by q_stream_family + FamilyStoreSpec)
+      graft.operators.FamilyStore.compactPrefix(s, idxP, lblP,
+        upTo = Long.MaxValue)
       graft.operators.FamilyStore.probe(probe, "doc_id", "text",
         idxP, lblP, minLen = 25)
         .select(col("doc_id"), asLong(col("family")).as("family"))
@@ -483,7 +486,8 @@ object CurationQueries {
           docs.filter(col("doc_id") % 10 === m), (m - 7).toLong,
           "doc_id", "text", idxP, lblP, minLen = 25)
         if (m == 8)
-          graft.operators.FamilyStore.compact(s, idxP, lblP)
+          graft.operators.FamilyStore.compactPrefix(s, idxP, lblP,
+            upTo = Long.MaxValue)
       }
       graft.operators.FamilyStore.probe(probe, "doc_id", "text",
         idxP, lblP, minLen = 25)
@@ -498,9 +502,8 @@ object CurationQueries {
     // never-idle stream is permanently in — batch 0 committed, batch 1
     // still replayable. maybeCompactChecked must take the
     // CompactedPrefix path (folding index AND label segments <= 0 into
-    // the bootstrap segment through the staged marker protocol, which
-    // the plain compact can never do for the index store), after which
-    // batch 1 REPLAYS against the folded store (the at-least-once
+    // the bootstrap segment through the staged marker protocol), after
+    // which batch 1 REPLAYS against the folded store (the at-least-once
     // restart shape) and the chain continues with batch 2. Oracle: the
     // one-shot whole-slice family chain restricted to the probe batch
     // — a hash match proves fold-under-load ∘ replay ∘ append ≡ full

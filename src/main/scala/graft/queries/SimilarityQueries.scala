@@ -178,12 +178,13 @@ object SimilarityQueries {
     // q_family_chain discipline applied to the last store family whose
     // chain evidence was soak/spec-only): bootstrap 60% of the corpus
     // into the standing store, THREE sequential processBatch appends,
-    // compactIndex fired MID-chain (global bucket-size re-freeze +
-    // fold to one segment), then a READ-ONLY probe of a held-out
-    // slice. The oracle never sees the chain: it replays the exact
-    // whole-corpus shingle-Jaccard pairs restricted to probe-involving
-    // pairs — chain-of-appends + mid-chain compaction ≡ one-shot, as
-    // an oracle fact rather than a spec assertion.
+    // the full fold (compactPrefix up to Long.MaxValue) fired MID-chain
+    // (global bucket-size re-freeze + fold to one segment), then a
+    // READ-ONLY probe of a held-out slice. The oracle never sees the
+    // chain: it replays the exact whole-corpus shingle-Jaccard pairs
+    // restricted to probe-involving pairs — chain-of-appends +
+    // mid-chain compaction ≡ one-shot, as an oracle fact rather than a
+    // spec assertion.
     "q_minhash_chain" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val boot = docs.filter(col("doc_id") % 10 =!= 0 &&
@@ -199,7 +200,8 @@ object SimilarityQueries {
           docs.filter(col("doc_id") % 10 === m), i.toLong, "doc_id",
           "text", idxP, txtP, threshold = 0.4, maxBucketSize = 200)
       }
-      graft.streaming.StreamingMinhashDedup.compactIndex(s, idxP, txtP)
+      graft.streaming.StreamingMinhashDedup.compactPrefix(s, idxP, txtP,
+        upTo = Long.MaxValue)
       graft.streaming.StreamingMinhashDedup.processBatch(
         docs.filter(col("doc_id") % 10 === 0), 2L, "doc_id", "text",
         idxP, txtP, threshold = 0.4, maxBucketSize = 200)

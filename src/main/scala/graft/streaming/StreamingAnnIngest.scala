@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.IvfPq
+import graft.operators.{IvfPq, SegmentStore}
 
 /** Streaming ingest for the served IVF-PQ ANN index — the vector-tier
   * mirror of [[StreamingMinhashDedup]] (same daily-slice shape as the
@@ -37,7 +37,9 @@ import graft.operators.IvfPq
   * of the standing read (a replayed batch must not match its previously
   * written self). Cell-level partition pruning survives the extra
   * partition column (`cell` is the second directory level, so a static
-  * cell filter still prunes within every segment).
+  * cell filter still prunes within every segment). Writes and reads go
+  * through [[SegmentStore]] — the shared exactly-once recipe, and
+  * explicit-schema reads, so an empty bootstrap corpus is a valid store.
   */
 object StreamingAnnIngest {
 
@@ -46,14 +48,10 @@ object StreamingAnnIngest {
     * beside them.
     */
   def initStore(corpus: DataFrame, model: IvfPq.Model, path: String): Unit = {
-    IvfPq.encode(corpus, model)
-      .withColumn("ingest_batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("ingest_batch", "cell")
-      .parquet(s"$path/codes")
-    corpus.select(col("id"), col("embedding"))
-      .withColumn("ingest_batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("ingest_batch")
-      .parquet(s"$path/vectors")
+    SegmentStore.writeSegment(IvfPq.encode(corpus, model), -1L,
+      s"$path/codes", Seq("cell"))
+    SegmentStore.writeSegment(corpus.select(col("id"), col("embedding")),
+      -1L, s"$path/vectors")
     IvfPq.writeModel(corpus.sparkSession, model, path)
   }
 
@@ -69,16 +67,20 @@ object StreamingAnnIngest {
     // once in attach() and passes it here, instead of a driver-side
     // parquet read per micro-batch
     val mdl = model.getOrElse(IvfPq.readModel(spark, path))
-    // marker-aware standing views (the shared fold plumbing): mid-
+    val codes = IvfPq.encode(batch, mdl)
+    val vecs = batch.select(col("id"), col("embedding"))
+    // each store is read with the schema of the frames this batch
+    // appends to it — no inference job, and an empty bootstrap segment
+    // reads as an empty frame. The reads are marker-aware: mid-
     // [[compactPrefix]] the folded segments' rows are served from the
-    // staged bootstrap segment, never twice
-    val standingCodes = graft.operators.SegmentStore
-      .readRawView(spark, s"$path/codes")
-      .filter(col("ingest_batch") =!= batchId)
+    // staged bootstrap segment, never twice. A replayed batch's own
+    // segment is pruned out (it must not match its previously written
+    // self).
+    val standingCodes = SegmentStore.read(spark, s"$path/codes",
+        SegmentStore.schemaOf(codes), Some(batchId))
       .select(col("id"), col("cell"), col("code"), col("nrm"))
-    val standingVecs = graft.operators.SegmentStore
-      .readRawView(spark, s"$path/vectors")
-      .filter(col("ingest_batch") =!= batchId)
+    val standingVecs = SegmentStore.read(spark, s"$path/vectors",
+        SegmentStore.schemaOf(vecs), Some(batchId))
       .select(col("id"), col("embedding"))
     // eager: the probe must see the PRE-append store (lazy evaluation
     // after the append would match the batch against its own rows)
@@ -86,17 +88,67 @@ object StreamingAnnIngest {
         rerankFactor = rerankFactor, excludeSelf = false,
         model = Some(mdl), codes = Some(standingCodes))
       .localCheckpoint(true)
-    IvfPq.encode(batch, mdl)
-      .withColumn("ingest_batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch", "cell").parquet(s"$path/codes")
-    batch.select(col("id"), col("embedding"))
-      .withColumn("ingest_batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch").parquet(s"$path/vectors")
+    SegmentStore.writeSegment(codes, batchId, s"$path/codes", Seq("cell"),
+      dynamic = true)
+    SegmentStore.writeSegment(vecs, batchId, s"$path/vectors",
+      dynamic = true)
     nbrs
+  }
+
+  /** Segment count of the codes store — the observable
+    * [[maybeCompactChecked]] thresholds on (one partition lands per
+    * micro-batch forever without a fold: small-file pressure and
+    * per-segment listing cost are this store's accumulating
+    * dimension; there are no counts to re-freeze and no pointer
+    * topology — codes and vectors are pure row unions across
+    * segments).
+    */
+  def segmentCount(spark: SparkSession, path: String): Long =
+    SegmentStore.segmentCount(spark, s"$path/codes")
+
+  /** The segment-count policy under the AUTOMATED checkpoint-safety
+    * rule (the shared [[graft.operators.SegmentStore.checkedFold]]
+    * decision core, applied to the vector tier): folds everything when
+    * every appended segment's batch has a commit file, folds the
+    * COMMITTED PREFIX with a replayable tail ([[compactPrefix]] — so a
+    * never-idle embedding stream compacts from inside its own
+    * foreachBatch), defers only when nothing is committed yet.
+    */
+  def maybeCompactChecked(spark: SparkSession, path: String,
+      checkpointDir: String, maxSegments: Long = 64L)
+      : SegmentStore.CompactOutcome = {
+    if (segmentCount(spark, path) <= maxSegments)
+      SegmentStore.CompactIdle
+    else SegmentStore.checkedFold(spark, s"$path/codes", checkpointDir)(
+      upTo => compactPrefix(spark, path, upTo))
+  }
+
+  /** Committed-prefix fold for BOTH stores: segments with
+    * `ingest_batch <= upTo` (bootstrap + every COMMITTED batch) fold
+    * into segment -1 through the staged
+    * [[graft.operators.SegmentStore.foldPrefix]] protocol; replayable
+    * segments stay in place with their replay protection intact. Codes
+    * keep `cell` as the partition level under the folded segment, so
+    * the probes' static cell pruning is unchanged. Exact at every
+    * instant: rows are unioned across segments (no frozen statistics),
+    * and the fold marker keeps concurrent readers from seeing a row
+    * twice between the staging commit and the folded-segment deletes.
+    */
+  def compactPrefix(spark: SparkSession, path: String, upTo: Long): Unit = {
+    SegmentStore.completeFold(spark, s"$path/codes")
+    SegmentStore.completeFold(spark, s"$path/vectors")
+    val codes = spark.read.parquet(s"$path/codes")
+      .filter(col("ingest_batch") <= upTo)
+      .drop("ingest_batch")
+      .repartition(col("cell"))
+      .localCheckpoint(true)
+    SegmentStore.foldPrefix(spark, s"$path/codes", upTo, codes,
+      Seq("cell"))
+    val vecs = spark.read.parquet(s"$path/vectors")
+      .filter(col("ingest_batch") <= upTo)
+      .drop("ingest_batch")
+      .localCheckpoint(true)
+    SegmentStore.foldPrefix(spark, s"$path/vectors", upTo, vecs)
   }
 
   /** The rebuild RESPONSE for the STREAMING store (r17 — the served
@@ -119,72 +171,14 @@ object StreamingAnnIngest {
     * the witness→rebuild→recovery loop is the same as the batch
     * index's — spec-pinned in StreamingAnnIngestSpec.
     */
-  /** Segment count of the codes store — the observable
-    * [[maybeCompactChecked]] thresholds on (one partition lands per
-    * micro-batch forever without a fold: small-file pressure and
-    * per-segment listing cost are this store's accumulating
-    * dimension; there are no counts to re-freeze and no pointer
-    * topology — codes and vectors are pure row unions across
-    * segments).
-    */
-  def segmentCount(spark: SparkSession, path: String): Long =
-    graft.operators.SegmentStore.segmentCount(spark, s"$path/codes")
-
-  /** The segment-count policy under the AUTOMATED checkpoint-safety
-    * rule (the shared [[graft.operators.SegmentStore.checkedFold]]
-    * decision core, applied to the vector tier): folds everything when
-    * every appended segment's batch has a commit file, folds the
-    * COMMITTED PREFIX with a replayable tail ([[compactPrefix]] — so a
-    * never-idle embedding stream compacts from inside its own
-    * foreachBatch), defers only when nothing is committed yet.
-    */
-  def maybeCompactChecked(spark: SparkSession, path: String,
-      checkpointDir: String, maxSegments: Long = 64L)
-      : graft.operators.SegmentStore.CompactOutcome = {
-    import graft.operators.SegmentStore
-    if (segmentCount(spark, path) <= maxSegments)
-      SegmentStore.CompactIdle
-    else SegmentStore.checkedFold(spark, s"$path/codes", checkpointDir)(
-      upTo => compactPrefix(spark, path, upTo))
-  }
-
-  /** Committed-prefix fold for BOTH stores: segments with
-    * `ingest_batch <= upTo` (bootstrap + every COMMITTED batch) fold
-    * into segment -1 through the staged
-    * [[graft.operators.SegmentStore.foldPrefix]] protocol; replayable
-    * segments stay in place with their replay protection intact. Codes
-    * keep `cell` as the partition level under the folded segment, so
-    * the probes' static cell pruning is unchanged. Exact at every
-    * instant: rows are unioned across segments (no frozen statistics),
-    * and the fold marker keeps concurrent readers from seeing a row
-    * twice between the staging commit and the folded-segment deletes.
-    */
-  def compactPrefix(spark: SparkSession, path: String, upTo: Long): Unit = {
-    import graft.operators.SegmentStore
-    SegmentStore.completeFold(spark, s"$path/codes")
-    SegmentStore.completeFold(spark, s"$path/vectors")
-    val codes = spark.read.parquet(s"$path/codes")
-      .filter(col("ingest_batch") <= upTo)
-      .drop("ingest_batch")
-      .repartition(col("cell"))
-      .localCheckpoint(true)
-    SegmentStore.foldPrefix(spark, s"$path/codes", upTo, codes,
-      Seq("cell"))
-    val vecs = spark.read.parquet(s"$path/vectors")
-      .filter(col("ingest_batch") <= upTo)
-      .drop("ingest_batch")
-      .localCheckpoint(true)
-    SegmentStore.foldPrefix(spark, s"$path/vectors", upTo, vecs)
-  }
-
   def rebuildStore(spark: SparkSession, path: String, nlist: Int,
       m: Int, ksub: Int, iters: Int = 2, pqIters: Int = 3,
       trainFraction: Double = 1.0): IvfPq.Model = {
     // heal a crashed fold before reading the store wholesale (the
     // policy entries do the same; the raw read below must not see a
     // mid-protocol layout)
-    graft.operators.SegmentStore.completeFold(spark, s"$path/codes")
-    graft.operators.SegmentStore.completeFold(spark, s"$path/vectors")
+    SegmentStore.completeFold(spark, s"$path/codes")
+    SegmentStore.completeFold(spark, s"$path/vectors")
     val vecs = spark.read.parquet(s"$path/vectors")
       .select(col("id"), col("embedding"), col("ingest_batch"))
       .localCheckpoint(true)

@@ -21,9 +21,9 @@ import graft.operators.FamilyStore
   * prunes the batch's own segments out of the standing reads, so a
   * replay recomputes the same result against the same pre-append state
   * (spec-pinned in FamilyStoreSpec). Run
-  * [[graft.operators.FamilyStore.compact]] on the store's maintenance
-  * cadence to flatten label pointer chains and collapse globally
-  * over-cap grams — never per batch.
+  * [[graft.operators.FamilyStore.maybeCompactChecked]] on the store's
+  * maintenance cadence to flatten label pointer chains and collapse
+  * globally over-cap grams — never per batch.
   */
 object StreamingFamilyDedup {
 

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.Dedup
 
@@ -37,9 +36,10 @@ import graft.operators.Dedup
   * Bucket-size caps are per-SEGMENT under append (each batch freezes its
   * own `bucket_sz`; a bucket growing across many small segments is not
   * re-aggregated on the hot path — that would re-shuffle the corpus per
-  * batch). [[compactIndex]] is the periodic maintenance job that
-  * re-freezes GLOBAL bucket sizes; run it on the compaction cadence the
-  * store already needs for small-file hygiene.
+  * batch). [[compactPrefix]] is the periodic maintenance job that
+  * re-freezes the folded rows' bucket sizes (GLOBAL ones when it folds
+  * everything); [[maybeCompactChecked]] runs it on the segment-count
+  * cadence the store already needs for small-file hygiene.
   *
   * Scale shape: per batch the standing index is scanned and map-side
   * joined against a broadcast batch index; writes are one new segment
@@ -98,12 +98,11 @@ object StreamingMinhashDedup {
     // an empty frame. The reads are marker-aware: mid-[[compactPrefix]]
     // the folded segments' rows are served from the staged bootstrap
     // segment.
-    val segmentCol = StructField("ingest_batch", LongType)
     // a REPLAYED batch must not probe its own previously-written index
     // rows: they are partition-pruned out (self-pairs and double-counted
     // band matches otherwise)
     val standingIdx = SegmentStore.read(spark, indexPath,
-      StructType(bIdx.schema.fields :+ segmentCol), Some(batchId))
+      SegmentStore.schemaOf(bIdx), Some(batchId))
     // the batch's texts land FIRST, so verification reads batch and
     // corpus texts from the one store, whose scan size the planner sees
     // (a stream's micro-batch frame carries no size estimate). Texts are
@@ -111,11 +110,11 @@ object StreamingMinhashDedup {
     // probe; a replay overwrites it in place. A failure below leaves
     // this segment without its index segment — [[maybeCompactChecked]]
     // decides on the text store so such a segment is never folded.
-    SegmentStore.writeSegment(batch.select(col(idCol), col(textCol)),
-      batchId, textPath, dynamic = true)
+    val batchTexts = batch.select(col(idCol), col(textCol))
+    SegmentStore.writeSegment(batchTexts, batchId, textPath,
+      dynamic = true)
     val texts = SegmentStore.read(spark, textPath,
-      StructType(Seq(batch.schema(idCol), batch.schema(textCol),
-        segmentCol))).drop("ingest_batch")
+      SegmentStore.schemaOf(batchTexts)).drop("ingest_batch")
     // eager: the probe must see the PRE-append index (lazy evaluation
     // after the append would join the batch against its own rows)
     val pairs = Dedup.incrementalMinhashPairsFromIndex(texts, standingIdx,
@@ -142,32 +141,12 @@ object StreamingMinhashDedup {
       }
       .start()
 
-  /** Segment count of the index store — the observable [[maybeCompact]]
-    * thresholds on (the shared [[graft.operators.SegmentStore
-    * .segmentCount]] listing; driver-side, no Spark job).
-    */
-  def segmentCount(spark: SparkSession, indexPath: String): Long =
-    graft.operators.SegmentStore.segmentCount(spark, indexPath)
-
-  /** Threshold-triggered [[compactIndex]] — the
-    * [[graft.operators.FamilyStore.maybeCompact]] policy shape at this
-    * store's one accumulating dimension (r16 verdict #2: this store
-    * had `compactIndex` but no trigger — its append lifecycle was
-    * inherited, not exercised). Segment count is the right observable:
-    * the per-segment frozen `bucket_sz` drifts from the global truth
-    * exactly as segments accumulate, and the fold below re-freezes it.
-    * Returns whether compaction ran. Call it where [[compactIndex]] is
-    * safe — after the stream's checkpoint has advanced past the folded
-    * batches.
-    */
-  def maybeCompact(spark: SparkSession, indexPath: String,
-      textPath: String, maxSegments: Long = 64L): Boolean = {
-    val fire = segmentCount(spark, indexPath) > maxSegments
-    if (fire) compactIndex(spark, indexPath, textPath)
-    fire
-  }
-
-  /** [[maybeCompact]] under the AUTOMATED checkpoint-safety rule (the
+  /** The store's compaction policy: quiet
+    * ([[graft.operators.SegmentStore.CompactIdle]]) until the index
+    * store holds more than `maxSegments` segments — the per-segment
+    * frozen `bucket_sz` drifts from the global truth exactly as
+    * segments accumulate, and the fold re-freezes it — then under the
+    * AUTOMATED checkpoint-safety rule (the
     * [[graft.operators.FamilyStore.maybeCompactChecked]] shape, shared
     * decision core [[graft.operators.SegmentStore.checkedFold]]): a
     * full fold runs only when every appended segment's batch has a
@@ -188,22 +167,27 @@ object StreamingMinhashDedup {
       textPath: String, checkpointDir: String, maxSegments: Long = 64L)
       : graft.operators.SegmentStore.CompactOutcome = {
     import graft.operators.SegmentStore
-    if (segmentCount(spark, indexPath) <= maxSegments)
+    if (SegmentStore.segmentCount(spark, indexPath) <= maxSegments)
       SegmentStore.CompactIdle
     else SegmentStore.checkedFold(spark, textPath, checkpointDir)(
       upTo => compactPrefix(spark, indexPath, textPath, upTo))
   }
 
-  /** Committed-prefix [[compactIndex]]: fold only the segments with
-    * `ingest_batch <= upTo` (bootstrap + every COMMITTED batch) of
-    * BOTH stores into segment -1, re-freezing the folded rows'
-    * `bucket_sz` over the PREFIX (the same truth-restoration the full
-    * fold applies globally, restricted to the rows it owns; live
+  /** The store's one fold: the segments with `ingest_batch <= upTo`
+    * (bootstrap + every COMMITTED batch) of BOTH stores into segment
+    * -1, re-freezing the folded rows' `bucket_sz` over the PREFIX (live
     * segments keep their per-segment frozen sizes — the documented
-    * drift-until-compaction contract). Replayable segments stay in
-    * place, so the fold is safe under a running stream; the
-    * [[graft.operators.SegmentStore.foldPrefix]] marker keeps
-    * concurrent probes consistent mid-protocol.
+    * drift-until-compaction contract). `upTo = Long.MaxValue` folds
+    * every segment and so re-freezes GLOBAL bucket sizes. Replayable
+    * segments stay in place, so the fold is safe under a running
+    * stream; the [[graft.operators.SegmentStore.foldPrefix]] marker
+    * keeps concurrent probes consistent mid-protocol.
+    *
+    * REPLAY NOTE: a batch folded into -1 can no longer prune its own
+    * rows out of a replayed probe, so `upTo` must not pass an
+    * uncommitted batch. That includes a text segment left by a batch
+    * that failed after its text append (it has no index segment yet):
+    * folded here, its replay would store its texts twice.
     */
   def compactPrefix(spark: SparkSession, indexPath: String,
       textPath: String, upTo: Long): Unit = {
@@ -222,36 +206,5 @@ object StreamingMinhashDedup {
       .drop("ingest_batch")
       .localCheckpoint(true)
     SegmentStore.foldPrefix(spark, textPath, upTo, txt)
-  }
-
-  /** Periodic maintenance: fold EVERY segment — index and texts — into
-    * the bootstrap segment (-1), re-freezing GLOBAL bucket sizes in the
-    * same pass. The only job that re-aggregates the index; run it on
-    * the compaction cadence, never per batch. Folding re-arms the
-    * [[maybeCompact]] segment-count trigger (the pre-r17 rewrite
-    * preserved per-batch partitioning, so the segment count never
-    * dropped and a count-triggered policy would re-fire forever).
-    *
-    * REPLAY NOTE (the [[graft.operators.SuffixStore.compact]] /
-    * [[graft.operators.FamilyStore.compact]] trade): a batch folded
-    * into -1 can no longer prune its own rows out of a replayed probe —
-    * run compaction after the stream's checkpoint has advanced past the
-    * folded batches. That includes a text segment left by a batch that
-    * failed after its text append (it has no index segment yet): folded
-    * here, its replay would store its texts twice.
-    */
-  def compactIndex(spark: SparkSession, indexPath: String,
-      textPath: String): Unit = {
-    val idx = spark.read.parquet(indexPath)
-      .drop("bucket_sz", "ingest_batch")
-      .withColumn("bucket_sz", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")))
-      .localCheckpoint(true)
-    graft.operators.SegmentStore.wipe(spark, indexPath)
-    graft.operators.SegmentStore.writeSegment(idx, -1L, indexPath)
-    val txt = spark.read.parquet(textPath).drop("ingest_batch")
-      .localCheckpoint(true)
-    graft.operators.SegmentStore.wipe(spark, textPath)
-    graft.operators.SegmentStore.writeSegment(txt, -1L, textPath)
   }
 }

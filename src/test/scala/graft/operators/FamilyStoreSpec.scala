@@ -124,9 +124,13 @@ class FamilyStoreSpec extends AnyFunSuite {
     val want = oneShot(corpus ++ b1 ++ b2 ++ late, Set(200L))
     val before = probeMap(late, idxP, lblP)
     assert(before == want && before(200L) == 10L)
-    FamilyStore.compact(spark, idxP, lblP)
+    FamilyStore.compactPrefix(spark, idxP, lblP, upTo = Long.MaxValue)
     val after = probeMap(late, idxP, lblP)
     assert(after == want, "compaction must not change probe results")
+    // the full fold leaves ONE index segment (the bootstrap segment):
+    // the combined-count formula is exact across any segmentation
+    assert(SegmentStore.segmentIds(spark, idxP) == Seq(-1L),
+      "the full fold must fold every index segment into -1")
     // path compression: every stored label value is final (no stored
     // row re-points it) — chains are depth 1
     val lbl = spark.read.parquet(lblP).select($"id", $"label")
@@ -190,8 +194,9 @@ class FamilyStoreSpec extends AnyFunSuite {
     assert(run(bridge1, 0L) == first)
     assert(FamilyStore.stats(spark, idxP, lblP)._2 == 2L,
       "replayed deepening batch must not re-bump the depth bound")
-    // compact flattens and re-arms: a LATER deepening batch bumps again
-    FamilyStore.compact(spark, idxP, lblP)
+    // the full fold flattens and re-arms: a LATER deepening batch bumps
+    // again
+    FamilyStore.compactPrefix(spark, idxP, lblP, upTo = Long.MaxValue)
     assert(FamilyStore.stats(spark, idxP, lblP)._2 == 1L)
     run(bridge2, 1L)
     assert(FamilyStore.stats(spark, idxP, lblP)._2 == 2L,
@@ -220,7 +225,8 @@ class FamilyStoreSpec extends AnyFunSuite {
     assert(before(200L) == 200L)
     val postingsBefore = spark.read.parquet(idxP)
       .filter($"doc_id".isNotNull).count()
-    FamilyStore.compact(spark, idxP, lblP, maxDocsPerGram = 3)
+    FamilyStore.compactPrefix(spark, idxP, lblP, upTo = Long.MaxValue,
+      maxDocsPerGram = 3)
     // the MEGA postings (4 rows across 2 segments) collapsed to markers
     val idx = spark.read.parquet(idxP)
     assert(idx.filter($"doc_id".isNotNull).count() < postingsBefore)
@@ -259,7 +265,7 @@ class FamilyStoreSpec extends AnyFunSuite {
     assert(probeMap(late, idxP, lblP) ==
       oneShot(corpus ++ batch ++ late, Set(200L)))
     // compaction over the young store is a no-op that keeps it valid
-    FamilyStore.compact(spark, idxP, lblP)
+    FamilyStore.compactPrefix(spark, idxP, lblP, upTo = Long.MaxValue)
     assert(probeMap(late, idxP, lblP)(200L) == 1L)
   }
 
@@ -280,12 +286,19 @@ class FamilyStoreSpec extends AnyFunSuite {
     }
     val (idxP, lblP) = tmp("famchain10")
     FamilyStore.init(df(corpus), "doc_id", "text", idxP, lblP, L)
+    // a scratch checkpoint that commits every append: the checked
+    // policy may fold all of it
+    val ckpt = java.nio.file.Files.createTempDirectory("famchain10ck")
+    val commits = java.nio.file.Files.createDirectories(
+      ckpt.resolve("commits"))
     var all = corpus
     for (i <- 1 to 10) {
       val bridge = Seq(
         (3000L + i, s"br${i}aa" + P(i) + s"br${i}bb" + P(i + 1) + "zz"))
       val got = FamilyStore.processBatch(df(bridge), i.toLong, "doc_id",
         "text", idxP, lblP, L).as[(Long, Long)].collect().toMap
+      java.nio.file.Files.writeString(commits.resolve(i.toString),
+        "v1\n{}")
       all = all ++ bridge
       assert(got == oneShot(all, Set(3000L + i)),
         s"chain parity broke at append $i")
@@ -297,11 +310,13 @@ class FamilyStoreSpec extends AnyFunSuite {
         assert(segs == 6L && depth == 6L,
           s"expected (6 segments, depth 6) mid-chain, got ($segs, $depth)")
         // threshold policy: fires on the deep chain...
-        assert(FamilyStore.maybeCompact(spark, idxP, lblP, maxDepth = 4))
+        assert(FamilyStore.maybeCompactChecked(spark, idxP, lblP,
+          ckpt.toString, maxDepth = 4) == SegmentStore.Compacted)
         assert(FamilyStore.stats(spark, idxP, lblP)._2 == 1L,
           "compaction must reset the depth bound")
         // ...and stays quiet right after
-        assert(!FamilyStore.maybeCompact(spark, idxP, lblP, maxDepth = 4))
+        assert(FamilyStore.maybeCompactChecked(spark, idxP, lblP,
+          ckpt.toString, maxDepth = 4) == SegmentStore.CompactIdle)
       }
     }
     // the deep-chase finale: a probe touching ONLY family 1's phrase
@@ -349,9 +364,8 @@ class FamilyStoreSpec extends AnyFunSuite {
     java.nio.file.Files.writeString(commits.resolve("1"), "v1\n{}")
     assert(FamilyStore.maybeCompactChecked(spark, idxP, lblP, ckpt,
       maxDepth = 2) == SegmentStore.CompactedPrefix)
-    // the fold bounded BOTH stores' segment counts — the full compact
-    // can never fold index segments (replayability unknown); the
-    // committed prefix folds freely
+    // the fold bounded BOTH stores' segment counts — committed index
+    // segments fold freely, the replayable one stays
     assert(SegmentStore.segmentIds(spark, idxP).sorted == Seq(-1L, 2L),
       "committed index segments folded, replayable tail in place")
     assert(SegmentStore.segmentIds(spark, lblP).sorted == Seq(-1L, 2L),

@@ -85,7 +85,7 @@ class SuffixStoreSpec extends AnyFunSuite {
     SuffixStore.processBatch(df(b1), 0L, "doc_id", "text", dir, L)
     val before = SuffixStore.probe(df(late), "doc_id", "text", dir, L)
       .as[(Long, Long, Long, Long)].collect().toSet
-    SuffixStore.compact(spark, dir)
+    SuffixStore.compactPrefix(spark, dir, upTo = Long.MaxValue)
     // one row per hash, all in the bootstrap segment
     val idx = spark.read.parquet(dir)
     assert(idx.groupBy("h").count().filter($"count" > 1).isEmpty)
@@ -112,7 +112,7 @@ class SuffixStoreSpec extends AnyFunSuite {
     assert(got.exists(_._1 == 100L) && got.exists(_._1 == 101L),
       "batch-internal twins must be found against the empty store")
     // compaction over the young store keeps it valid
-    SuffixStore.compact(spark, dir)
+    SuffixStore.compactPrefix(spark, dir, upTo = Long.MaxValue)
     val late = Seq((200L, "hhhhjjjjkk" + "first real phrase!!" + "lllzzz"))
     assert(SuffixStore.probe(df(late), "doc_id", "text", dir, L)
       .as[(Long, Long, Long, Long)].collect().toSet ==
@@ -125,17 +125,27 @@ class SuffixStoreSpec extends AnyFunSuite {
     val corpus = Seq((1L, "aaaabbbbcc" + phrase + "ddddeeeefff"))
     val dir = java.nio.file.Files.createTempDirectory("sfxauto")
       .toString + "/idx"
+    // a scratch checkpoint that commits every append
+    val commits = java.nio.file.Files.createDirectories(
+      java.nio.file.Files.createTempDirectory("sfxautock")
+        .resolve("commits"))
     SuffixStore.init(df(corpus), "doc_id", "text", dir, L)
-    for (i <- 1 to 3)
+    for (i <- 1 to 3) {
       SuffixStore.processBatch(
         df(Seq((100L + i, s"seg${i}huhu" + phrase + s"seg${i}haha"))),
         i.toLong, "doc_id", "text", dir, L)
-    assert(SuffixStore.segmentCount(spark, dir) == 4L)
-    assert(!SuffixStore.maybeCompact(spark, dir, maxSegments = 4L),
+      java.nio.file.Files.writeString(commits.resolve(i.toString),
+        "v1\n{}")
+    }
+    val ckpt = commits.getParent.toString
+    assert(SegmentStore.segmentCount(spark, dir) == 4L)
+    assert(SuffixStore.maybeCompactChecked(spark, dir, ckpt,
+      maxSegments = 4L) == SegmentStore.CompactIdle,
       "4 segments <= threshold 4: must stay quiet")
-    assert(SuffixStore.maybeCompact(spark, dir, maxSegments = 3L),
+    assert(SuffixStore.maybeCompactChecked(spark, dir, ckpt,
+      maxSegments = 3L) == SegmentStore.Compacted,
       "4 segments > threshold 3: must fire")
-    assert(SuffixStore.segmentCount(spark, dir) == 1L)
+    assert(SegmentStore.segmentCount(spark, dir) == 1L)
     val late = Seq((200L, "hhhhjjjjkk" + phrase + "lllzzzxxxcc"))
     assert(SuffixStore.probe(df(late), "doc_id", "text", dir, L)
       .as[(Long, Long, Long, Long)].collect().toSet ==
@@ -160,13 +170,13 @@ class SuffixStoreSpec extends AnyFunSuite {
     // trigger met (2 segments > 1) but batch 0 has no commit file
     assert(SuffixStore.maybeCompactChecked(spark, dir, ckpt,
       maxSegments = 1L) == SegmentStore.CompactDeferred)
-    assert(SuffixStore.segmentCount(spark, dir) == 2L)
+    assert(SegmentStore.segmentCount(spark, dir) == 2L)
     val commits = java.nio.file.Paths.get(ckpt, "commits")
     java.nio.file.Files.createDirectories(commits)
     java.nio.file.Files.writeString(commits.resolve("0"), "v1\n{}")
     assert(SuffixStore.maybeCompactChecked(spark, dir, ckpt,
       maxSegments = 1L) == SegmentStore.Compacted)
-    assert(SuffixStore.segmentCount(spark, dir) == 1L)
+    assert(SegmentStore.segmentCount(spark, dir) == 1L)
     assert(SuffixStore.maybeCompactChecked(spark, dir, ckpt,
       maxSegments = 1L) == SegmentStore.CompactIdle)
   }

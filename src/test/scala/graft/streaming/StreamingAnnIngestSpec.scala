@@ -109,6 +109,27 @@ class StreamingAnnIngestSpec extends AnyFunSuite {
       "duplicate (query, neighbor) pairs — replayed codes leaked")
   }
 
+  test("an empty bootstrap corpus with a caller-trained model: the " +
+    "first processBatch returns an empty neighbor frame instead of " +
+    "failing schema inference, and the next batch finds its vectors") {
+    val mdl = IvfPq.train(clustered.filter($"id" < 400), nlist = 16,
+      m = 4, ksub = 16)
+    val dir = java.nio.file.Files.createTempDirectory("sannempty")
+      .toString + "/store"
+    StreamingAnnIngest.initStore(clustered.filter($"id" < 0L), mdl, dir)
+    val batch0 = clustered.filter($"id" >= 400 && $"id" % 2 === 0)
+    val batch1 = clustered.filter($"id" >= 400 && $"id" % 2 === 1)
+    val first = StreamingAnnIngest.processBatch(batch0, batchId = 0L, dir,
+      k = 3, model = Some(mdl))
+    assert(first.count() == 0L,
+      "nothing stands before the first batch: no neighbors")
+    val next = StreamingAnnIngest.processBatch(batch1, batchId = 1L, dir,
+        k = 3, model = Some(mdl))
+      .select("query_id", "neighbor_id").as[(Long, Long)].collect()
+    assert(next.nonEmpty && next.forall(_._2 % 2 == 0L),
+      s"batch 1 must probe exactly batch 0's vectors: ${next.toSeq}")
+  }
+
   test("committed-prefix fold (under-load compaction, vector grain): " +
     "with a replayable tail the trigger folds ONLY the committed " +
     "segments of codes AND vectors, serving is unchanged, the tail's " +

@@ -251,7 +251,7 @@ class StreamingCorpusSpec extends AnyFunSuite {
     "trigger, and a later probe is unchanged (r16 verdict #2: the " +
     "minhash store had compactIndex but no policy)") {
     import spark.implicits._
-    import graft.operators.Dedup
+    import graft.operators.{Dedup, SegmentStore}
     val base = "the quick brown fox jumps over the lazy dog " * 8
     val corpus = Seq(
       (0L, base.trim),
@@ -259,6 +259,11 @@ class StreamingCorpusSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("smhc").toString
     val (idxP, txtP) = (s"$dir/index", s"$dir/texts")
+    // a scratch checkpoint: batches 0-2 below are committed
+    val ckpt = java.nio.file.Files.createTempDirectory("smhckpt")
+      .toString
+    val commits = java.nio.file.Paths.get(ckpt, "commits")
+    java.nio.file.Files.createDirectories(commits)
     StreamingMinhashDedup.initIndex(corpus, "doc_id", "text", idxP, txtP)
     // three appends; batch 2 carries a near-dup of batch 1's novel doc
     // (cross-segment bucket: the global re-freeze below must count it)
@@ -271,11 +276,13 @@ class StreamingCorpusSpec extends AnyFunSuite {
     batches.zipWithIndex.foreach { case (b, i) =>
       StreamingMinhashDedup.processBatch(b.toDF("doc_id", "text"),
         i.toLong, "doc_id", "text", idxP, txtP, threshold = 0.5)
+      java.nio.file.Files.writeString(commits.resolve(i.toString),
+        "v1\n{}")
     }
-    assert(StreamingMinhashDedup.segmentCount(spark, idxP) == 4L)
+    assert(SegmentStore.segmentCount(spark, idxP) == 4L)
     // below threshold: no fire
-    assert(!StreamingMinhashDedup.maybeCompact(spark, idxP, txtP,
-      maxSegments = 10))
+    assert(StreamingMinhashDedup.maybeCompactChecked(spark, idxP, txtP,
+      ckpt, maxSegments = 10) == SegmentStore.CompactIdle)
     // read-only probe of a held-out batch, before vs after compaction
     val late = Seq((200L, base.trim.replace("lazy", "sleepy")),
       (201L, novel.trim.replace("joins", "hashes")))
@@ -290,10 +297,10 @@ class StreamingCorpusSpec extends AnyFunSuite {
     val before = probePairs()
     assert(before.contains((0L, 200L)) && before.contains((110L, 201L)),
       s"probe must hit bootstrap and appended segments: $before")
-    assert(StreamingMinhashDedup.maybeCompact(spark, idxP, txtP,
-      maxSegments = 2))
-    assert(StreamingMinhashDedup.segmentCount(spark, idxP) == 1L &&
-      StreamingMinhashDedup.segmentCount(spark, txtP) == 1L,
+    assert(StreamingMinhashDedup.maybeCompactChecked(spark, idxP, txtP,
+      ckpt, maxSegments = 2) == SegmentStore.Compacted)
+    assert(SegmentStore.segmentCount(spark, idxP) == 1L &&
+      SegmentStore.segmentCount(spark, txtP) == 1L,
       "compaction must fold every segment into the bootstrap segment")
     assert(probePairs() == before,
       "compaction must not change probe results")
@@ -307,26 +314,21 @@ class StreamingCorpusSpec extends AnyFunSuite {
       .filter($"sz" =!= $"n").count()
     assert(stale == 0L, "compaction must re-freeze GLOBAL bucket sizes")
     // the trigger is re-armed (one segment now)
-    assert(!StreamingMinhashDedup.maybeCompact(spark, idxP, txtP,
-      maxSegments = 2))
-    // the CHECKED variant under the automated safety rule: append one
-    // more batch, trigger met, but its batch has no commit file →
-    // defer; after the commit lands, fold
-    import graft.operators.SegmentStore
+    assert(StreamingMinhashDedup.maybeCompactChecked(spark, idxP, txtP,
+      ckpt, maxSegments = 2) == SegmentStore.CompactIdle)
+    // the automated safety rule: append one more batch, trigger met,
+    // but its batch has no commit file → defer; after the commit
+    // lands, fold
     StreamingMinhashDedup.processBatch(
       Seq((300L, novel.trim.replace("prose", "copy")))
         .toDF("doc_id", "text"),
       3L, "doc_id", "text", idxP, txtP, threshold = 0.5)
-    val ckpt = java.nio.file.Files.createTempDirectory("smhckpt")
-      .toString
     assert(StreamingMinhashDedup.maybeCompactChecked(spark, idxP, txtP,
       ckpt, maxSegments = 1) == SegmentStore.CompactDeferred)
-    val commits = java.nio.file.Paths.get(ckpt, "commits")
-    java.nio.file.Files.createDirectories(commits)
     java.nio.file.Files.writeString(commits.resolve("3"), "v1\n{}")
     assert(StreamingMinhashDedup.maybeCompactChecked(spark, idxP, txtP,
       ckpt, maxSegments = 1) == SegmentStore.Compacted)
-    assert(StreamingMinhashDedup.segmentCount(spark, idxP) == 1L)
+    assert(SegmentStore.segmentCount(spark, idxP) == 1L)
   }
 
   test("committed-prefix fold (under-load compaction, minhash grain): " +
@@ -356,9 +358,11 @@ class StreamingCorpusSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     def probePairs(): Set[(Long, Long)] =
       Dedup.incrementalMinhashPairs(late,
-          SegmentStore.readRawView(spark, txtP).drop("ingest_batch"),
-          SegmentStore.readRawView(spark, idxP), "doc_id", "text",
-          threshold = 0.5)
+          SegmentStore.read(spark, txtP, SegmentStore.schemaOf(late))
+            .drop("ingest_batch"),
+          SegmentStore.read(spark, idxP, SegmentStore.schemaOf(
+            Dedup.minhashIndex(late, "doc_id", "text"))),
+          "doc_id", "text", threshold = 0.5)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val before = probePairs()
     assert(before.contains((0L, 200L)) && before.contains((110L, 201L)))
@@ -535,8 +539,11 @@ class StreamingCorpusSpec extends AnyFunSuite {
     assert(graft.operators.SegmentStore.segmentIds(spark, idxP).sorted ==
       Seq(-1L, 1L))
     assertFlat("compactPrefix")
-    StreamingMinhashDedup.compactIndex(spark, idxP, txtP)
-    assertFlat("compactIndex")
+    StreamingMinhashDedup.compactPrefix(spark, idxP, txtP,
+      upTo = Long.MaxValue)
+    assert(graft.operators.SegmentStore.segmentIds(spark, idxP) ==
+      Seq(-1L))
+    assertFlat("full compactPrefix")
     // band stays a data column
     assert(spark.read.parquet(idxP).columns.contains("band"))
   }
