@@ -40,18 +40,6 @@ object FilingEntry {
     StructField("num_previously_valid", LongType)))
 }
 
-/** CIK lookup dimension row (D4, `cik_lookup.py:10-37`): one company from
-  * `company_tickers.json`, ticker/title upper-cased for the lookup join.
-  */
-case class CikRecord(cik: String, ticker: String, title: String)
-
-object CikRecord {
-  val schema: StructType = StructType(Seq(
-    StructField("cik", StringType),
-    StructField("ticker", StringType),
-    StructField("title", StringType)))
-}
-
 /** One embedded `<DOCUMENT>` inside a `<SEC-DOCUMENT>` container
   * (`parser.py:215-242`): the three scalar tags plus the `<TEXT>` payload.
   */

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** APPEND lifecycle for the standing template-family index — the last
   * index family without a production ingest loop (r14 verdict #1: a
@@ -51,7 +50,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * its pointer-chain depth as [[SegmentStore]] metadata
   * (`labelsPath/_depth`): [[init]] and a full fold set it to 1 (0 when
   * the labels store is empty — a first-day corpus with no duplicate
-  * families is a valid store, served with an explicit read schema, not
+  * families is a valid store, served with its recorded read schema, not
   * an inference error), and [[processBatch]] bumps it by one exactly
   * when its update segment re-points a CORPUS-side id (only standing
   * rows can extend a chain; a batch-only update — new docs joining or
@@ -91,14 +90,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * Nothing corpus-sized ever shuffles on the hot path.
   */
 object FamilyStore {
-
-  private val LabelSchema = StructType(Seq(
-    StructField("id", LongType), StructField("label", LongType),
-    StructField("ingest_batch", LongType)))
-  private val IndexSchema = StructType(Seq(
-    StructField("h", LongType), StructField("doc_id", LongType),
-    StructField("n_docs", LongType), StructField("ingest_batch", LongType),
-    StructField("band", LongType)))
 
   /** One-time bootstrap: write the corpus [[SuffixDedup.familyIndex]]
     * and [[SuffixDedup.familyLabels]] as segment -1 of the two stores,
@@ -358,7 +349,7 @@ object FamilyStore {
     SegmentStore.completeFold(spark, indexPath)
     SegmentStore.completeFold(spark, labelsPath)
     // ---- labels: path-compress the prefix, fold into segment -1 ----
-    val lbl = SegmentStore.read(spark, labelsPath, LabelSchema)
+    val lbl = SegmentStore.read(spark, labelsPath)
       .filter(col("ingest_batch") <= upTo)
     // materialize the latest-row table ONCE (r17): it feeds both the CC
     // edge list and the flatten join below — eagerInput on the CC call
@@ -397,7 +388,7 @@ object FamilyStore {
     // totals across the WHOLE store (counts only grow, so a gram over
     // cap globally can never contribute new edges again), rewrite
     // restricted to the prefix rows the fold owns
-    val idx = SegmentStore.read(spark, indexPath, IndexSchema)
+    val idx = SegmentStore.read(spark, indexPath)
     val totals = idx.groupBy(col("h"))
       .agg((sum(when(col("doc_id").isNotNull, 1L).otherwise(0L)) +
         coalesce(sum(when(col("doc_id").isNull, col("n_docs"))), lit(0L)))
@@ -434,8 +425,7 @@ object FamilyStore {
       excludeBatch: Option[Long])
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val spark = batch.sparkSession
-    val idx = SegmentStore.read(spark, indexPath, IndexSchema,
-        excludeBatch)
+    val idx = SegmentStore.read(spark, indexPath, excludeBatch)
       .select(col("h"), col("doc_id"), col("n_docs"))
     val (edges0, bposts) = SuffixDedup.batchProbeEdgesWithPosts(batch,
       idCol, textCol, idx, minLen, maxDocsPerGram)
@@ -501,8 +491,7 @@ object FamilyStore {
   private def fetchPointerClosure(spark: SparkSession, labelsPath: String,
       touched: DataFrame, maxChase: Int,
       excludeBatch: Option[Long]): DataFrame = {
-    val store = SegmentStore.read(spark, labelsPath, LabelSchema,
-        excludeBatch)
+    val store = SegmentStore.read(spark, labelsPath, excludeBatch)
       // identity rows (component centers label themselves) carry no
       // information — resolution already defaults to self
       .filter(col("id") =!= col("label"))

@@ -5,46 +5,59 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructField,
+  StructType}
 
-/** Shared plumbing for the segment-partitioned standing stores
-  * ([[FamilyStore]], [[SuffixStore]],
+/** Shared plumbing for the ten `ingest_batch`-segmented standing
+  * stores — [[FamilyStore]], [[SuffixStore]],
   * [[graft.streaming.StreamingMinhashDedup]],
-  * [[graft.streaming.StreamingAnnIngest]]) — extracted once (r15
-  * verdict: three copies of the exactly-once recipe) so every store
-  * family carries the SAME load-bearing invariants:
+  * [[graft.streaming.StreamingAnnIngest]],
+  * [[graft.streaming.StreamingCdcDedup]] and the five mergeable-sketch
+  * stores [[graft.streaming.StreamingDistinct]],
+  * [[graft.streaming.StreamingFrequency]],
+  * [[graft.streaming.StreamingLexical]],
+  * [[graft.streaming.StreamingQuantiles]],
+  * [[graft.streaming.StreamingTopK]] — so every store carries the SAME
+  * layout, schema and fold, and the SAME load-bearing invariants:
   *
   *   - '''Exactly-once appends''' ([[writeSegment]]): every segment is
   *     keyed by `ingest_batch` under dynamic partition overwrite, so a
   *     replayed `foreachBatch` batch overwrites its own partition
   *     instead of duplicating it — the idempotent-sink recipe for
   *     at-least-once streaming replay.
-  *   - '''Empty-store-safe reads''' ([[read]]): stores are read with an
-  *     EXPLICIT schema. A bootstrap corpus with nothing to index writes
-  *     a valid empty segment (no data files, only `_SUCCESS`), and
-  *     schema inference over that layout throws
+  *   - '''Recorded schema, empty-store-safe reads'''
+  *     ([[writeSegment]]/[[replace]] → [[read]]): every write that
+  *     creates or replaces a store records its read schema (the written
+  *     columns plus `ingest_batch`) as the `_schema` metadata file —
+  *     after the data, because a static overwrite clears underscore
+  *     files; dynamic appends and [[foldPrefix]] leave it in place.
+  *     Readers never supply or infer a schema: a bootstrap corpus with
+  *     nothing to index writes a valid empty segment (no data files,
+  *     only `_SUCCESS`), over which inference throws
   *     `unable to infer schema` — bricking a store on a plausible
-  *     first-day corpus. An explicit schema returns the empty frame the
-  *     caller expects.
+  *     first-day corpus — while the recorded schema returns the empty
+  *     frame the caller expects. A directory without a record fails
+  *     loudly, naming its path.
   *   - '''Path-own-filesystem wipes''' ([[wipe]]): store resets
   *     delete through `Path.getFileSystem`, never `FileSystem.get` —
   *     the latter resolves the DEFAULT filesystem, so on a cluster
   *     whose default fs differs from the store location (hdfs default,
   *     file:/s3a store) the delete would target the wrong fs and the
   *     following write would land on a stale store.
-  *   - '''One fold''' ([[foldPrefix]] behind [[checkedFold]]): every
-  *     store family compacts through its staged committed-prefix fold
-  *     only; "fold everything" is the same fold with `upTo =
-  *     Long.MaxValue`, so no store has a wipe-and-rewrite window in
-  *     which a crash leaves it empty.
+  *   - '''One fold''' ([[foldPrefix]], behind [[checkedFold]] for the
+  *     stores with a compaction policy): every store compacts through
+  *     the staged committed-prefix fold only; "fold everything" is the
+  *     same fold with `upTo = Long.MaxValue`, so no store has a
+  *     wipe-and-rewrite window in which a crash leaves it empty.
   *   - '''Driver-free metadata''' ([[readMeta]]/[[writeMeta]]): tiny
   *     underscore-prefixed files inside the store directory (ignored by
-  *     parquet listing, like `_SUCCESS`) carry store-level scalars —
-  *     e.g. [[FamilyStore]]'s pointer-chain depth bound, which lets the
-  *     probe size its chase statically instead of discovering closure
-  *     by per-hop emptiness actions. Single-writer per store (the
-  *     foreachBatch contract); a static-overwrite rewrite of the store
-  *     clears them, so maintenance jobs rewrite their metadata last.
+  *     parquet listing, like `_SUCCESS`) carry store-level values —
+  *     the schema record, the fold marker, and e.g. [[FamilyStore]]'s
+  *     pointer-chain depth bound, which lets the probe size its chase
+  *     statically instead of discovering closure by per-hop emptiness
+  *     actions. Single-writer per store (the foreachBatch contract); a
+  *     static-overwrite rewrite of the store clears them, so
+  *     maintenance jobs rewrite their metadata last.
   */
 object SegmentStore {
 
@@ -52,17 +65,42 @@ object SegmentStore {
     * written under `partitionBy(ingest_batch, subPartitions*)`.
     * `dynamic = true` (every per-batch append) overwrites ONLY the
     * partitions present in `rows` — the exactly-once replay contract;
-    * `dynamic = false` (bootstrap / full rewrite) replaces the store.
+    * `dynamic = false` (bootstrap) replaces the store and records its
+    * read schema.
     */
   def writeSegment(rows: DataFrame, batchId: Long, path: String,
-      subPartitions: Seq[String] = Nil, dynamic: Boolean = false): Unit = {
-    val w = rows.withColumn("ingest_batch", lit(batchId))
-      .write.mode("overwrite")
+      subPartitions: Seq[String] = Nil, dynamic: Boolean = false): Unit =
+    write(rows.withColumn("ingest_batch", lit(batchId)), path,
+      subPartitions, dynamic)
+
+  /** Replace the whole store with `segments` — rows that already carry
+    * their `ingest_batch` (a rebuild that rewrites every segment in
+    * place) — and record its read schema. A static overwrite: a
+    * `(segment, subPartition)` directory absent from `segments` is
+    * removed, which a dynamic one would leave stale.
+    */
+  def replace(segments: DataFrame, path: String,
+      subPartitions: Seq[String] = Nil): Unit =
+    write(segments, path, subPartitions, dynamic = false)
+
+  private def write(stamped: DataFrame, path: String,
+      subPartitions: Seq[String], dynamic: Boolean): Unit = {
+    val w = stamped.write.mode("overwrite")
     (if (dynamic) w.option("partitionOverwriteMode", "dynamic") else w)
       .partitionBy(("ingest_batch" +: subPartitions): _*).parquet(path)
+    // after the data: the static overwrite cleared the store's
+    // underscore files, the old record included
+    if (!dynamic) {
+      val schema = StructType(
+        stamped.schema.filterNot(_.name == "ingest_batch") :+
+          StructField("ingest_batch", LongType))
+      writeText(stamped.sparkSession, path, SchemaMeta, schema.json)
+    }
   }
 
-  /** Read a store with an explicit schema (empty-store-safe — see
+  private val SchemaMeta = "schema"
+
+  /** Read a store with its recorded schema (empty-store-safe — see
     * object doc), optionally partition-pruning one batch's own segment
     * out (the replay contract: a replayed batch must recompute against
     * the pre-append state, not its own previously-written rows).
@@ -70,10 +108,16 @@ object SegmentStore {
     * `_fold_upto` marker is present — see [[foldPrefix]]), the folded
     * view is served (staging as the bootstrap segment, folded segments
     * excluded), so readers see a consistent store at every instant of
-    * the fold.
+    * the fold. Throws when `path` holds no schema record (no store was
+    * created there by [[writeSegment]] or [[replace]]).
     */
-  def read(spark: SparkSession, path: String, schema: StructType,
+  def read(spark: SparkSession, path: String,
       excludeBatch: Option[Long] = None): DataFrame = {
+    val schema = readText(spark, path, SchemaMeta)
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(throw new IllegalStateException(
+        s"SegmentStore.read: no schema record (_$SchemaMeta) under " +
+          s"$path — not a store created by SegmentStore.writeSegment"))
     val base0 = spark.read.schema(schema).parquet(path)
     val base = pendingFoldUpto(spark, path) match {
       case None => base0
@@ -91,13 +135,6 @@ object SegmentStore {
     excludeBatch.foldLeft(base)((d, b) =>
       d.filter(col("ingest_batch") =!= b))
   }
-
-  /** The [[read]] schema of a store whose segments are written from
-    * frames shaped like `rows`: their columns plus `ingest_batch`.
-    * Derived from the writer's own frame, so no read infers it.
-    */
-  def schemaOf(rows: DataFrame): StructType =
-    StructType(rows.schema.fields :+ StructField("ingest_batch", LongType))
 
   /** Delete a store directory on ITS OWN filesystem (see object doc).
     * No-op when the path does not exist.
@@ -190,9 +227,9 @@ object SegmentStore {
   //   1. write the folded replacement for the bootstrap segment to
   //      `_fold_staging/` — underscore-prefixed, so segment listings
   //      and parquet reads of the store root do not see it;
-  //   2. COMMIT: create `_fold_upto = upTo`. Marker-aware reads
-  //      ([[read]]) now serve
-  //      staging ∪ segments > upTo; before the marker they served the
+  //   2. COMMIT: create `_fold_upto = m`, the highest segment id
+  //      `<= upTo`. Marker-aware reads ([[read]]) now serve
+  //      staging ∪ segments > m; before the marker they served the
   //      unchanged original store. Either side of this instant is a
   //      complete, consistent view;
   //   3. delete the old bootstrap directory and RENAME staging into
@@ -203,9 +240,11 @@ object SegmentStore {
   //   5. clear the marker.
   //
   // A crash anywhere resumes idempotently: [[completeFold]] (run at
-  // every policy entry) finishes 3-5 when the marker is present, and a
-  // stale staging dir without a marker (crash before 2) is inert and
-  // overwritten by the next fold.
+  // every policy entry and before every fold) finishes 3-5 when the
+  // marker is present, and a stale staging dir without a marker (crash
+  // before 2) is inert and overwritten by the next fold. The marker
+  // names the last segment the fold covered, so the appends a stream
+  // makes between a crash and the heal stay visible and survive it.
   // --------------------------------------------------------------------
 
   private val FoldMeta = "fold_upto"
@@ -242,26 +281,41 @@ object SegmentStore {
     * materialized by the caller (localCheckpoint — the swap below must
     * not re-read what it replaces) and cover the bootstrap segment
     * plus every appended segment `<= upTo`; it becomes the store's new
-    * bootstrap segment, laid out under `subPartitions`. A zero-row
-    * fold (every covered segment empty) skips the protocol — deleting
-    * empty directories is consistent at every instant unstaged.
+    * bootstrap segment, laid out under `subPartitions`.
     */
   def foldPrefix(spark: SparkSession, path: String, upTo: Long,
       folded: DataFrame, subPartitions: Seq[String] = Nil): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    commitFold(spark, path, upTo, folded, subPartitions)
+    completeFold(spark, path)
+  }
+
+  /** Steps 1-2 of the fold protocol ([[foldPrefix]] stopped at its
+    * commit point — the state a crash there leaves for [[completeFold]]
+    * to heal). A fold still pending from an earlier crash is completed
+    * first, so its staging is swapped in rather than discarded under a
+    * live marker. The marker records the highest segment id the fold
+    * covers, not `upTo`: a `Long.MaxValue` fold that crashes after its
+    * commit point must neither hide the segments appended after it nor
+    * let the heal delete them. A zero-row fold (every covered segment
+    * empty) skips the staging — deleting empty directories is
+    * consistent at every instant unstaged.
+    */
+  private[graft] def commitFold(spark: SparkSession, path: String,
+      upTo: Long, folded: DataFrame, subPartitions: Seq[String]): Unit = {
+    completeFold(spark, path)
+    val fs = new Path(path).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
     val st = stagingPath(path)
     fs.delete(st, true) // stale staging from an abandoned pre-commit fold
-    if (folded.isEmpty) {
-      segmentIds(spark, path)
-        .filter(id => id != -1L && id <= upTo)
+    val covered = segmentIds(spark, path).filter(_ <= upTo)
+    if (folded.isEmpty)
+      covered.filter(_ != -1L)
         .foreach(id => fs.delete(new Path(path, s"ingest_batch=$id"), true))
-    } else {
+    else {
       val w = folded.write.mode("overwrite")
       (if (subPartitions.nonEmpty) w.partitionBy(subPartitions: _*) else w)
         .parquet(st.toString)
-      writeMeta(spark, path, FoldMeta, upTo) // COMMIT POINT
-      completeFold(spark, path)
+      writeMeta(spark, path, FoldMeta, (covered :+ -1L).max) // COMMIT POINT
     }
   }
 
@@ -311,33 +365,37 @@ object SegmentStore {
     * Driver-side Hadoop FS IO — no Spark job.
     */
   def writeMeta(spark: SparkSession, path: String, name: String,
-      value: Long): Unit = {
-    val p = new Path(path, s"_$name")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(value.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
+      value: Long): Unit =
+    writeText(spark, path, name, value.toString)
 
   /** Read a metadata scalar written by [[writeMeta]]; `None` when the
     * file is absent (legacy store layouts — callers fall back to their
     * discovery path) or unparseable.
     */
   def readMeta(spark: SparkSession, path: String,
-      name: String): Option[Long] = {
+      name: String): Option[Long] =
+    readText(spark, path, name)
+      .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
+
+  /** The metadata file IO behind [[writeMeta]] and the schema record. */
+  private def writeText(spark: SparkSession, path: String, name: String,
+      value: String): Unit = {
+    val p = new Path(path, s"_$name")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(p, true)
+    try out.write(value.getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
+  private def readText(spark: SparkSession, path: String,
+      name: String): Option[String] = {
     val p = new Path(path, s"_$name")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      try {
-        val bytes = new Array[Byte](64)
-        val n = in.read(bytes)
-        if (n <= 0) None
-        else scala.util.Try(
-          new String(bytes, 0, n, StandardCharsets.UTF_8).trim.toLong
-        ).toOption
-      } finally in.close()
+      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8))
+      finally in.close()
     }
   }
 }

@@ -456,13 +456,13 @@ object StoreSoak {
       if (k == 5) {
         // at-least-once restart shape mid-chain: reprocess the SAME
         // batch id — identical pairs, store unchanged
-        val idxRows = spark.read.parquet(mhIdxP).count()
+        val idxRows = SegmentStore.read(spark, mhIdxP).count()
         val replay = StreamingMinhashDedup.processBatch(batch, k.toLong,
           "doc_id", "text", mhIdxP, mhTxtP, threshold)
           .select(col("id_a"), col("id_b"))
         replayOk = replay.exceptAll(got).isEmpty &&
           got.exceptAll(replay).isEmpty &&
-          spark.read.parquet(mhIdxP).count() == idxRows
+          SegmentStore.read(spark, mhIdxP).count() == idxRows
         require(replayOk, s"minhash replay broke at step $k")
       }
       commit(s"$scratch/mh/ckpt", k.toLong)
@@ -483,8 +483,8 @@ object StoreSoak {
     }
     // post-chain read-only probe (held-out class, never appended)
     val ((mProbeRows, mProbe), mProbeSec) = timed {
-      val idx = spark.read.parquet(mhIdxP)
-      val txts = spark.read.parquet(mhTxtP).drop("ingest_batch")
+      val idx = SegmentStore.read(spark, mhIdxP)
+      val txts = SegmentStore.read(spark, mhTxtP).drop("ingest_batch")
       val p = Dedup.incrementalMinhashPairs(probeB, txts, idx, "doc_id",
           "text", threshold)
         .select(col("id_a"), col("id_b")).localCheckpoint(true)
@@ -708,14 +708,9 @@ object StoreSoak {
     // post-chain read-only probe with one-shot parity (batch-involving
     // pairs of a held-out batch)
     val ((mProbeRows, mProbe), mProbeSec) = timed {
-      // the stores are read with the schema of the frames written to
-      // them: the probe batch's columns and its own minhash index
       val p = Dedup.incrementalMinhashPairs(probeB,
-          SegmentStore.read(spark, mhTxtP, SegmentStore.schemaOf(probeB))
-            .drop("ingest_batch"),
-          SegmentStore.read(spark, mhIdxP, SegmentStore.schemaOf(
-            Dedup.minhashIndex(probeB, "doc_id", "text"))),
-          "doc_id", "text", threshold)
+          SegmentStore.read(spark, mhTxtP).drop("ingest_batch"),
+          SegmentStore.read(spark, mhIdxP), "doc_id", "text", threshold)
         .select(col("id_a"), col("id_b")).localCheckpoint(true)
       (p.count(), p)
     }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** APPEND lifecycle for the span-grain suffix index — the
   * [[FamilyStore]] treatment applied to [[SuffixDedup.suffixIndex]],
@@ -41,10 +40,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * folds only batches the owning stream's checkpoint has committed.
   */
 object SuffixStore {
-
-  private val Schema = StructType(Seq(
-    StructField("h", LongType), StructField("n_occ", LongType),
-    StructField("ingest_batch", LongType), StructField("band", LongType)))
 
   /** One-time bootstrap: the corpus [[SuffixDedup.suffixIndex]] as
     * segment -1.
@@ -125,7 +120,7 @@ object SuffixStore {
     require(nBands >= 1, s"nBands must be >= 1, got $nBands")
     SegmentStore.completeFold(spark, path)
     // store-scale fold output: size-tiered materialization (r18, §5)
-    val folded = Materialize.eager(SegmentStore.read(spark, path, Schema)
+    val folded = Materialize.eager(SegmentStore.read(spark, path)
       .filter(col("ingest_batch") <= upTo)
       .groupBy(col("h"))
       .agg(sum(col("n_occ")).as("n_occ"))
@@ -136,7 +131,7 @@ object SuffixStore {
 
   private def readIndex(spark: SparkSession, path: String,
       excludeBatch: Option[Long]): DataFrame =
-    SegmentStore.read(spark, path, Schema, excludeBatch)
+    SegmentStore.read(spark, path, excludeBatch)
       .select(col("h"), col("n_occ"))
 
   private def writeSegment(index: DataFrame, batchId: Long, path: String,

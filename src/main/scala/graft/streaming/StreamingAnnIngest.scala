@@ -39,7 +39,7 @@ import graft.operators.{IvfPq, SegmentStore}
   * partition column (`cell` is the second directory level, so a static
   * cell filter still prunes within every segment). Writes and reads go
   * through [[SegmentStore]] — the shared exactly-once recipe, and
-  * explicit-schema reads, so an empty bootstrap corpus is a valid store.
+  * recorded-schema reads, so an empty bootstrap corpus is a valid store.
   */
 object StreamingAnnIngest {
 
@@ -69,18 +69,15 @@ object StreamingAnnIngest {
     val mdl = model.getOrElse(IvfPq.readModel(spark, path))
     val codes = IvfPq.encode(batch, mdl)
     val vecs = batch.select(col("id"), col("embedding"))
-    // each store is read with the schema of the frames this batch
-    // appends to it — no inference job, and an empty bootstrap segment
-    // reads as an empty frame. The reads are marker-aware: mid-
-    // [[compactPrefix]] the folded segments' rows are served from the
-    // staged bootstrap segment, never twice. A replayed batch's own
-    // segment is pruned out (it must not match its previously written
-    // self).
-    val standingCodes = SegmentStore.read(spark, s"$path/codes",
-        SegmentStore.schemaOf(codes), Some(batchId))
+    // each store is read with its recorded schema — no inference job,
+    // and an empty bootstrap segment reads as an empty frame. The reads
+    // are marker-aware: mid-[[compactPrefix]] the folded segments' rows
+    // are served from the staged bootstrap segment, never twice. A
+    // replayed batch's own segment is pruned out (it must not match its
+    // previously written self).
+    val standingCodes = SegmentStore.read(spark, s"$path/codes", Some(batchId))
       .select(col("id"), col("cell"), col("code"), col("nrm"))
-    val standingVecs = SegmentStore.read(spark, s"$path/vectors",
-        SegmentStore.schemaOf(vecs), Some(batchId))
+    val standingVecs = SegmentStore.read(spark, s"$path/vectors", Some(batchId))
       .select(col("id"), col("embedding"))
     // eager: the probe must see the PRE-append store (lazy evaluation
     // after the append would match the batch against its own rows)
@@ -137,14 +134,14 @@ object StreamingAnnIngest {
   def compactPrefix(spark: SparkSession, path: String, upTo: Long): Unit = {
     SegmentStore.completeFold(spark, s"$path/codes")
     SegmentStore.completeFold(spark, s"$path/vectors")
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = SegmentStore.read(spark, s"$path/codes")
       .filter(col("ingest_batch") <= upTo)
       .drop("ingest_batch")
       .repartition(col("cell"))
       .localCheckpoint(true)
     SegmentStore.foldPrefix(spark, s"$path/codes", upTo, codes,
       Seq("cell"))
-    val vecs = spark.read.parquet(s"$path/vectors")
+    val vecs = SegmentStore.read(spark, s"$path/vectors")
       .filter(col("ingest_batch") <= upTo)
       .drop("ingest_batch")
       .localCheckpoint(true)
@@ -174,12 +171,12 @@ object StreamingAnnIngest {
   def rebuildStore(spark: SparkSession, path: String, nlist: Int,
       m: Int, ksub: Int, iters: Int = 2, pqIters: Int = 3,
       trainFraction: Double = 1.0): IvfPq.Model = {
-    // heal a crashed fold before reading the store wholesale (the
-    // policy entries do the same; the raw read below must not see a
-    // mid-protocol layout)
+    // heal a crashed fold before rewriting the store wholesale (the
+    // policy entries do the same; the rewrite below must not leave a
+    // fold marker pointing at a replaced layout)
     SegmentStore.completeFold(spark, s"$path/codes")
     SegmentStore.completeFold(spark, s"$path/vectors")
-    val vecs = spark.read.parquet(s"$path/vectors")
+    val vecs = SegmentStore.read(spark, s"$path/vectors")
       .select(col("id"), col("embedding"), col("ingest_batch"))
       .localCheckpoint(true)
     val mdl = IvfPq.train(vecs.select(col("id"), col("embedding")),
@@ -189,8 +186,9 @@ object StreamingAnnIngest {
     val enc = IvfPq.encode(vecs.select(col("id"), col("embedding")), mdl)
       .join(vecs.select(col("id"), col("ingest_batch")), Seq("id"))
       .localCheckpoint(true)
-    enc.write.mode("overwrite").partitionBy("ingest_batch", "cell")
-      .parquet(s"$path/codes")
+    // a static replace records the codes store's schema again (the
+    // overwrite clears it); every segment is rewritten in place
+    SegmentStore.replace(enc, s"$path/codes", Seq("cell"))
     IvfPq.writeModel(spark, mdl, path)
     mdl
   }

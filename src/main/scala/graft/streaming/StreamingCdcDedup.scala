@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, SegmentStore}
 
 /** Streaming FRAGMENT-grain dedup over content-defined chunks — the
   * third index-append store beside [[StreamingMinhashDedup]] (documents)
@@ -25,10 +25,11 @@ import graft.operators.Dedup
   * BROADCAST batch chunk table (a micro-batch's fragments are small by
   * construction) — the standing store is never re-chunked or shuffled.
   *
-  * EXACTLY-ONCE: same recipe as the sibling stores — chunk rows are
-  * partitioned by `ingest_batch` under DYNAMIC partition overwrite, so a
-  * foreachBatch replay overwrites its own partition, and the probe
-  * partition-prunes its own batch id out of the standing read.
+  * EXACTLY-ONCE: chunk rows are [[SegmentStore]] segments keyed by
+  * `ingest_batch` — a foreachBatch replay overwrites its own segment,
+  * and the probe partition-prunes its own batch id out of the standing
+  * read (recorded schema, so an empty bootstrap corpus is a valid
+  * store).
   */
 object StreamingCdcDedup {
 
@@ -39,10 +40,10 @@ object StreamingCdcDedup {
   def initStore(corpus: DataFrame, idCol: String, textCol: String,
       path: String, window: Int = 3, avgChunkGrams: Int = 8,
       minTokens: Int = 2): Unit =
-    Dedup.cdcChunks(corpus, idCol, textCol, window, avgChunkGrams)
-      .filter(col("n_tokens") >= minTokens)
-      .withColumn("ingest_batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("ingest_batch").parquet(path)
+    SegmentStore.writeSegment(
+      Dedup.cdcChunks(corpus, idCol, textCol, window, avgChunkGrams)
+        .filter(col("n_tokens") >= minTokens),
+      -1L, path)
 
   /** The foreachBatch body: returns the fragment matches
     * `(chunk_hash, id_standing, chunk_id_standing, id_new, chunk_id_new,
@@ -51,9 +52,8 @@ object StreamingCdcDedup {
   def processBatch(batch: DataFrame, batchId: Long, idCol: String,
       textCol: String, path: String, window: Int = 3,
       avgChunkGrams: Int = 8, minTokens: Int = 2): DataFrame = {
-    val spark = batch.sparkSession
-    val standing = spark.read.parquet(path)
-      .filter(col("ingest_batch") =!= batchId)
+    val standing = SegmentStore.read(batch.sparkSession, path,
+      Some(batchId))
     // chunk the batch ONCE: both the probe and the append consume this —
     // an uncached lazy plan would run the tokenize/hash/window pipeline
     // twice per micro-batch
@@ -70,10 +70,7 @@ object StreamingCdcDedup {
         col("chunk_id").as("chunk_id_standing"),
         col("id_new"), col("chunk_id_new"), col("n_tokens"))
       .localCheckpoint(true)
-    batchChunks.withColumn("ingest_batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch").parquet(path)
+    SegmentStore.writeSegment(batchChunks, batchId, path, dynamic = true)
     matches
   }
 

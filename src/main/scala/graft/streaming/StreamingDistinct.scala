@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.CardinalitySketch
+import graft.operators.{CardinalitySketch, SegmentStore}
 
 /** Streaming cardinality store — running distinct-count estimates over
   * an unbounded stream with BOUNDED state: each micro-batch appends its
@@ -17,27 +17,23 @@ import graft.operators.CardinalitySketch
   * batch-mode estimate bit-for-bit, proven in StreamingDistinctSpec.
   * Nothing is lost to the micro-batch boundary, ever.
   *
-  * EXACTLY-ONCE: the sibling stores' recipe — state rows are
-  * partitioned by `ingest_batch` under dynamic partition overwrite, so
-  * a foreachBatch replay overwrites its own partition, and the merge
-  * partition-prunes the current batch id out of the standing read.
-  * Store growth is k + 2^p rows per batch; [[compact]] folds history
-  * back to a single bootstrap partition whenever convenient — by
-  * mergeability, compaction cannot change any future estimate.
+  * EXACTLY-ONCE: state rows are [[SegmentStore]] segments keyed by
+  * `ingest_batch` — a foreachBatch replay overwrites its own segment,
+  * and the merge partition-prunes the current batch id out of the
+  * standing read. Store growth is k + 2^p rows per batch; [[compact]]
+  * folds history back to a single bootstrap segment whenever
+  * convenient — by mergeability, compaction cannot change any future
+  * estimate.
   */
 object StreamingDistinct {
 
   /** One-time bootstrap: sketch the standing corpus (`ingest_batch = -1`). */
   def initStore(corpus: DataFrame, valueCol: String, path: String,
       k: Int = 256, p: Int = 8): Unit = {
-    CardinalitySketch.kmvState(corpus, valueCol, k)
-      .withColumn("ingest_batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("ingest_batch")
-      .parquet(s"$path/kmv")
-    CardinalitySketch.hllState(corpus, valueCol, p)
-      .withColumn("ingest_batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("ingest_batch")
-      .parquet(s"$path/hll")
+    SegmentStore.writeSegment(CardinalitySketch.kmvState(corpus, valueCol,
+      k), -1L, s"$path/kmv")
+    SegmentStore.writeSegment(CardinalitySketch.hllState(corpus, valueCol,
+      p), -1L, s"$path/hll")
   }
 
   /** The foreachBatch body: returns the running one-row estimate
@@ -52,22 +48,17 @@ object StreamingDistinct {
       .localCheckpoint(true) // consumed by the estimate AND the append
     val batchHll = CardinalitySketch.hllState(batch, valueCol, p)
       .localCheckpoint(true)
-    val standingKmv = spark.read.parquet(s"$path/kmv")
-      .filter(col("ingest_batch") =!= batchId).select(col("h"))
-    val standingHll = spark.read.parquet(s"$path/hll")
-      .filter(col("ingest_batch") =!= batchId)
+    val standingKmv = SegmentStore.read(spark, s"$path/kmv", Some(batchId))
+      .select(col("h"))
+    val standingHll = SegmentStore.read(spark, s"$path/hll", Some(batchId))
       .select(col("bucket"), col("max_rho"))
     val est = mergedEstimate(standingKmv.unionByName(batchKmv),
       standingHll.unionByName(batchHll), k, p)
       .localCheckpoint(true) // eager: estimate before this batch lands
-    batchKmv.withColumn("ingest_batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch").parquet(s"$path/kmv")
-    batchHll.withColumn("ingest_batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch").parquet(s"$path/hll")
+    SegmentStore.writeSegment(batchKmv, batchId, s"$path/kmv",
+      dynamic = true)
+    SegmentStore.writeSegment(batchHll, batchId, s"$path/hll",
+      dynamic = true)
     est
   }
 
@@ -75,8 +66,9 @@ object StreamingDistinct {
   def estimate(spark: SparkSession, path: String, k: Int = 256,
       p: Int = 8): DataFrame =
     mergedEstimate(
-      spark.read.parquet(s"$path/kmv").select(col("h")),
-      spark.read.parquet(s"$path/hll").select(col("bucket"), col("max_rho")),
+      SegmentStore.read(spark, s"$path/kmv").select(col("h")),
+      SegmentStore.read(spark, s"$path/hll")
+        .select(col("bucket"), col("max_rho")),
       k, p)
 
   private def mergedEstimate(kmvRows: DataFrame, hllRows: DataFrame,
@@ -92,24 +84,21 @@ object StreamingDistinct {
     kmv.crossJoin(hll)
   }
 
-  /** Fold every standing partition back into `ingest_batch = -1`. By
+  /** Fold every standing segment back into `ingest_batch = -1`
+    * ([[SegmentStore.foldPrefix]] with `upTo = Long.MaxValue`). By
     * sketch mergeability the collapsed store serves identical estimates;
     * only the row count shrinks (back to ≤ k + 2^p).
     */
   def compact(spark: SparkSession, path: String, k: Int = 256,
       p: Int = 8): Unit = {
-    val kmv = CardinalitySketch
-      .kmvCompactState(spark.read.parquet(s"$path/kmv").select(col("h")), k)
-      .localCheckpoint(true) // read fully before overwriting the tree
-    val hll = spark.read.parquet(s"$path/hll")
-      .groupBy(col("bucket")).agg(max(col("max_rho")).as("max_rho"))
-      .localCheckpoint(true)
-    kmv.withColumn("ingest_batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("ingest_batch")
-      .parquet(s"$path/kmv")
-    hll.withColumn("ingest_batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("ingest_batch")
-      .parquet(s"$path/hll")
+    SegmentStore.foldPrefix(spark, s"$path/kmv", Long.MaxValue,
+      CardinalitySketch.kmvCompactState(
+        SegmentStore.read(spark, s"$path/kmv").select(col("h")), k)
+        .localCheckpoint(true)) // read fully before the fold swaps it in
+    SegmentStore.foldPrefix(spark, s"$path/hll", Long.MaxValue,
+      SegmentStore.read(spark, s"$path/hll")
+        .groupBy(col("bucket")).agg(max(col("max_rho")).as("max_rho"))
+        .localCheckpoint(true))
   }
 
   /** Wire a value stream to the store. */

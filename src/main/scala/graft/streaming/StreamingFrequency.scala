@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.CountMinSketch
+import graft.operators.{CountMinSketch, SegmentStore}
 
 /** Streaming frequency store — running Count-Min frequency estimates
   * over an unbounded stream with BOUNDED state: each micro-batch appends
@@ -20,23 +20,20 @@ import graft.operators.CountMinSketch
   * per-micro-batch shape; candidate DISCOVERY still rides a candidate
   * stream (Misra-Gries per batch), with the store refining counts.
   *
-  * EXACTLY-ONCE: the sibling stores' recipe — state rows are
-  * partitioned by `ingest_batch` under dynamic partition overwrite, so a
-  * foreachBatch replay overwrites its own partition, and the merge
-  * partition-prunes the current batch id out of the standing read.
-  * Store growth is ≤ d×m rows per batch; [[compact]] folds history back
-  * to a single bootstrap partition — by additivity, compaction cannot
-  * change any future estimate.
+  * EXACTLY-ONCE: state rows are [[SegmentStore]] segments keyed by
+  * `ingest_batch` — a foreachBatch replay overwrites its own segment,
+  * and the merge partition-prunes the current batch id out of the
+  * standing read. Store growth is ≤ d×m rows per batch; [[compact]]
+  * folds history back to a single bootstrap segment — by additivity,
+  * compaction cannot change any future estimate.
   */
 object StreamingFrequency {
 
   /** One-time bootstrap: sketch the standing corpus (`ingest_batch = -1`). */
   def initStore(corpus: DataFrame, valueCol: String, path: String,
       d: Int = 4, m: Int = 1024): Unit =
-    CountMinSketch.cmsState(corpus, valueCol, d, m)
-      .withColumn("ingest_batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("ingest_batch")
-      .parquet(s"$path/cms")
+    SegmentStore.writeSegment(CountMinSketch.cmsState(corpus, valueCol, d,
+      m), -1L, s"$path/cms")
 
   /** The foreachBatch body: returns the watchlist's running `(probe,
     * est)` INCLUDING this batch (eager), then appends the batch's state
@@ -48,17 +45,14 @@ object StreamingFrequency {
     val spark = batch.sparkSession
     val batchState = CountMinSketch.cmsState(batch, valueCol, d, m)
       .localCheckpoint(true) // consumed by the estimate AND the append
-    val standing = spark.read.parquet(s"$path/cms")
-      .filter(col("ingest_batch") =!= batchId)
+    val standing = SegmentStore.read(spark, s"$path/cms", Some(batchId))
       .select(col("row_id"), col("bucket"), col("cnt"))
     val merged = CountMinSketch.cmsMergeState(
       standing.unionByName(batchState))
     val est = CountMinSketch.cmsEstimate(merged, probes, probeCol, d, m)
       .localCheckpoint(true) // eager: estimate before this batch lands
-    batchState.withColumn("ingest_batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch").parquet(s"$path/cms")
+    SegmentStore.writeSegment(batchState, batchId, s"$path/cms",
+      dynamic = true)
     est
   }
 
@@ -68,23 +62,20 @@ object StreamingFrequency {
   def estimate(spark: SparkSession, path: String, probes: DataFrame,
       probeCol: String, d: Int = 4, m: Int = 1024): DataFrame =
     CountMinSketch.cmsEstimate(
-      CountMinSketch.cmsMergeState(spark.read.parquet(s"$path/cms")
+      CountMinSketch.cmsMergeState(SegmentStore.read(spark, s"$path/cms")
         .select(col("row_id"), col("bucket"), col("cnt"))),
       probes, probeCol, d, m)
 
-  /** Fold every standing partition back into `ingest_batch = -1`. By
+  /** Fold every standing segment back into `ingest_batch = -1`
+    * ([[SegmentStore.foldPrefix]] with `upTo = Long.MaxValue`). By
     * additivity the collapsed store serves identical estimates; only the
     * row count shrinks (back to ≤ d×m).
     */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val folded = CountMinSketch.cmsMergeState(
-      spark.read.parquet(s"$path/cms")
-        .select(col("row_id"), col("bucket"), col("cnt")))
-      .localCheckpoint(true) // read fully before overwriting the tree
-    folded.withColumn("ingest_batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("ingest_batch")
-      .parquet(s"$path/cms")
-  }
+  def compact(spark: SparkSession, path: String): Unit =
+    SegmentStore.foldPrefix(spark, s"$path/cms", Long.MaxValue,
+      CountMinSketch.cmsMergeState(SegmentStore.read(spark, s"$path/cms")
+          .select(col("row_id"), col("bucket"), col("cnt")))
+        .localCheckpoint(true)) // read fully before the fold swaps it in
 
   /** Wire a value stream to the store. */
   def attach(values: DataFrame, valueCol: String, probes: DataFrame,

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Lexical
+import graft.operators.{Lexical, SegmentStore}
 
 /** Streaming corpus-card store — the per-source "datasheet" (docs,
   * exact-dup ppm, token/vocab totals, TTR, word-distribution entropy)
@@ -20,29 +20,15 @@ import graft.operators.Lexical
   * per-batch partial entropies (entropy itself is NOT additive).
   * Proven in StreamingLexicalSpec.
   *
-  * EXACTLY-ONCE: the sibling stores' recipe — state rows are
-  * partitioned by `ingest_batch` under dynamic partition overwrite, so
-  * a foreachBatch replay overwrites its own partition, and the merge
-  * partition-prunes the current batch id out of the standing read.
-  * Store growth per batch is the batch's OWN vocab/distinct-text size;
-  * [[compact]] folds history back to the bootstrap partition — by
-  * additivity, compaction cannot move any card value.
+  * EXACTLY-ONCE: each state table is a [[SegmentStore]] keyed by
+  * `ingest_batch` — a foreachBatch replay overwrites its own segment,
+  * and the merge partition-prunes the current batch id out of the
+  * standing read. Store growth per batch is the batch's OWN
+  * vocab/distinct-text size; [[compact]] folds history back to the
+  * bootstrap segment — by additivity, compaction cannot move any card
+  * value.
   */
 object StreamingLexical {
-
-  private def write(df: DataFrame, table: String, batchId: Long,
-      path: String, init: Boolean): Unit = {
-    val w = df.withColumn("ingest_batch", lit(batchId))
-      .write.mode("overwrite")
-    (if (init) w else w.option("partitionOverwriteMode", "dynamic"))
-      .partitionBy("ingest_batch").parquet(s"$path/$table")
-  }
-
-  private def standing(spark: SparkSession, path: String, table: String,
-      excludeBatch: Long): DataFrame =
-    spark.read.parquet(s"$path/$table")
-      .filter(col("ingest_batch") =!= excludeBatch)
-      .drop("ingest_batch")
 
   /** One-time bootstrap: card + growth tables of the standing corpus
     * (`ingest_batch = -1`). `idCol` feeds the first-occurrence table
@@ -51,14 +37,14 @@ object StreamingLexical {
     */
   def initStore(corpus: DataFrame, groupCol: String, idCol: String,
       textCol: String, path: String): Unit = {
-    write(Lexical.wordCounts(corpus, groupCol, textCol), "wc", -1L, path,
-      init = true)
-    write(Lexical.dupLedger(corpus, groupCol, textCol), "dl", -1L, path,
-      init = true)
-    write(Lexical.wordFirstDoc(corpus, groupCol, idCol, textCol), "fw",
-      -1L, path, init = true)
-    write(Lexical.docTokenCounts(corpus, groupCol, idCol, textCol), "dt",
-      -1L, path, init = true)
+    SegmentStore.writeSegment(Lexical.wordCounts(corpus, groupCol,
+      textCol), -1L, s"$path/wc")
+    SegmentStore.writeSegment(Lexical.dupLedger(corpus, groupCol,
+      textCol), -1L, s"$path/dl")
+    SegmentStore.writeSegment(Lexical.wordFirstDoc(corpus, groupCol, idCol,
+      textCol), -1L, s"$path/fw")
+    SegmentStore.writeSegment(Lexical.docTokenCounts(corpus, groupCol,
+      idCol, textCol), -1L, s"$path/dt")
   }
 
   /** The foreachBatch body: append this batch's tables idempotently and
@@ -73,23 +59,25 @@ object StreamingLexical {
     val dl = Lexical.dupLedger(batch, groupCol, textCol)
       .localCheckpoint(true)
     val card = Lexical.corpusCard(
-      standing(spark, path, "wc", batchId).unionByName(wc),
-      standing(spark, path, "dl", batchId).unionByName(dl))
+      SegmentStore.read(spark, s"$path/wc", Some(batchId))
+        .drop("ingest_batch").unionByName(wc),
+      SegmentStore.read(spark, s"$path/dl", Some(batchId))
+        .drop("ingest_batch").unionByName(dl))
       .localCheckpoint(true) // eager: card before this batch lands
-    write(wc, "wc", batchId, path, init = false)
-    write(dl, "dl", batchId, path, init = false)
-    write(Lexical.wordFirstDoc(batch, groupCol, idCol, textCol), "fw",
-      batchId, path, init = false)
-    write(Lexical.docTokenCounts(batch, groupCol, idCol, textCol), "dt",
-      batchId, path, init = false)
+    SegmentStore.writeSegment(wc, batchId, s"$path/wc", dynamic = true)
+    SegmentStore.writeSegment(dl, batchId, s"$path/dl", dynamic = true)
+    SegmentStore.writeSegment(Lexical.wordFirstDoc(batch, groupCol, idCol,
+      textCol), batchId, s"$path/fw", dynamic = true)
+    SegmentStore.writeSegment(Lexical.docTokenCounts(batch, groupCol,
+      idCol, textCol), batchId, s"$path/dt", dynamic = true)
     card
   }
 
   /** The store's current card (all standing batches merged). */
   def report(spark: SparkSession, path: String): DataFrame =
     Lexical.corpusCard(
-      standing(spark, path, "wc", Long.MinValue),
-      standing(spark, path, "dl", Long.MinValue))
+      SegmentStore.read(spark, s"$path/wc").drop("ingest_batch"),
+      SegmentStore.read(spark, s"$path/dl").drop("ingest_batch"))
 
   /** Zipf rank-frequency fit straight off the store's merged word
     * counts — equal to the batch [[Lexical.zipfSlope]] of everything
@@ -99,7 +87,7 @@ object StreamingLexical {
   def zipfReport(spark: SparkSession, path: String,
       topV: Int = 64): DataFrame =
     Lexical.zipfSlopeFromCounts(
-      standing(spark, path, "wc", Long.MinValue), topV)
+      SegmentStore.read(spark, s"$path/wc").drop("ingest_batch"), topV)
 
   /** Heaps'-law vocabulary-growth fit off the store's merged
     * first-occurrence and doc-token tables — equal to the batch
@@ -110,20 +98,21 @@ object StreamingLexical {
   def heapsReport(spark: SparkSession, path: String,
       points: Int = 10): DataFrame =
     Lexical.heapsLawFromTables(
-      standing(spark, path, "fw", Long.MinValue),
-      standing(spark, path, "dt", Long.MinValue), points)
+      SegmentStore.read(spark, s"$path/fw").drop("ingest_batch"),
+      SegmentStore.read(spark, s"$path/dt").drop("ingest_batch"), points)
 
-  /** Fold every standing partition back into `ingest_batch = -1`. */
+  /** Fold every standing segment of each table back into
+    * `ingest_batch = -1` ([[SegmentStore.foldPrefix]] with
+    * `upTo = Long.MaxValue`).
+    */
   def compact(spark: SparkSession, path: String): Unit = {
-    val spark0 = spark
     def fold(table: String, keys: Seq[String], valueCol: String,
-        agg: org.apache.spark.sql.Column): Unit = {
-      val merged = standing(spark0, path, table, Long.MinValue)
-        .groupBy(keys.map(col): _*)
-        .agg(agg.as(valueCol))
-        .localCheckpoint(true) // read fully before the overwrite
-      write(merged, table, -1L, path, init = true)
-    }
+        agg: org.apache.spark.sql.Column): Unit =
+      SegmentStore.foldPrefix(spark, s"$path/$table", Long.MaxValue,
+        SegmentStore.read(spark, s"$path/$table")
+          .groupBy(keys.map(col): _*)
+          .agg(agg.as(valueCol))
+          .localCheckpoint(true)) // read fully before the fold swaps it in
     fold("wc", Seq("group", "w"), "c", sum(col("c")))
     fold("dl", Seq("group", "h"), "c", sum(col("c")))
     fold("fw", Seq("group", "w"), "fd", min(col("fd")))

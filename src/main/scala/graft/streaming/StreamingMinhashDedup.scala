@@ -55,8 +55,8 @@ object StreamingMinhashDedup {
 
   /** One-time bootstrap: sign the standing corpus, write its LSH index
     * and its text store as segment `ingest_batch = -1`. An empty corpus
-    * writes empty segments; later batches read them with an explicit
-    * schema.
+    * writes empty segments; later batches and folds read them with the
+    * schema recorded here.
     */
   def initIndex(corpus: DataFrame, idCol: String, textCol: String,
       indexPath: String, textPath: String, shingleN: Int = 3,
@@ -93,16 +93,15 @@ object StreamingMinhashDedup {
     // the shingle+signature pass three times per batch
     val bIdx = Dedup.minhashIndex(batch, idCol, textCol, shingleN, k,
       bands).localCheckpoint(true)
-    // both stores are read with the schema the batch implies — no
-    // inference job per batch, and an empty bootstrap segment reads as
-    // an empty frame. The reads are marker-aware: mid-[[compactPrefix]]
-    // the folded segments' rows are served from the staged bootstrap
+    // both stores are read with their recorded schema — no inference
+    // job per batch, and an empty bootstrap segment reads as an empty
+    // frame. The reads are marker-aware: mid-[[compactPrefix]] the
+    // folded segments' rows are served from the staged bootstrap
     // segment.
     // a REPLAYED batch must not probe its own previously-written index
     // rows: they are partition-pruned out (self-pairs and double-counted
     // band matches otherwise)
-    val standingIdx = SegmentStore.read(spark, indexPath,
-      SegmentStore.schemaOf(bIdx), Some(batchId))
+    val standingIdx = SegmentStore.read(spark, indexPath, Some(batchId))
     // the batch's texts land FIRST, so verification reads batch and
     // corpus texts from the one store, whose scan size the planner sees
     // (a stream's micro-batch frame carries no size estimate). Texts are
@@ -110,11 +109,9 @@ object StreamingMinhashDedup {
     // probe; a replay overwrites it in place. A failure below leaves
     // this segment without its index segment — [[maybeCompactChecked]]
     // decides on the text store so such a segment is never folded.
-    val batchTexts = batch.select(col(idCol), col(textCol))
-    SegmentStore.writeSegment(batchTexts, batchId, textPath,
-      dynamic = true)
-    val texts = SegmentStore.read(spark, textPath,
-      SegmentStore.schemaOf(batchTexts)).drop("ingest_batch")
+    SegmentStore.writeSegment(batch.select(col(idCol), col(textCol)),
+      batchId, textPath, dynamic = true)
+    val texts = SegmentStore.read(spark, textPath).drop("ingest_batch")
     // eager: the probe must see the PRE-append index (lazy evaluation
     // after the append would join the batch against its own rows)
     val pairs = Dedup.incrementalMinhashPairsFromIndex(texts, standingIdx,
@@ -194,14 +191,14 @@ object StreamingMinhashDedup {
     import graft.operators.SegmentStore
     SegmentStore.completeFold(spark, indexPath)
     SegmentStore.completeFold(spark, textPath)
-    val idx = spark.read.parquet(indexPath)
+    val idx = SegmentStore.read(spark, indexPath)
       .filter(col("ingest_batch") <= upTo)
       .drop("bucket_sz", "ingest_batch")
       .withColumn("bucket_sz", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")))
       .localCheckpoint(true)
     SegmentStore.foldPrefix(spark, indexPath, upTo, idx)
-    val txt = spark.read.parquet(textPath)
+    val txt = SegmentStore.read(spark, textPath)
       .filter(col("ingest_batch") <= upTo)
       .drop("ingest_batch")
       .localCheckpoint(true)

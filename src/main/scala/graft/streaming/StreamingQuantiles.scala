@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.QuantileHistogram
+import graft.operators.{QuantileHistogram, SegmentStore}
 
 /** Streaming quantile store — running percentile estimates over an
   * unbounded stream with BOUNDED state: each micro-batch appends its own
@@ -19,10 +19,10 @@ import graft.operators.QuantileHistogram
   * [[StreamingDistinct]] (KMV/HLL), [[StreamingFrequency]] (CMS), and
   * [[StreamingTopK]] (MG+CMS) — one recipe, four summaries.
   *
-  * EXACTLY-ONCE: state rows land under `ingest_batch` dynamic partition
-  * overwrite; replays overwrite their own partition; reads
+  * EXACTLY-ONCE: state rows are [[SegmentStore]] segments keyed by
+  * `ingest_batch`; replays overwrite their own segment; reads
   * partition-prune the in-flight batch. [[compact]] folds history to
-  * the bootstrap partition; by merge-exactness it cannot move any
+  * the bootstrap segment; by merge-exactness it cannot move any
   * quantile.
   */
 object StreamingQuantiles {
@@ -32,10 +32,8 @@ object StreamingQuantiles {
     */
   def initStore(corpus: DataFrame, valueCol: String, path: String,
       s: Int = 6): Unit =
-    QuantileHistogram.histState(corpus, valueCol, s)
-      .withColumn("ingest_batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("ingest_batch")
-      .parquet(s"$path/qhist")
+    SegmentStore.writeSegment(QuantileHistogram.histState(corpus, valueCol,
+      s), -1L, s"$path/qhist")
 
   /** The foreachBatch body: returns the running quantile rows INCLUDING
     * this batch (eager), then appends the batch's state idempotently.
@@ -45,17 +43,14 @@ object StreamingQuantiles {
     val spark = batch.sparkSession
     val batchState = QuantileHistogram.histState(batch, valueCol, s)
       .localCheckpoint(true) // consumed by the resolve AND the append
-    val standing = spark.read.parquet(s"$path/qhist")
-      .filter(col("ingest_batch") =!= batchId)
+    val standing = SegmentStore.read(spark, s"$path/qhist", Some(batchId))
       .select(col("bucket_id"), col("cnt"), col("v_min"), col("v_max"))
     val out = QuantileHistogram.quantiles(
       QuantileHistogram.histMergeState(standing.unionByName(batchState)),
       qPpm)
       .localCheckpoint(true) // eager: resolve before this batch lands
-    batchState.withColumn("ingest_batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch").parquet(s"$path/qhist")
+    SegmentStore.writeSegment(batchState, batchId, s"$path/qhist",
+      dynamic = true)
     out
   }
 
@@ -63,20 +58,20 @@ object StreamingQuantiles {
   def quantiles(spark: SparkSession, path: String,
       qPpm: Seq[Long]): DataFrame =
     QuantileHistogram.quantiles(
-      QuantileHistogram.histMergeState(spark.read.parquet(s"$path/qhist")
-        .select(col("bucket_id"), col("cnt"), col("v_min"), col("v_max"))),
+      QuantileHistogram.histMergeState(
+        SegmentStore.read(spark, s"$path/qhist").select(col("bucket_id"),
+          col("cnt"), col("v_min"), col("v_max"))),
       qPpm)
 
-  /** Fold every standing partition back into `ingest_batch = -1`. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val folded = QuantileHistogram.histMergeState(
-      spark.read.parquet(s"$path/qhist")
-        .select(col("bucket_id"), col("cnt"), col("v_min"), col("v_max")))
-      .localCheckpoint(true) // read fully before overwriting the tree
-    folded.withColumn("ingest_batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("ingest_batch")
-      .parquet(s"$path/qhist")
-  }
+  /** Fold every standing segment back into `ingest_batch = -1`
+    * ([[SegmentStore.foldPrefix]] with `upTo = Long.MaxValue`).
+    */
+  def compact(spark: SparkSession, path: String): Unit =
+    SegmentStore.foldPrefix(spark, s"$path/qhist", Long.MaxValue,
+      QuantileHistogram.histMergeState(
+        SegmentStore.read(spark, s"$path/qhist").select(col("bucket_id"),
+          col("cnt"), col("v_min"), col("v_max")))
+        .localCheckpoint(true)) // read fully before the fold swaps it in
 
   /** Wire a value stream to the store. */
   def attach(values: DataFrame, valueCol: String, qPpm: Seq[Long],

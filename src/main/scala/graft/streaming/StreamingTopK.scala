@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{CountMinSketch, MisraGriesAggregator}
+import graft.operators.{CountMinSketch, MisraGriesAggregator, SegmentStore}
 
 /** Streaming top-k store — running heavy-hitter estimates with CERTIFIED
   * two-sided bounds over an unbounded stream, composing the two
@@ -23,14 +23,14 @@ import graft.operators.{CountMinSketch, MisraGriesAggregator}
   * summary kept it. Both bounds ride the output so callers can act on
   * certainties, not vibes.
   *
-  * EXACTLY-ONCE: the sibling stores' recipe — per-batch MG rows and CMS
-  * cells land under `ingest_batch` dynamic partition overwrite; replays
-  * overwrite their own partition; reads partition-prune the in-flight
-  * batch. State grows by ≤ mgCapacity + d×m rows per batch; [[compact]]
-  * folds the CMS losslessly and the MG summaries with the Agarwal et
-  * al. (PODS 2012) cut rule — the candidate set shrinks back to
-  * mgCapacity and the (recorded) miss bound grows by the cut, exactly
-  * as the mergeable-summaries analysis prices it.
+  * EXACTLY-ONCE: per-batch MG rows and CMS cells are [[SegmentStore]]
+  * segments keyed by `ingest_batch`; replays overwrite their own
+  * segment; reads partition-prune the in-flight batch. State grows by
+  * ≤ mgCapacity + d×m rows per batch; [[compact]] folds the CMS
+  * losslessly and the MG summaries with the Agarwal et al. (PODS 2012)
+  * cut rule — the candidate set shrinks back to mgCapacity and the
+  * (recorded) miss bound grows by the cut, exactly as the
+  * mergeable-summaries analysis prices it.
   */
 object StreamingTopK {
 
@@ -55,14 +55,10 @@ object StreamingTopK {
     */
   def initStore(corpus: DataFrame, valueCol: String, path: String,
       mgCapacity: Int = 64, d: Int = 4, m: Int = 1024): Unit = {
-    mgSummary(corpus, valueCol, mgCapacity)
-      .withColumn("ingest_batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("ingest_batch")
-      .parquet(s"$path/mg")
-    CountMinSketch.cmsState(corpus, valueCol, d, m)
-      .withColumn("ingest_batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("ingest_batch")
-      .parquet(s"$path/cms")
+    SegmentStore.writeSegment(mgSummary(corpus, valueCol, mgCapacity), -1L,
+      s"$path/mg")
+    SegmentStore.writeSegment(CountMinSketch.cmsState(corpus, valueCol, d,
+      m), -1L, s"$path/cms")
   }
 
   /** The foreachBatch body: returns the running top-k INCLUDING this
@@ -76,12 +72,8 @@ object StreamingTopK {
       .localCheckpoint(true) // consumed by the top-k AND the append
     val batchCms = CountMinSketch.cmsState(batch, valueCol, d, m)
       .localCheckpoint(true)
-    val standingMg = spark.read.parquet(s"$path/mg")
-      .filter(col("ingest_batch") =!= batchId)
-      .select(col("tok"), col("min_count"), col("err_bound"),
-        col("ingest_batch"))
-    val standingCms = spark.read.parquet(s"$path/cms")
-      .filter(col("ingest_batch") =!= batchId)
+    val standingMg = SegmentStore.read(spark, s"$path/mg", Some(batchId))
+    val standingCms = SegmentStore.read(spark, s"$path/cms", Some(batchId))
       .select(col("row_id"), col("bucket"), col("cnt"))
     val out = resolveTopK(
       standingMg.unionByName(
@@ -89,14 +81,9 @@ object StreamingTopK {
       CountMinSketch.cmsMergeState(standingCms.unionByName(batchCms)),
       k, d, m)
       .localCheckpoint(true) // eager: resolve before this batch lands
-    batchMg.withColumn("ingest_batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch").parquet(s"$path/mg")
-    batchCms.withColumn("ingest_batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch").parquet(s"$path/cms")
+    SegmentStore.writeSegment(batchMg, batchId, s"$path/mg", dynamic = true)
+    SegmentStore.writeSegment(batchCms, batchId, s"$path/cms",
+      dynamic = true)
     out
   }
 
@@ -104,10 +91,8 @@ object StreamingTopK {
   def topk(spark: SparkSession, path: String, k: Int, d: Int = 4,
       m: Int = 1024): DataFrame =
     resolveTopK(
-      spark.read.parquet(s"$path/mg")
-        .select(col("tok"), col("min_count"), col("err_bound"),
-          col("ingest_batch")),
-      CountMinSketch.cmsMergeState(spark.read.parquet(s"$path/cms")
+      SegmentStore.read(spark, s"$path/mg"),
+      CountMinSketch.cmsMergeState(SegmentStore.read(spark, s"$path/cms")
         .select(col("row_id"), col("bucket"), col("cnt"))),
       k, d, m)
 
@@ -135,17 +120,16 @@ object StreamingTopK {
       .limit(k)
   }
 
-  /** Fold the store back into `ingest_batch = -1`: the CMS folds
-    * losslessly (per-cell sums); the MG union folds with the PODS'12
-    * cut — keep the mgCapacity largest summed counters, subtract the
-    * (mgCapacity+1)-th, and RECORD the grown miss bound on every row.
+  /** Fold the store back into `ingest_batch = -1`
+    * ([[SegmentStore.foldPrefix]] with `upTo = Long.MaxValue`): the CMS
+    * folds losslessly (per-cell sums); the MG union folds with the
+    * PODS'12 cut — keep the mgCapacity largest summed counters,
+    * subtract the (mgCapacity+1)-th, and RECORD the grown miss bound on
+    * every row.
     */
   def compact(spark: SparkSession, path: String,
       mgCapacity: Int = 64): Unit = {
-    val mgAll = spark.read.parquet(s"$path/mg")
-      .select(col("tok"), col("min_count"), col("err_bound"),
-        col("ingest_batch"))
-      .localCheckpoint(true)
+    val mgAll = SegmentStore.read(spark, s"$path/mg").localCheckpoint(true)
     val summed = mgAll.groupBy(col("tok"))
       .agg(sum(col("min_count")).as("c"))
       .orderBy(col("c").desc, col("tok"))
@@ -156,25 +140,21 @@ object StreamingTopK {
       .agg(max(col("err_bound")).as("eb"))
       .agg(coalesce(sum(col("eb")), lit(0L)).as("mb"))
       .collect().head.getLong(0) + cut
-    // zero-count survivors stay (0 is a valid lower bound): dropping
-    // them could empty the summary on an all-ties cut and leave an
-    // unreadable store
+    // zero-count survivors stay (0 is a valid lower bound): each is
+    // still a candidate that the top-k ranks by its CMS estimate, and
+    // the summary's rows carry the recorded miss bound — an all-ties
+    // cut that emptied it would drop the bound to 0
     val kept = summed.take(mgCapacity)
       .map(r => (r.getString(0), math.max(r.getLong(1) - cut, 0L)))
     import spark.implicits._
-    val folded = kept.toSeq.toDF("tok", "min_count")
-      .withColumn("err_bound", lit(missBound))
-      .localCheckpoint(true)
-    folded.withColumn("ingest_batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("ingest_batch")
-      .parquet(s"$path/mg")
-    val cms = CountMinSketch.cmsMergeState(
-      spark.read.parquet(s"$path/cms")
-        .select(col("row_id"), col("bucket"), col("cnt")))
-      .localCheckpoint(true)
-    cms.withColumn("ingest_batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("ingest_batch")
-      .parquet(s"$path/cms")
+    SegmentStore.foldPrefix(spark, s"$path/mg", Long.MaxValue,
+      kept.toSeq.toDF("tok", "min_count")
+        .withColumn("err_bound", lit(missBound))
+        .localCheckpoint(true))
+    SegmentStore.foldPrefix(spark, s"$path/cms", Long.MaxValue,
+      CountMinSketch.cmsMergeState(SegmentStore.read(spark, s"$path/cms")
+          .select(col("row_id"), col("bucket"), col("cnt")))
+        .localCheckpoint(true))
   }
 
   /** Wire a value stream to the store. */

@@ -1,15 +1,16 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
 /** The shared segment plumbing directly (beyond the store-level specs
   * that exercise it end-to-end): exactly-once dynamic overwrite,
-  * empty-store-safe schema reads, replay pruning, metadata round-trip,
-  * and wipe.
+  * the schema record behind empty-store-safe reads, replay pruning,
+  * metadata round-trip, and wipe.
   */
 class SegmentStoreSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -18,6 +19,10 @@ class SegmentStoreSpec extends AnyFunSuite {
   private val Schema = StructType(Seq(
     StructField("k", LongType), StructField("v", LongType),
     StructField("ingest_batch", LongType)))
+
+  private def schemaOf(path: String) =
+    StructType(SegmentStore.read(spark, path).schema
+      .map(_.copy(nullable = true)))
 
   private def tmp() =
     java.nio.file.Files.createTempDirectory("segstore").toString + "/s"
@@ -34,16 +39,16 @@ class SegmentStoreSpec extends AnyFunSuite {
     // the bootstrap and batch-1 segments are untouched
     SegmentStore.writeSegment(Seq((2L, 99L)).toDF("k", "v"), 0L, path,
       dynamic = true)
-    val got = SegmentStore.read(spark, path, Schema)
+    val got = SegmentStore.read(spark, path)
       .as[(Long, Long, Long)].collect().toSet
     assert(got == Set((1L, 10L, -1L), (2L, 99L, 0L), (3L, 30L, 1L)))
     // replay pruning: the excluded batch's rows vanish from the read
-    assert(SegmentStore.read(spark, path, Schema, excludeBatch = Some(0L))
+    assert(SegmentStore.read(spark, path, excludeBatch = Some(0L))
       .as[(Long, Long, Long)].collect().toSet ==
       Set((1L, 10L, -1L), (3L, 30L, 1L)))
     // static overwrite (a bootstrap write) replaces everything
     SegmentStore.writeSegment(Seq((9L, 90L)).toDF("k", "v"), -1L, path)
-    assert(SegmentStore.read(spark, path, Schema)
+    assert(SegmentStore.read(spark, path)
       .as[(Long, Long, Long)].collect().toSet == Set((9L, 90L, -1L)))
   }
 
@@ -52,11 +57,11 @@ class SegmentStoreSpec extends AnyFunSuite {
     val path = tmp()
     SegmentStore.writeSegment(
       Seq.empty[(Long, Long)].toDF("k", "v"), -1L, path)
-    assert(SegmentStore.read(spark, path, Schema).count() == 0L)
+    assert(SegmentStore.read(spark, path).count() == 0L)
     // and a later append makes it non-empty without ceremony
     SegmentStore.writeSegment(Seq((5L, 50L)).toDF("k", "v"), 0L, path,
       dynamic = true)
-    assert(SegmentStore.read(spark, path, Schema).count() == 1L)
+    assert(SegmentStore.read(spark, path).count() == 1L)
   }
 
   test("metadata round-trip: absent -> None, write/overwrite/read, " +
@@ -70,7 +75,7 @@ class SegmentStoreSpec extends AnyFunSuite {
     SegmentStore.writeMeta(spark, path, "depth", 7L)
     assert(SegmentStore.readMeta(spark, path, "depth").contains(7L))
     // the parquet read ignores the underscore-prefixed metadata file
-    assert(SegmentStore.read(spark, path, Schema).count() == 1L)
+    assert(SegmentStore.read(spark, path).count() == 1L)
     SegmentStore.writeSegment(Seq((2L, 20L)).toDF("k", "v"), -1L, path)
     assert(SegmentStore.readMeta(spark, path, "depth").isEmpty,
       "static overwrite must clear store metadata")
@@ -106,7 +111,7 @@ class SegmentStoreSpec extends AnyFunSuite {
     SegmentStore.writeSegment(Seq((3L, 9L)).toDF("k", "v"), 2L, path,
       dynamic = true)
     def view(): Set[(Long, Long, Long)] =
-      SegmentStore.read(spark, path, Schema)
+      SegmentStore.read(spark, path)
         .as[(Long, Long, Long)].collect().toSet
     val before = view()
     // the folded replacement for segments {-1, 0, 1}: summed per key
@@ -143,9 +148,37 @@ class SegmentStoreSpec extends AnyFunSuite {
       dynamic = true)
     SegmentStore.foldPrefix(spark, p2, 1L,
       Seq((1L, 15L), (2L, 7L)).toDF("k", "v").localCheckpoint(true))
-    assert(SegmentStore.read(spark, p2, Schema)
+    assert(SegmentStore.read(spark, p2)
       .as[(Long, Long, Long)].collect().toSet == foldedView)
     assert(SegmentStore.segmentIds(spark, p2).sorted == Seq(-1L, 2L))
+  }
+
+  test("a fold of everything that crashed after its commit point hides " +
+      "no later append, and the next fold heals it without losing one") {
+    val path = tmp()
+    SegmentStore.writeSegment(Seq((1L, 10L)).toDF("k", "v"), -1L, path)
+    SegmentStore.writeSegment(Seq((1L, 5L)).toDF("k", "v"), 0L, path,
+      dynamic = true)
+    SegmentStore.writeSegment(Seq((2L, 7L)).toDF("k", "v"), 1L, path,
+      dynamic = true)
+    def view(): Set[(Long, Long, Long)] =
+      SegmentStore.read(spark, path)
+        .as[(Long, Long, Long)].collect().toSet
+    // the fold stops at its commit point; the marker names the last
+    // segment it covered, not the unbounded upTo
+    SegmentStore.commitFold(spark, path, Long.MaxValue,
+      Seq((1L, 15L), (2L, 7L)).toDF("k", "v").localCheckpoint(true), Nil)
+    assert(SegmentStore.pendingFoldUpto(spark, path).contains(1L))
+    // the stream appends before anything heals the store
+    SegmentStore.writeSegment(Seq((3L, 9L)).toDF("k", "v"), 2L, path,
+      dynamic = true)
+    assert(view() == Set((1L, 15L, -1L), (2L, 7L, -1L), (3L, 9L, 2L)))
+    SegmentStore.foldPrefix(spark, path, Long.MaxValue,
+      SegmentStore.read(spark, path).drop("ingest_batch")
+        .localCheckpoint(true))
+    assert(view() == Set((1L, 15L, -1L), (2L, 7L, -1L), (3L, 9L, -1L)))
+    assert(SegmentStore.segmentIds(spark, path) == Seq(-1L))
+    assert(SegmentStore.pendingFoldUpto(spark, path).isEmpty)
   }
 
   test("checkedFold decision core: full fold when everything is " +
@@ -186,6 +219,54 @@ class SegmentStoreSpec extends AnyFunSuite {
     ran = ""
     assert(run(store(), ckptWith(0L, 1L)) == SegmentStore.Compacted)
     assert(ran == "full")
+  }
+
+  test("the schema record survives dynamic appends and foldPrefix " +
+      "(a zero-row fold included), and a static replace rewrites it") {
+    val path = tmp()
+    SegmentStore.writeSegment(
+      Seq.empty[(Long, Long)].toDF("k", "v"), -1L, path)
+    assert(schemaOf(path) == Schema)
+    SegmentStore.writeSegment(Seq((2L, 20L)).toDF("k", "v"), 0L, path,
+      dynamic = true)
+    SegmentStore.writeSegment(Seq((3L, 30L)).toDF("k", "v"), 1L, path,
+      dynamic = true)
+    assert(schemaOf(path) == Schema, "dynamic appends keep the record")
+    SegmentStore.foldPrefix(spark, path, 0L,
+      Seq((2L, 20L)).toDF("k", "v").localCheckpoint(true))
+    assert(schemaOf(path) == Schema, "a fold keeps the record")
+    assert(SegmentStore.read(spark, path).as[(Long, Long, Long)].collect()
+      .toSet == Set((2L, 20L, -1L), (3L, 30L, 1L)))
+    // an all-empty store folds through the zero-row branch
+    val empty = tmp()
+    SegmentStore.writeSegment(
+      Seq.empty[(Long, Long)].toDF("k", "v"), -1L, empty)
+    SegmentStore.foldPrefix(spark, empty, Long.MaxValue,
+      SegmentStore.read(spark, empty).drop("ingest_batch")
+        .localCheckpoint(true))
+    assert(schemaOf(empty) == Schema, "a zero-row fold keeps the record")
+    assert(SegmentStore.read(spark, empty).count() == 0L)
+    // a static replace records the new frame's columns; `replace`
+    // takes rows that already carry their segment ids
+    SegmentStore.writeSegment(Seq((1L, "a")).toDF("k", "w"), -1L, path)
+    val kw = StructType(Seq(StructField("k", LongType),
+      StructField("w", StringType), StructField("ingest_batch", LongType)))
+    assert(schemaOf(path) == kw)
+    SegmentStore.replace(
+      Seq((5L, -1L, "x"), (6L, 4L, "y")).toDF("k", "ingest_batch", "w"),
+      path)
+    assert(schemaOf(path) == kw)
+    assert(SegmentStore.read(spark, path).as[(Long, String, Long)]
+      .collect().toSet == Set((5L, "x", -1L), (6L, "y", 4L)))
+  }
+
+  test("a directory without a schema record fails loudly, naming its " +
+      "path") {
+    val path = tmp()
+    Seq((1L, 10L)).toDF("k", "v").write.parquet(path)
+    val e = intercept[IllegalStateException](
+      SegmentStore.read(spark, path))
+    assert(e.getMessage.contains(path), e.getMessage)
   }
 
   test("wipe deletes the store on its own filesystem and is a no-op " +

@@ -130,6 +130,29 @@ class StreamingAnnIngestSpec extends AnyFunSuite {
       s"batch 1 must probe exactly batch 0's vectors: ${next.toSeq}")
   }
 
+  test("an all-empty ANN ingest store folds: compactPrefix reads the " +
+    "recorded schema instead of inferring one, and the folded store " +
+    "keeps serving") {
+    import graft.operators.SegmentStore
+    val mdl = IvfPq.train(clustered.filter($"id" < 400), nlist = 16,
+      m = 4, ksub = 16)
+    val dir = java.nio.file.Files.createTempDirectory("sannemptyfold")
+      .toString + "/store"
+    StreamingAnnIngest.initStore(clustered.filter($"id" < 0L), mdl, dir)
+    StreamingAnnIngest.compactPrefix(spark, dir, Long.MaxValue)
+    val batch0 = clustered.filter($"id" >= 400 && $"id" % 2 === 0)
+    val batch1 = clustered.filter($"id" >= 400 && $"id" % 2 === 1)
+    assert(StreamingAnnIngest.processBatch(batch0, batchId = 0L, dir,
+      k = 3, model = Some(mdl)).count() == 0L)
+    StreamingAnnIngest.compactPrefix(spark, dir, Long.MaxValue)
+    assert(SegmentStore.segmentIds(spark, s"$dir/vectors") == Seq(-1L))
+    val next = StreamingAnnIngest.processBatch(batch1, batchId = 1L, dir,
+        k = 3, model = Some(mdl))
+      .select("query_id", "neighbor_id").as[(Long, Long)].collect()
+    assert(next.nonEmpty && next.forall(_._2 % 2 == 0L),
+      s"batch 1 must probe exactly batch 0's folded vectors: ${next.toSeq}")
+  }
+
   test("committed-prefix fold (under-load compaction, vector grain): " +
     "with a replayable tail the trigger folds ONLY the committed " +
     "segments of codes AND vectors, serving is unchanged, the tail's " +

@@ -52,26 +52,29 @@ class StreamingCdcDedupSpec extends AnyFunSuite {
   test("replay idempotence: reprocessing a batch leaves the store and a " +
     "later batch's matches unchanged") {
     val boiler = prose("c", 60)
-    val corpus = Seq((0L, prose("z", 40))).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("scdcr").toString
-    StreamingCdcDedup.initStore(corpus, "doc_id", "text", s"$dir/frags")
-    val batch = Seq((100L, boiler)).toDF("doc_id", "text")
-    def run() = StreamingCdcDedup.processBatch(batch, 0L, "doc_id", "text",
-      s"$dir/frags").count()
-    assert(run() == 0L)
-    val rows = spark.read.parquet(s"$dir/frags").count()
-    assert(run() == 0L) // replay: no self-matches
-    assert(spark.read.parquet(s"$dir/frags").count() == rows)
-    // one row per shared FRAGMENT (chunk grain), each exactly once: a
-    // replayed batch 0 would double every (chunk_hash, standing, new) row
-    val m2 = StreamingCdcDedup.processBatch(
-      Seq((200L, boiler)).toDF("doc_id", "text"), 1L, "doc_id", "text",
-      s"$dir/frags")
-      .select("chunk_hash", "id_standing", "chunk_id_standing", "id_new",
-        "chunk_id_new")
-      .as[(Long, Long, Long, Long, Long)].collect()
-    assert(m2.nonEmpty && m2.forall(r => r._2 == 100L && r._4 == 200L))
-    assert(m2.length == m2.distinct.length,
-      "duplicate fragment matches — replayed chunks leaked")
+    // the empty bootstrap: the first batch reads a store with no data
+    for (corpus <- Seq(Seq((0L, prose("z", 40))), Seq.empty[(Long, String)])) {
+      val dir = java.nio.file.Files.createTempDirectory("scdcr").toString
+      StreamingCdcDedup.initStore(corpus.toDF("doc_id", "text"), "doc_id",
+        "text", s"$dir/frags")
+      val batch = Seq((100L, boiler)).toDF("doc_id", "text")
+      def run() = StreamingCdcDedup.processBatch(batch, 0L, "doc_id",
+        "text", s"$dir/frags").count()
+      assert(run() == 0L)
+      val rows = spark.read.parquet(s"$dir/frags").count()
+      assert(run() == 0L) // replay: no self-matches
+      assert(spark.read.parquet(s"$dir/frags").count() == rows)
+      // one row per shared FRAGMENT (chunk grain), each exactly once: a
+      // replayed batch 0 would double every (chunk_hash, standing, new) row
+      val m2 = StreamingCdcDedup.processBatch(
+        Seq((200L, boiler)).toDF("doc_id", "text"), 1L, "doc_id", "text",
+        s"$dir/frags")
+        .select("chunk_hash", "id_standing", "chunk_id_standing", "id_new",
+          "chunk_id_new")
+        .as[(Long, Long, Long, Long, Long)].collect()
+      assert(m2.nonEmpty && m2.forall(r => r._2 == 100L && r._4 == 200L))
+      assert(m2.length == m2.distinct.length,
+        "duplicate fragment matches — replayed chunks leaked")
+    }
   }
 }

@@ -358,11 +358,9 @@ class StreamingCorpusSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     def probePairs(): Set[(Long, Long)] =
       Dedup.incrementalMinhashPairs(late,
-          SegmentStore.read(spark, txtP, SegmentStore.schemaOf(late))
-            .drop("ingest_batch"),
-          SegmentStore.read(spark, idxP, SegmentStore.schemaOf(
-            Dedup.minhashIndex(late, "doc_id", "text"))),
-          "doc_id", "text", threshold = 0.5)
+          SegmentStore.read(spark, txtP).drop("ingest_batch"),
+          SegmentStore.read(spark, idxP), "doc_id", "text",
+          threshold = 0.5)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val before = probePairs()
     assert(before.contains((0L, 200L)) && before.contains((110L, 201L)))
@@ -501,6 +499,44 @@ class StreamingCorpusSpec extends AnyFunSuite {
       idxP, txtP, threshold = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(next.contains((100L, 200L)), s"cross-batch pairs: $next")
+  }
+
+  test("an all-empty minhash store folds: compactPrefix(Long.MaxValue) " +
+    "and a firing maybeCompactChecked read the recorded schema instead " +
+    "of inferring one, and the folded store keeps serving") {
+    import spark.implicits._
+    import graft.operators.SegmentStore
+    val base = "the quick brown fox jumps over the lazy dog " * 8
+    val dir = java.nio.file.Files.createTempDirectory("smhef").toString
+    val (idxP, txtP) = (s"$dir/index", s"$dir/texts")
+    StreamingMinhashDedup.initIndex(
+      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text",
+      idxP, txtP)
+    StreamingMinhashDedup.compactPrefix(spark, idxP, txtP, Long.MaxValue)
+    val ckpt = java.nio.file.Files.createTempDirectory("smhefck")
+    // a negative threshold fires on any segment count, the all-empty
+    // store's zero included; with nothing appended the fold is full
+    assert(StreamingMinhashDedup.maybeCompactChecked(spark, idxP, txtP,
+      ckpt.toString, maxSegments = -1L) == SegmentStore.Compacted)
+    val pairs = StreamingMinhashDedup.processBatch(
+      Seq((100L, base.trim), (101L, base.trim.replace("lazy", "sleepy")))
+        .toDF("doc_id", "text"), 0L, "doc_id", "text", idxP, txtP,
+      threshold = 0.5)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(pairs == Set((100L, 101L)), s"batch-internal pairs: $pairs")
+    // batch 0 committed: the trigger fires and folds it into -1
+    java.nio.file.Files.createDirectories(ckpt.resolve("commits"))
+    java.nio.file.Files.writeString(
+      ckpt.resolve("commits").resolve("0"), "v1\n{}")
+    assert(StreamingMinhashDedup.maybeCompactChecked(spark, idxP, txtP,
+      ckpt.toString, maxSegments = 0L) == SegmentStore.Compacted)
+    assert(SegmentStore.segmentIds(spark, idxP) == Seq(-1L))
+    val next = StreamingMinhashDedup.processBatch(
+      Seq((200L, base.trim)).toDF("doc_id", "text"), 1L, "doc_id", "text",
+      idxP, txtP, threshold = 0.5)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(next == Set((100L, 200L), (101L, 200L)),
+      s"cross-batch pairs after the fold: $next")
   }
 
   test("minhash store segments are flat: parquet files directly under " +

@@ -19,24 +19,26 @@ class StreamingDistinctSpec extends AnyFunSuite {
     (from until until).map(i => s"$tag$i").toDF("v")
 
   test("cross-batch merge equals the batch sketch of the whole corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("sdis").toString
-    val corpus = vals("a", 0, 3000)
-    val b1 = vals("a", 2000, 5000) // overlaps the bootstrap
-    val b2 = vals("b", 0, 1500)
-    StreamingDistinct.initStore(corpus, "v", dir)
-    StreamingDistinct.processBatch(b1, 1L, "v", dir)
-    val est = StreamingDistinct.processBatch(b2, 2L, "v", dir)
-      .collect().head
-    val whole = corpus.union(b1).union(b2)
-    val kmvB = CardinalitySketch.kmvEstimate(whole, "v").collect().head
-    val hllB = CardinalitySketch.hllEstimate(whole, "v").collect().head
-    assert((est.getLong(0), est.getLong(1), est.getLong(2)) ==
-      (kmvB.getLong(0), kmvB.getLong(1), kmvB.getLong(2)))
-    assert((est.getLong(3), est.getLong(4), est.getLong(5)) ==
-      (hllB.getLong(0), hllB.getLong(1), hllB.getLong(2)))
-    // and the store-level estimate (after the appends) agrees too
-    val st = StreamingDistinct.estimate(spark, dir).collect().head
-    assert(st == est)
+    // the empty bootstrap: the first batch reads a store with no data
+    for (corpus <- Seq(vals("a", 0, 3000), vals("a", 0, 0))) {
+      val dir = java.nio.file.Files.createTempDirectory("sdis").toString
+      val b1 = vals("a", 2000, 5000) // overlaps the bootstrap
+      val b2 = vals("b", 0, 1500)
+      StreamingDistinct.initStore(corpus, "v", dir)
+      StreamingDistinct.processBatch(b1, 1L, "v", dir)
+      val est = StreamingDistinct.processBatch(b2, 2L, "v", dir)
+        .collect().head
+      val whole = corpus.union(b1).union(b2)
+      val kmvB = CardinalitySketch.kmvEstimate(whole, "v").collect().head
+      val hllB = CardinalitySketch.hllEstimate(whole, "v").collect().head
+      assert((est.getLong(0), est.getLong(1), est.getLong(2)) ==
+        (kmvB.getLong(0), kmvB.getLong(1), kmvB.getLong(2)))
+      assert((est.getLong(3), est.getLong(4), est.getLong(5)) ==
+        (hllB.getLong(0), hllB.getLong(1), hllB.getLong(2)))
+      // and the store-level estimate (after the appends) agrees too
+      val st = StreamingDistinct.estimate(spark, dir).collect().head
+      assert(st == est)
+    }
   }
 
   test("replay idempotence: reprocessing a batch changes nothing") {
@@ -54,26 +56,28 @@ class StreamingDistinctSpec extends AnyFunSuite {
   }
 
   test("compaction shrinks the store but moves no estimate") {
-    val dir = java.nio.file.Files.createTempDirectory("sdisc").toString
-    StreamingDistinct.initStore(vals("p", 0, 2000), "v", dir)
-    (1 to 4).foreach(i =>
-      StreamingDistinct.processBatch(vals(s"q$i", 0, 900), i.toLong, "v", dir))
-    val before = StreamingDistinct.estimate(spark, dir).collect().head
-    val rowsBefore = spark.read.parquet(s"$dir/kmv").count()
-    StreamingDistinct.compact(spark, dir)
-    val after = StreamingDistinct.estimate(spark, dir).collect().head
-    assert(after == before)
-    assert(spark.read.parquet(s"$dir/kmv").count() <= 256)
-    assert(spark.read.parquet(s"$dir/kmv").count() < rowsBefore)
-    assert(spark.read.parquet(s"$dir/hll").count() <= 256)
-    // a batch landing after compaction still merges correctly
-    val e = StreamingDistinct.processBatch(vals("r", 0, 500), 9L, "v", dir)
-      .collect().head
-    val whole = vals("p", 0, 2000)
-      .union((1 to 4).map(i => vals(s"q$i", 0, 900)).reduce(_ union _))
-      .union(vals("r", 0, 500))
-    val kmvB = CardinalitySketch.kmvEstimate(whole, "v").collect().head
-    assert(e.getLong(2) == kmvB.getLong(2))
+    for (boot <- Seq(vals("p", 0, 2000), vals("p", 0, 0))) {
+      val dir = java.nio.file.Files.createTempDirectory("sdisc").toString
+      StreamingDistinct.initStore(boot, "v", dir)
+      (1 to 4).foreach(i => StreamingDistinct.processBatch(
+        vals(s"q$i", 0, 900), i.toLong, "v", dir))
+      val before = StreamingDistinct.estimate(spark, dir).collect().head
+      val rowsBefore = spark.read.parquet(s"$dir/kmv").count()
+      StreamingDistinct.compact(spark, dir)
+      val after = StreamingDistinct.estimate(spark, dir).collect().head
+      assert(after == before)
+      assert(spark.read.parquet(s"$dir/kmv").count() <= 256)
+      assert(spark.read.parquet(s"$dir/kmv").count() < rowsBefore)
+      assert(spark.read.parquet(s"$dir/hll").count() <= 256)
+      // a batch landing after compaction still merges correctly
+      val e = StreamingDistinct.processBatch(vals("r", 0, 500), 9L, "v", dir)
+        .collect().head
+      val whole = boot
+        .union((1 to 4).map(i => vals(s"q$i", 0, 900)).reduce(_ union _))
+        .union(vals("r", 0, 500))
+      val kmvB = CardinalitySketch.kmvEstimate(whole, "v").collect().head
+      assert(e.getLong(2) == kmvB.getLong(2))
+    }
   }
 
   test("attach: running estimates arrive per micro-batch and grow") {

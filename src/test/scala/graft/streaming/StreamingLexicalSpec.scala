@@ -28,18 +28,22 @@ class StreamingLexicalSpec extends AnyFunSuite {
       .collect().map(r => r._1 -> r).toMap
 
   test("incremental card == batch card of the concatenation, bitwise") {
-    val dir = java.nio.file.Files.createTempDirectory("slex").toString
-    StreamingLexical.initStore(boot, "source", "doc_id", "text", dir)
-    StreamingLexical.processBatch(b1, 1L, "source", "doc_id", "text", dir)
-    val inc = cardMap(
-      StreamingLexical.processBatch(b2, 2L, "source", "doc_id", "text", dir))
-    val whole = boot.union(b1).union(b2)
-    val batch = cardMap(Lexical.corpusCard(
-      Lexical.wordCounts(whole, "source", "text"),
-      Lexical.dupLedger(whole, "source", "text")))
-    assert(inc == batch) // exact, entropy double included
-    assert(batch("s0")._4 > 0L) // the duplicated doc shows up as dup_ppm
-    assert(cardMap(StreamingLexical.report(spark, dir)) == inc)
+    // the empty bootstrap: the first batch reads a store with no data;
+    // without the bootstrap's duplicated doc no dup_ppm shows
+    for ((corpus, dups) <- Seq(boot -> true, docs() -> false)) {
+      val dir = java.nio.file.Files.createTempDirectory("slex").toString
+      StreamingLexical.initStore(corpus, "source", "doc_id", "text", dir)
+      StreamingLexical.processBatch(b1, 1L, "source", "doc_id", "text", dir)
+      val inc = cardMap(StreamingLexical.processBatch(b2, 2L, "source",
+        "doc_id", "text", dir))
+      val whole = corpus.union(b1).union(b2)
+      val batch = cardMap(Lexical.corpusCard(
+        Lexical.wordCounts(whole, "source", "text"),
+        Lexical.dupLedger(whole, "source", "text")))
+      assert(inc == batch) // exact, entropy double included
+      assert((batch("s0")._4 > 0L) == dups) // the duplicated doc: dup_ppm
+      assert(cardMap(StreamingLexical.report(spark, dir)) == inc)
+    }
   }
 
   test("zipfReport off the store == batch zipfSlope of the concatenation") {
@@ -71,27 +75,29 @@ class StreamingLexicalSpec extends AnyFunSuite {
   }
 
   test("replay idempotence and compaction invariance") {
-    val dir = java.nio.file.Files.createTempDirectory("slexr").toString
-    StreamingLexical.initStore(boot, "source", "doc_id", "text", dir)
-    val e1 = cardMap(
-      StreamingLexical.processBatch(b1, 1L, "source", "doc_id", "text", dir))
-    val e2 = cardMap(
-      StreamingLexical.processBatch(b1, 1L, "source", "doc_id", "text", dir))
-    assert(e1 == e2)
-    val rows = spark.read.parquet(s"$dir/wc").count()
-    StreamingLexical.processBatch(b1, 1L, "source", "doc_id", "text", dir)
-    assert(spark.read.parquet(s"$dir/wc").count() == rows)
-    StreamingLexical.processBatch(b2, 2L, "source", "doc_id", "text", dir)
-    val before = cardMap(StreamingLexical.report(spark, dir))
-    val heapsBefore = StreamingLexical.heapsReport(spark, dir, points = 3)
-      .as[(String, Long, Long, Long, Double, Double)].collect().toSet
-    StreamingLexical.compact(spark, dir)
-    assert(cardMap(StreamingLexical.report(spark, dir)) == before)
-    assert(StreamingLexical.heapsReport(spark, dir, points = 3)
-      .as[(String, Long, Long, Long, Double, Double)].collect().toSet
-      == heapsBefore)
-    // compaction collapsed to the bootstrap partition only
-    assert(spark.read.parquet(s"$dir/wc")
-      .select("ingest_batch").distinct().as[Long].collect().toSeq == Seq(-1L))
+    for (corpus <- Seq(boot, docs())) {
+      val dir = java.nio.file.Files.createTempDirectory("slexr").toString
+      StreamingLexical.initStore(corpus, "source", "doc_id", "text", dir)
+      val e1 = cardMap(StreamingLexical.processBatch(b1, 1L, "source",
+        "doc_id", "text", dir))
+      val e2 = cardMap(StreamingLexical.processBatch(b1, 1L, "source",
+        "doc_id", "text", dir))
+      assert(e1 == e2)
+      val rows = spark.read.parquet(s"$dir/wc").count()
+      StreamingLexical.processBatch(b1, 1L, "source", "doc_id", "text", dir)
+      assert(spark.read.parquet(s"$dir/wc").count() == rows)
+      StreamingLexical.processBatch(b2, 2L, "source", "doc_id", "text", dir)
+      val before = cardMap(StreamingLexical.report(spark, dir))
+      val heapsBefore = StreamingLexical.heapsReport(spark, dir, points = 3)
+        .as[(String, Long, Long, Long, Double, Double)].collect().toSet
+      StreamingLexical.compact(spark, dir)
+      assert(cardMap(StreamingLexical.report(spark, dir)) == before)
+      assert(StreamingLexical.heapsReport(spark, dir, points = 3)
+        .as[(String, Long, Long, Long, Double, Double)].collect().toSet
+        == heapsBefore)
+      // compaction collapsed to the bootstrap partition only
+      assert(spark.read.parquet(s"$dir/wc").select("ingest_batch")
+        .distinct().as[Long].collect().toSeq == Seq(-1L))
+    }
   }
 }

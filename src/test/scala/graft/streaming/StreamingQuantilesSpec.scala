@@ -23,24 +23,27 @@ class StreamingQuantilesSpec extends AnyFunSuite {
       r.getLong(3), r.getLong(4))).sortBy(_._1).toSeq
 
   test("cross-batch merge equals the batch histogram of the whole") {
-    val dir = java.nio.file.Files.createTempDirectory("sqnt").toString
-    val corpus = (1L to 2000L).map(i => i * 5).toDF("v")
-    val b1 = (500L to 1200L).toDF("v") // interleaves the bootstrap range
-    val b2 = (1L to 800L).map(i => i * i).toDF("v")
-    StreamingQuantiles.initStore(corpus, "v", dir, S)
-    StreamingQuantiles.processBatch(b1, 1L, "v", Qs, dir, S)
-    val est = rows(StreamingQuantiles.processBatch(b2, 2L, "v", Qs, dir, S))
-    val whole = corpus.union(b1).union(b2)
-    val batch = rows(QuantileHistogram.quantiles(
-      QuantileHistogram.histState(whole, "v", S), Qs))
-    assert(est == batch)
-    assert(rows(StreamingQuantiles.quantiles(spark, dir, Qs)) == est)
-    // sandwich vs the true order statistics of the concatenated corpus
-    val sorted = ((1L to 2000L).map(_ * 5) ++ (500L to 1200L) ++
-      (1L to 800L).map(i => i * i)).sorted
-    est.foreach { case (q, rank, _, lo, hi) =>
-      val truth = sorted((rank - 1).toInt)
-      assert(lo <= truth && truth <= hi, s"q=$q: $truth not in [$lo,$hi]")
+    // the empty bootstrap: the first batch reads a store with no data
+    for (boot <- Seq((1L to 2000L).map(i => i * 5), Seq.empty[Long])) {
+      val dir = java.nio.file.Files.createTempDirectory("sqnt").toString
+      val corpus = boot.toDF("v")
+      val b1 = (500L to 1200L).toDF("v") // interleaves the bootstrap range
+      val b2 = (1L to 800L).map(i => i * i).toDF("v")
+      StreamingQuantiles.initStore(corpus, "v", dir, S)
+      StreamingQuantiles.processBatch(b1, 1L, "v", Qs, dir, S)
+      val est = rows(StreamingQuantiles.processBatch(b2, 2L, "v", Qs, dir, S))
+      val whole = corpus.union(b1).union(b2)
+      val batch = rows(QuantileHistogram.quantiles(
+        QuantileHistogram.histState(whole, "v", S), Qs))
+      assert(est == batch)
+      assert(rows(StreamingQuantiles.quantiles(spark, dir, Qs)) == est)
+      // sandwich vs the true order statistics of the concatenated corpus
+      val sorted = (boot ++ (500L to 1200L) ++
+        (1L to 800L).map(i => i * i)).sorted
+      est.foreach { case (q, rank, _, lo, hi) =>
+        val truth = sorted((rank - 1).toInt)
+        assert(lo <= truth && truth <= hi, s"q=$q: $truth not in [$lo,$hi]")
+      }
     }
   }
 
@@ -57,15 +60,17 @@ class StreamingQuantilesSpec extends AnyFunSuite {
   }
 
   test("compaction shrinks the store but moves no quantile") {
-    val dir = java.nio.file.Files.createTempDirectory("sqntc").toString
-    StreamingQuantiles.initStore((1L to 1500L).toDF("v"), "v", dir, S)
-    (1 to 4).foreach(i => StreamingQuantiles.processBatch(
-      (1L to 400L).map(x => x * i).toDF("v"), i.toLong, "v", Qs, dir, S))
-    val before = rows(StreamingQuantiles.quantiles(spark, dir, Qs))
-    val nBefore = spark.read.parquet(s"$dir/qhist").count()
-    StreamingQuantiles.compact(spark, dir)
-    assert(rows(StreamingQuantiles.quantiles(spark, dir, Qs)) == before)
-    assert(spark.read.parquet(s"$dir/qhist").count() < nBefore)
+    for (boot <- Seq(1L to 1500L, Seq.empty[Long])) {
+      val dir = java.nio.file.Files.createTempDirectory("sqntc").toString
+      StreamingQuantiles.initStore(boot.toDF("v"), "v", dir, S)
+      (1 to 4).foreach(i => StreamingQuantiles.processBatch(
+        (1L to 400L).map(x => x * i).toDF("v"), i.toLong, "v", Qs, dir, S))
+      val before = rows(StreamingQuantiles.quantiles(spark, dir, Qs))
+      val nBefore = spark.read.parquet(s"$dir/qhist").count()
+      StreamingQuantiles.compact(spark, dir)
+      assert(rows(StreamingQuantiles.quantiles(spark, dir, Qs)) == before)
+      assert(spark.read.parquet(s"$dir/qhist").count() < nBefore)
+    }
   }
 
   test("attach: quantiles arrive per micro-batch and track the stream") {

@@ -79,25 +79,27 @@ class StreamingTopKSpec extends AnyFunSuite {
   }
 
   test("compaction keeps the top-k and records the grown miss bound") {
-    val dir = java.nio.file.Files.createTempDirectory("stkc").toString
-    StreamingTopK.initStore(
-      (Seq.fill(50)("big") ++ (0 until 20).map(i => s"s$i")).toDF("v"),
-      "v", dir, MG, D, M)
-    (1 to 3).foreach(i => StreamingTopK.processBatch(
-      (Seq.fill(20)("big") ++ (0 until 20).map(j => s"t$i-$j")).toDF("v"),
-      i.toLong, "v", dir, 3, MG, D, M))
-    val before = StreamingTopK.topk(spark, dir, 3, D, M).collect()
-    StreamingTopK.compact(spark, dir, MG)
-    val after = StreamingTopK.topk(spark, dir, 3, D, M).collect()
-    // the winner and its CMS estimate survive compaction unchanged
-    assert(after.head.getString(0) == "big" &&
-      after.head.getLong(2) == before.head.getLong(2))
-    assert(after.head.getLong(2) == 110L)
-    // candidate set folded to capacity; bound recorded and not shrunk
-    assert(spark.read.parquet(s"$dir/mg").count() <= MG)
-    assert(after.head.getLong(3) >= before.head.getLong(3))
-    // bounds still valid after compaction
-    assert(after.head.getLong(1) <= 110L)
+    // the empty bootstrap: the first batch reads a store with no data
+    val boot = (Seq.fill(50)("big") ++ (0 until 20).map(i => s"s$i"))
+    for ((corpus, big) <- Seq(boot -> 110L, Seq.empty[String] -> 60L)) {
+      val dir = java.nio.file.Files.createTempDirectory("stkc").toString
+      StreamingTopK.initStore(corpus.toDF("v"), "v", dir, MG, D, M)
+      (1 to 3).foreach(i => StreamingTopK.processBatch(
+        (Seq.fill(20)("big") ++ (0 until 20).map(j => s"t$i-$j")).toDF("v"),
+        i.toLong, "v", dir, 3, MG, D, M))
+      val before = StreamingTopK.topk(spark, dir, 3, D, M).collect()
+      StreamingTopK.compact(spark, dir, MG)
+      val after = StreamingTopK.topk(spark, dir, 3, D, M).collect()
+      // the winner and its CMS estimate survive compaction unchanged
+      assert(after.head.getString(0) == "big" &&
+        after.head.getLong(2) == before.head.getLong(2))
+      assert(after.head.getLong(2) == big)
+      // candidate set folded to capacity; bound recorded and not shrunk
+      assert(spark.read.parquet(s"$dir/mg").count() <= MG)
+      assert(after.head.getLong(3) >= before.head.getLong(3))
+      // bounds still valid after compaction
+      assert(after.head.getLong(1) <= big)
+    }
   }
 
   test("attach: top-k arrives per micro-batch and tracks the stream") {
