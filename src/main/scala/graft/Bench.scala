@@ -217,16 +217,19 @@ object Bench {
     // still prints FIRST (nothing removed from the contract), and a
     // compact summary line prints LAST so any bounded tail ends with
     // one complete, parsable JSON object; the full record (plus the
-    // per-query job counts, r17 verdict #6) lives in bench_out.json.
+    // per-query job counts, r17 verdict #6) lives in bench_out.json
+    // under $SPARK_GRAFT_OUT (default `target/`, so a run at the repo
+    // root leaves the tracked files alone).
     val jobJson = jobCounts.map { case (k, v) => jstr(k) + ":" + v }
       .mkString("{", ",", "}")
     val fileJson = json.dropRight(1) + s""","job_counts":$jobJson}"""
-    val compactLine = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"anchors":$anchorJson,"detail":"bench_out.json","sf":"$sfDir"}"""
     val outFile = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_OUT", "."), "bench_out.json")
-    try java.nio.file.Files.write(outFile,
-      (fileJson + "\n").getBytes("UTF-8"))
-    catch { case e: Exception =>
+      sys.env.getOrElse("SPARK_GRAFT_OUT", "target"), "bench_out.json")
+    val compactLine = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"anchors":$anchorJson,"detail":${jstr(outFile.toString)},"sf":"$sfDir"}"""
+    try {
+      java.nio.file.Files.createDirectories(outFile.toAbsolutePath.getParent)
+      java.nio.file.Files.write(outFile, (fileJson + "\n").getBytes("UTF-8"))
+    } catch { case e: Exception =>
       System.err.println(s"warn: could not write $outFile: $e") }
     println(json)
     println(compactLine)

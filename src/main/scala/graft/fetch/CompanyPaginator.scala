@@ -33,10 +33,10 @@ import graft.sources.CompanyIndexReader
   * `count` (`company.py:287`), so deeper pages for finished companies are
   * never requested.
   *
-  * Each round's pages are `localCheckpoint`ed before counting: the fetch is
-  * a side-effecting `mapPartitions`, and materializing the round once means
-  * downstream re-evaluation replays blocks, never re-fetches (blocks are
-  * GC-cleaned with the plan, unlike `CacheManager` entries).
+  * Each round's pages are counted and accumulated straight off
+  * [[Fetcher.fetchAll]]'s result, which is already materialized (each page
+  * is requested once per call), so downstream re-evaluation replays
+  * blocks, never re-fetches.
   */
 object CompanyPaginator {
 
@@ -92,7 +92,6 @@ object CompanyPaginator {
     while (active.nonEmpty && rounds < maxPages) {
       val work = active.map(c => (c, urlFor(c, start))).toDF("key", "url")
       val fetchedAll = Fetcher.fetchAll(work, fetch, globalRate)
-        .localCheckpoint(true)
       // raise on real fetch failures (already past Fetcher's per-request
       // retries); only a structured not-found — classified at the fetch
       // source, never by message text — ends pagination for a CIK,

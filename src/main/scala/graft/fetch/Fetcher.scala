@@ -2,10 +2,11 @@ package graft.fetch
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.operators.Materialize
 
 /** The engine's only network-touching layer (SURVEY.md §7 module 7),
   * replacing the reference's `NetworkClient` (`client.py:221-277`).
@@ -20,6 +21,11 @@ import org.apache.spark.sql.types._
   *     reproduces the reference's single-client behavior exactly;
   *   - retry with backoff per request (`client.py:196-205`), then Spark's
   *     own task retries on top;
+  *   - fetch once: [[Fetcher.fetchAll]] is eager — it runs the fan-out as
+  *     one job at call time and returns a frame rooted at the
+  *     materialized results, so each work row is requested once per call
+  *     however many actions read the result (the reference downloads each
+  *     filing once); only a Spark task retry can repeat a request;
   *   - zero-egress test tier: `file://`/local paths go through
   *     [[Fetcher.local]]; HTTP through [[Fetcher.http]] — same interface.
   */
@@ -124,41 +130,49 @@ object Fetcher {
     * "FileNotFoundException" can never masquerade as end-of-pages.
     * Not-found is deterministic and skips the retry loop entirely.
     *
+    * Eager: the call runs the fan-out as one job and returns the
+    * [[graft.operators.Materialize.eager]] frame over its results, so
+    * each work row is requested once per call, however many downstream
+    * actions read the result; only a Spark task retry repeats a
+    * request. A fetch too large for executor blocks is promoted to the
+    * reliable tier like the engine's other corpus-scale frames.
+    *
     * @param globalRate total requests/second budget across ALL partitions.
     * @param retries    per-request retry count (`client.py:24-29`).
     * @param backoffSec backoff factor between retries.
     */
   def fetchAll(workList: DataFrame, fetch: FetchFn, globalRate: Double = 10.0,
       retries: Int = 3, backoffSec: Double = 0.0): DataFrame = {
-    val spark = workList.sparkSession
-    val nParts = math.max(workList.rdd.getNumPartitions, 1)
-    val perTaskRate = globalRate / nParts
-    val enc = RowEncoder.encoderFor(resultSchema)
-    workList.select(col("key").cast(StringType), col("url").cast(StringType))
-      .mapPartitions { rows =>
-        val limiter = new RateLimiter(perTaskRate)
-        rows.map { r =>
-          val (key, url) = (r.getString(0), r.getString(1))
-          var attempt = 0
-          var out: Row = null
-          while (out == null) {
-            limiter.acquire()
-            try {
-              out = Row(key, url, fetch(url), null, false)
-            } catch {
-              case e: NotFoundException =>
-                out = Row(key, url, null, e.toString, true)
-              case e: Exception if attempt < retries =>
-                attempt += 1
-                // urllib3-style backoff: factor * 2^(attempt-1)
-                Thread.sleep((backoffSec * math.pow(2, attempt - 1) * 1000).toLong)
-              case e: Exception =>
-                out = Row(key, url, null, e.toString, false)
-            }
+    // one plan for the work list: the RDD the fan-out maps over also
+    // sizes the rate split (planning it twice under AQE runs its query
+    // stages twice)
+    val work = workList
+      .select(col("key").cast(StringType), col("url").cast(StringType)).rdd
+    val perTaskRate = globalRate / math.max(work.getNumPartitions, 1)
+    val fetched = work.mapPartitions { rows =>
+      val limiter = new RateLimiter(perTaskRate)
+      rows.map { r =>
+        val (key, url) = (r.getString(0), r.getString(1))
+        var attempt = 0
+        var out: Row = null
+        while (out == null) {
+          limiter.acquire()
+          try {
+            out = Row(key, url, fetch(url), null, false)
+          } catch {
+            case e: NotFoundException =>
+              out = Row(key, url, null, e.toString, true)
+            case e: Exception if attempt < retries =>
+              attempt += 1
+              // urllib3-style backoff: factor * 2^(attempt-1)
+              Thread.sleep((backoffSec * math.pow(2, attempt - 1) * 1000).toLong)
+            case e: Exception =>
+              out = Row(key, url, null, e.toString, false)
           }
-          out
         }
-      }(enc)
-      .toDF("key", "url", "content", "error", "not_found")
+        out
+      }
+    }
+    Materialize.eager(workList.sparkSession.createDataFrame(fetched, resultSchema))
   }
 }

@@ -13,7 +13,8 @@ import org.apache.spark.sql.DataFrame
   * executor kills the lineage of every corpus-sized frame materialized
   * that way (guide §5). Frames that are corpus-scale at 100 TB (the
   * CrossModal entity frame, the FamilyStore compaction tables, the CC
-  * round edge lists) therefore route through this helper: every frame
+  * round edge lists, the fetched documents of `Fetcher.fetchAll`)
+  * therefore route through this helper: every frame
   * first takes the cheap local tier, and one whose MEASURED block size
   * exceeds the threshold is then PROMOTED to a reliable checkpoint
   * (disk-backed files that survive executor loss) — one extra pass that

@@ -1,10 +1,17 @@
 package graft.fetch
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import org.apache.spark.graft.BusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.ops.EntryOps
+import graft.queries.ParseQueries
+import graft.sources.RestReader
 
 /** Attempt counter shared across local-mode tasks (single test JVM);
   * top-level so the fetch closure references the object rather than
@@ -12,6 +19,17 @@ import graft.TestSpark
   */
 object FetchAttempts extends Serializable {
   val n = new java.util.concurrent.atomic.AtomicInteger(0)
+}
+
+/** Request counter for the fetch-once specs; top-level for the same
+  * reason as [[FetchAttempts]].
+  */
+object FetchRequests extends Serializable {
+  val n = new java.util.concurrent.atomic.AtomicInteger(0)
+  def counting(fetch: Fetcher.FetchFn): Fetcher.FetchFn = { url =>
+    n.incrementAndGet()
+    fetch(url)
+  }
 }
 
 class FetchSpec extends AnyFunSuite {
@@ -86,5 +104,100 @@ class FetchSpec extends AnyFunSuite {
     val got = Fetcher.fetchAll(work, flaky, globalRate = 1000.0, retries = 3)
       .head()
     assert(new String(got.getAs[Array[Byte]]("content")) == "recovered")
+  }
+
+  /** Requests made building `result` and running three separate actions
+    * on it: a count, a collect and a filtered count.
+    */
+  private def requestsAcrossThreeActions(result: => DataFrame): Int = {
+    FetchRequests.n.set(0)
+    val df = result
+    df.count()
+    df.collect()
+    df.filter(col(df.columns.head).isNotNull).count()
+    FetchRequests.n.get()
+  }
+
+  test("fetchAll requests each work row once, however many actions read " +
+    "the result; a missing file is one request and one not_found row") {
+    val dir = Files.createTempDirectory("fetch-once").toFile
+    val ok = new java.io.File(dir, "a.txt")
+    Files.write(ok.toPath, "hello".getBytes)
+    val work = Seq(("k1", ok.getAbsolutePath), ("k2", s"$dir/missing.txt"))
+      .toDF("key", "url")
+    FetchRequests.n.set(0)
+    val got = Fetcher.fetchAll(work, FetchRequests.counting(Fetcher.local),
+      globalRate = 1000.0)
+    assert(got.count() == 2)
+    assert(got.collect().map(_.getAs[String]("key")).sorted.toSeq ==
+      Seq("k1", "k2"))
+    assert(got.filter(col("not_found")).count() == 1)
+    assert(FetchRequests.n.get() == 2)
+  }
+
+  test("submissionsAll fetches each continuation file once") {
+    val raw = Seq(ParseQueries.submissionsFilesJson).toDF("value")
+    val fetch = FetchRequests.counting(ParseQueries.memFetch(Map(
+      "mem://submissions/CIK0001000045-submissions-001.json" ->
+        ParseQueries.submissionsContJson)))
+    // one continuation file named in filings.files[]
+    assert(requestsAcrossThreeActions(RestReader.submissionsAll(raw, fetch,
+      name => s"mem://submissions/$name", globalRate = 1e6)) == 1)
+  }
+
+  test("resolveCiksWithFallback fetches each unresolved lookup's page once") {
+    val page = new String(Files.readAllBytes(
+      Paths.get(TestSpark.resource("single_cik_search_result.html"))))
+    val cikMap = Seq(("320193", "AAPL", "APPLE INC."))
+      .toDF("cik", "ticker", "title")
+    val lookups = Seq("AAPL", "Apple Computer").toDF("lookup")
+    val fetch = FetchRequests.counting(
+      ParseQueries.memFetch(Map("mem://cik/Apple Computer" -> page)))
+    // AAPL resolves from the map; only "Apple Computer" is fetched
+    assert(requestsAcrossThreeActions(EntryOps.resolveCiksWithFallback(
+      lookups, cikMap, fetch, l => s"mem://cik/$l", globalRate = 1e6)) == 1)
+  }
+
+  test("paginate requests each page once across downstream actions") {
+    val fetch = FetchRequests.counting(
+      ParseQueries.memFetch(ParseQueries.paginatedPages))
+    // A: start_0, start_2 (count reached); B: start_0, start_2 (missing);
+    // C: start_0 (empty) — five work rows over two rounds
+    assert(requestsAcrossThreeActions(CompanyPaginator.paginate(spark,
+      Seq("0001000045", "0001000120", "0001000200"),
+      (cik, start) => s"mem://$cik/start_$start", fetch,
+      batchSize = 2, count = Some(3), filingType = Some("10-Q"),
+      globalRate = 1e6)) == 5)
+  }
+
+  test("fetchAll plans its work list once: it runs the jobs of one " +
+    "materialization of the work list") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      BusDrain.drain(spark.sparkContext)
+      val before = jobs.get()
+      body
+      BusDrain.drain(spark.sparkContext)
+      jobs.get() - before
+    }
+    // edgar ingest's work-list shape: a shuffled distinct, broadcast into
+    // a semi-join
+    val ciks = Seq("1", "2", "1").toDF("cik")
+    val work = (1 to 8).map(i => (s"${i % 3}", s"k$i", s"u$i"))
+      .toDF("cik", "key", "url")
+      .join(broadcast(ciks.distinct()), Seq("cik"), "left_semi")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // under AQE, building a plan's RDD already runs its query stages
+      assert(jobsOf(work.select("key", "url").rdd.getNumPartitions) > 0)
+      val once = jobsOf(work.localCheckpoint(true).count())
+      val fetched = jobsOf(Fetcher.fetchAll(work, _ => Array[Byte](1),
+        globalRate = 1e6).count())
+      assert(fetched == once)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -1,0 +1,11 @@
+package org.apache.spark.graft
+
+import org.apache.spark.SparkContext
+
+/** Waits until the listener bus has delivered every event posted so far,
+  * so a test's listener counts are exact. The bus is package-private to
+  * Spark, hence this package.
+  */
+object BusDrain {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
