@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
 /** Diagnostic main (not a graded surface): run named registry queries
   * under a job listener and print per-Spark-job wall times with call
   * sites, so a query's seconds decompose into its driver actions — the
-  * §1 "measure first" tool for the fixed-phase floors (ProbeProfile is
-  * the family-probe-specific ancestor; this one takes any query name).
+  * §1 "measure first" tool for the fixed-phase floors, for any query
+  * name (`q_family_append` profiles the family-store probe).
   *
   *   sbt "runMain graft.QueryProfile <sfDir> <query>[,<query>...]"
   *

@@ -5,8 +5,8 @@ import java.time.LocalDate
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.fetch.{CompanyPaginator, Fetcher}
 import graft.functions.EdgarFunctions
+import graft.operators.Materialize
 import graft.ops.{ComboPlanner, EntryOps}
 import graft.sources.{CompanyIndexReader, IndexReader}
 
@@ -99,39 +99,32 @@ object Filings {
         throw new IllegalArgumentException(s"Filing type $ft is not valid")
     }
 
-    /** Company filings over a mirrored browse-edgar page tree
-      * (`$root/browse-edgar/<cik>/start_<n>.xml`): drive the page loop,
-      * then the relational pipeline. See [[entriesFromPages]].
+    /** Company filings from the `edgar-company` scan over `root` (a
+      * mirrored page tree `$root/browse-edgar/<cik>/start_<n>.xml`): the
+      * scan runs the per-CIK page loop with the request params as
+      * options and the date bounds as pushed `date_filed` WHERE clauses,
+      * then the per-CIK `count` truncation (`company.py:253-303`). Eager:
+      * each page is requested once per call, however many actions read
+      * the result. A lookup containing ',' cannot travel in the scan's
+      * comma-separated `ciks` option, so it is refused.
       */
     def entries(spark: SparkSession, root: String): DataFrame = {
-      val pages = CompanyPaginator.paginate(spark, lookups,
-        CompanyPaginator.mirrorUrl(root), Fetcher.local,
-        batchSize = batchSize, count = count, filingType = filingType)
-      entriesFromPages(pages)
-    }
-
-    /** The relational half, reusable against any page source (mirror,
-      * HTTP, fixture): parse → type filter + `.txt` rewrite → residual
-      * date/ownership/match-format predicates → per-CIK `count`
-      * truncation (`company.py:253-303`).
-      */
-    def entriesFromPages(pages: DataFrame): DataFrame = {
-      val parsed = CompanyIndexReader.parsePages(pages)
-      val typed = filingType match {
-        case Some(ft) => CompanyIndexReader.filterFilingLinks(parsed, ft)
-        case None => parsed
-          .withColumn("txt_url",
-            EdgarFunctions.accessionToTxtUrl(col("filinghref")))
-          .filter(col("filinghref").contains("-"))
+      lookups.find(_.contains(",")).foreach { l =>
+        throw new IllegalArgumentException(
+          s"CIK lookup '$l' contains ',', which the edgar-company scan's " +
+            "'ciks' option cannot carry")
       }
-      val bounded = typed
-        .filter(startDate.map(d => col("date_filed") >=
-          lit(java.sql.Date.valueOf(d))).getOrElse(lit(true)))
-        .filter(endDate.map(d => col("date_filed") <=
-          lit(java.sql.Date.valueOf(d))).getOrElse(lit(true)))
-        .filter(CompanyIndexReader.ownershipPredicate(ownership))
-        .filter(CompanyIndexReader.matchFormatPredicate(matchFormat))
-      count.map(CompanyIndexReader.limitPerCompany(bounded, _)).getOrElse(bounded)
+      val options = Map("root" -> root, "ciks" -> lookups.mkString(","),
+        "batchSize" -> batchSize.toString, "ownership" -> ownership,
+        "matchFormat" -> matchFormat) ++
+        filingType.map("type" -> _) ++ count.map("count" -> _.toString)
+      val scan = spark.read.format("edgar-company").options(options).load()
+      val bounded = Seq(
+        startDate.map(d => col("date_filed") >= lit(java.sql.Date.valueOf(d))),
+        endDate.map(d => col("date_filed") <= lit(java.sql.Date.valueOf(d))))
+        .flatten.foldLeft(scan)(_ filter _)
+      Materialize.eager(
+        count.map(CompanyIndexReader.limitPerCompany(bounded, _)).getOrElse(bounded))
     }
   }
 

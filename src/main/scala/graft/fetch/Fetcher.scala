@@ -120,15 +120,46 @@ object Fetcher {
     StructField("error", StringType),
     StructField("not_found", BooleanType)))
 
+  /** Per-request retry defaults (`client.py:24-29`): [[fetchAll]]'s and
+    * the `edgar-company` page loop's.
+    */
+  val DefaultRetries: Int = 3
+  val DefaultBackoffSec: Double = 0.0
+
+  /** One request under the per-request retry policy (`client.py:196-205`),
+    * each attempt gated by `limiter`. A [[NotFoundException]] is rethrown
+    * at once: not-found is deterministic, so retrying it only burns rate
+    * budget. Any other exception is retried `retries` times with
+    * urllib3-style backoff, `backoffSec * 2^attempt`, then rethrown.
+    */
+  @scala.annotation.tailrec
+  def fetchWithRetries(fetch: FetchFn, url: String, limiter: RateLimiter,
+      retries: Int = DefaultRetries, backoffSec: Double = DefaultBackoffSec,
+      attempt: Int = 0): Array[Byte] = {
+    limiter.acquire()
+    val got =
+      try Some(fetch(url))
+      catch {
+        case e: NotFoundException => throw e
+        case _: Exception if attempt < retries => None
+      }
+    got match {
+      case Some(bytes) => bytes
+      case None =>
+        Thread.sleep((backoffSec * math.pow(2, attempt) * 1000).toLong)
+        fetchWithRetries(fetch, url, limiter, retries, backoffSec, attempt + 1)
+    }
+  }
+
   /** Rate-limited distributed fan-out: `workList(key, url)` → rows of
-    * (key, url, content, error, not_found). Failed URLs are quarantined
-    * into the `error` column instead of failing the job
-    * (`client.py:154-177`'s validation as data, not exceptions); the
-    * structured `not_found` flag classifies the error AT THE SOURCE (a
-    * [[NotFoundException]] from the fetcher) rather than by message
-    * pattern, so a transient failure whose text happens to mention
-    * "FileNotFoundException" can never masquerade as end-of-pages.
-    * Not-found is deterministic and skips the retry loop entirely.
+    * (key, url, content, error, not_found). Each request runs under
+    * [[fetchWithRetries]]; a URL that still fails is quarantined into the
+    * `error` column instead of failing the job (`client.py:154-177`'s
+    * validation as data, not exceptions). The structured `not_found` flag
+    * classifies the error AT THE SOURCE (a [[NotFoundException]] from the
+    * fetcher) rather than by message pattern, so a transient failure
+    * whose text happens to mention "FileNotFoundException" can never
+    * masquerade as end-of-pages.
     *
     * Eager: the call runs the fan-out as one job and returns the
     * [[graft.operators.Materialize.eager]] frame over its results, so
@@ -142,7 +173,8 @@ object Fetcher {
     * @param backoffSec backoff factor between retries.
     */
   def fetchAll(workList: DataFrame, fetch: FetchFn, globalRate: Double = 10.0,
-      retries: Int = 3, backoffSec: Double = 0.0): DataFrame = {
+      retries: Int = DefaultRetries,
+      backoffSec: Double = DefaultBackoffSec): DataFrame = {
     // one plan for the work list: the RDD the fan-out maps over also
     // sizes the rate split (planning it twice under AQE runs its query
     // stages twice)
@@ -153,24 +185,12 @@ object Fetcher {
       val limiter = new RateLimiter(perTaskRate)
       rows.map { r =>
         val (key, url) = (r.getString(0), r.getString(1))
-        var attempt = 0
-        var out: Row = null
-        while (out == null) {
-          limiter.acquire()
-          try {
-            out = Row(key, url, fetch(url), null, false)
-          } catch {
-            case e: NotFoundException =>
-              out = Row(key, url, null, e.toString, true)
-            case e: Exception if attempt < retries =>
-              attempt += 1
-              // urllib3-style backoff: factor * 2^(attempt-1)
-              Thread.sleep((backoffSec * math.pow(2, attempt - 1) * 1000).toLong)
-            case e: Exception =>
-              out = Row(key, url, null, e.toString, false)
-          }
+        try Row(key, url,
+          fetchWithRetries(fetch, url, limiter, retries, backoffSec), null, false)
+        catch {
+          case e: NotFoundException => Row(key, url, null, e.toString, true)
+          case e: Exception => Row(key, url, null, e.toString, false)
         }
-        out
       }
     }
     Materialize.eager(workList.sparkSession.createDataFrame(fetched, resultSchema))

@@ -63,9 +63,6 @@ object EdgarFunctions {
   def cleanDirectoryPath(c: Column): Column =
     regexp_replace(regexp_replace(c, "[^0-9A-Za-z \\t\\n]", ""), " ", "_")
 
-  /** `sanitize_date` (`utils.py:5-25`): canonical YYYYMMDD string. */
-  def sanitizeDate(d: Column): Column = date_format(d, "yyyyMMdd")
-
   /** `(month-1)//3+1` (`utils.py:46-52`) — Spark's `quarter` built-in. */
   def quarterOf(d: Column): Column = quarter(d)
 
@@ -104,13 +101,6 @@ object EdgarFunctions {
   def dailyIdxFilename(d: Column): Column =
     concat(lit("master."), eraIdxDate(d), lit(".idx"))
 
-  /** Listing-directory paths (`core/daily.py:70-78`, `core/quarterly.py:53-57`). */
-  def dailyIdxPath(d: Column): Column =
-    format_string("Archives/edgar/daily-index/%d/QTR%d/",
-      year(d), quarter(d))
-  def quarterlyIdxPath(year: Column, q: Column): Column =
-    format_string("Archives/edgar/full-index/%d/QTR%d/master.idx", year, q)
-
   /** Bulk-feed tar path (`core/_index.py:94-98`, `core/daily.py:108-116`). */
   def dailyTarUrl(d: Column): Column =
     format_string("Archives/edgar/Feed/%d/QTR%d/%s.nc.tar.gz",
@@ -136,15 +126,6 @@ object EdgarFunctions {
     when(lo <= hi, sequence(lo, hi, expr("interval 1 day")))
       .otherwise(array().cast(ArrayType(DateType)))
   }
-
-  /** AMEND detection for `match_format` (`core/company.py:157-166`). */
-  def isAmend(formType: Column): Column = formType.endsWith("/A")
-
-  /** Membership in the 804-value form-type domain
-    * (`core/filing_types.py:4-813`, validated `core/company.py:188-196`).
-    */
-  def isValidFilingType(formType: Column): Column =
-    formType.isInCollection(graft.model.FilingType.values)
 
   /** Per-key limit as the reference means it (`core/company.py:287-303`):
     * top-k *per group*, not a global limit. `orderBy` must be total

@@ -217,23 +217,6 @@ object TextFunctions {
     aggregate(terms, lit(0L), (acc, x) => acc + x) % FingerprintMod
   }
 
-  /** 64-bit rolling (polynomial) hash over tokens with xxhash64 token
-    * values — the production fingerprint (not oracle-expressible; covered
-    * by ScalaTest instead).
-    */
-  def rollingHash64(text: Column): Column =
-    aggregate(tokens(text), lit(0L),
-      (acc, t) => acc * lit(1000003L) + xxhash64(t))
-
-  /** MinHash signature: k minimums of per-seed hashes over the shingle set
-    * (shingle→minhash of SURVEY's north-star dedup). One pass over the
-    * shingles array per seed, all inside codegen.
-    */
-  def minhashSignature(shingles: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(shingles,
-        s => xxhash64(concat(i.cast(StringType), lit("#"), s)))))
-
   /** LSH band keys: the signature split into `bands` bands of
     * `k/bands` rows, each band hashed to one bucket key. Documents sharing
     * any band key are near-dup candidates.
@@ -303,16 +286,4 @@ object TextFunctions {
   /** Punctuation character count. */
   def punctCount(text: Column): Column =
     regexp_count(text, lit("[\\.,;:!\\?'\"()\\[\\]{}-]"))
-
-  /** Mean whitespace-token length: exact integer division in double. */
-  def meanTokenLen(text: Column): Column = {
-    val toks = tokens(text)
-    aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast(DoubleType) /
-      size(toks).cast(DoubleType)
-  }
-
-  /** English stopword ratio — a standard quality signal. */
-  def stopwordRatio(text: Column): Column =
-    stopwordHits(text, LangProfiles.head._2).cast(DoubleType) /
-      size(tokens(text)).cast(DoubleType)
 }

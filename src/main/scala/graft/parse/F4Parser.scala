@@ -2,7 +2,7 @@ package graft.parse
 
 import scala.util.matching.Regex
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -138,8 +138,4 @@ object F4Parser {
           .as("shares_owned_following_transaction"),
         col("t.ownershipNature.directOrIndirectOwnership.value")
           .as("direct_or_indirect_ownership"))
-
-  /** Document `<TYPE>` guard as a predicate (`parser.py:267`). */
-  def isForm4(docCol: Column): Column =
-    regexp_extract(docCol, "(?s)<TYPE>(.*?)\n", 1) === "4"
 }

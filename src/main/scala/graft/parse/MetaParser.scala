@@ -120,16 +120,6 @@ object MetaParser {
       .flatMap { case (p, c) => splitContainer(p, c) }
   }
 
-  /** Column-only variant of the per-document scalar extraction
-    * (`parser.py:229-240`): three `regexp_extract`s, fully codegen'd — for
-    * pipelines that already exploded `<DOCUMENT>` blocks relationally.
-    */
-  def withDocumentMetadata(docs: DataFrame, docCol: String): DataFrame =
-    docs
-      .withColumn("type", regexp_extract(col(docCol), "(?s)<TYPE>(.*?)\n", 1))
-      .withColumn("sequence", regexp_extract(col(docCol), "(?s)<SEQUENCE>(.*?)\n", 1))
-      .withColumn("filename", regexp_extract(col(docCol), "(?s)<FILENAME>(.*?)\n", 1))
-
   /** uu-encoded payload detection (`parser.py:117`). */
   def isUuencoded(text: org.apache.spark.sql.Column) =
     text.contains("begin 644 ")

@@ -2,6 +2,11 @@ package graft.queries
 
 import java.time.LocalDate
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -9,6 +14,7 @@ import graft.ops.ComboPlanner
 import graft.parse.{F4Parser, MetaParser}
 import graft.queries.Q._
 import graft.sources.{CikMapReader, CompanyIndexReader, RestReader}
+import graft.sources.dsv2.{CompanyFilingsTable, PageFilter}
 
 /** Oracle-checked queries for the SEC-specific parsing/source surface
   * (SURVEY.md §2.1-2.2): SEC-DOCUMENT splitting, header metadata state
@@ -151,8 +157,8 @@ object ParseQueries {
       // 0001000300/start_6 missing → pagination exhausted
   }
 
-  /** In-memory FetchFn over [[paginatedPages]] (missing key → structured
-    * not-found, the local-mirror analog of an absent page).
+  /** In-memory FetchFn over a url → content map (missing key →
+    * structured not-found, the local-mirror analog of an absent page).
     */
   def memFetch(pages: Map[String, String]): graft.fetch.Fetcher.FetchFn =
     url => pages.get(url) match {
@@ -355,12 +361,15 @@ object ParseQueries {
           coalesce(col("subsection"), lit("")), col("key"))
     }),
 
-    // company XML page: from_xml → explode → type filter → href rewrite.
+    // company XML page through the edgar-company reader's page → rows
+    // step: parse → type filter → bad-link drop → href rewrite.
     "q_company_xml" -> ((s, _) => {
-      import s.implicits._
-      val pages = s.createDataset(Seq(companyXml)).toDF("value")
-      CompanyIndexReader.filterFilingLinks(
-        CompanyIndexReader.parsePages(pages), "10-Q")
+      val toRow = CatalystTypeConverters.createToScalaConverter(
+        CompanyFilingsTable.schema)
+      val rows = PageFilter(filingType = Some("10-Q"))
+        .rows("0001000045", 0, companyXml).rows
+        .map(r => toRow(new GenericInternalRow(r)).asInstanceOf[Row])
+      s.createDataFrame(rows.asJava, CompanyFilingsTable.schema)
         .select(col("cik"), col("company_name"), col("type"),
           col("date_filed"), col("txt_url"))
         .orderBy("txt_url")
@@ -493,27 +502,20 @@ object ParseQueries {
         lookups = Seq("0001000045", "0001000120", "0001000200"),
         filingType = Some("10-Q"), count = Some(3),
         startDate = None, endDate = None, batchSize = 2)
-      val pages = graft.fetch.CompanyPaginator.paginate(s, cq.lookups,
-        (cik, start) => s"mem://$cik/start_$start", memFetch(paginatedPages),
-        batchSize = cq.batchSize, count = cq.count, filingType = cq.filingType)
       CompanyIndexReader.countShortfalls(
-        cq.entriesFromPages(pages), cq.lookups.toDF("lookup"), 3)
+        cq.entries(s, companyMirrorDir), cq.lookups.toDF("lookup"), 3)
         .orderBy("cik_key")
     }),
 
-    // ownership option (`company.py:226-235`) as a residual predicate on
-    // the mirrored tier: 'exclude' drops insider-ownership forms (3/4/5
-    // + amendments), 'only' keeps nothing else. One pagination pass,
-    // both modes applied relationally.
+    // ownership option (`company.py:226-235`) as a request param of the
+    // scan: 'exclude' drops insider-ownership forms (3/4/5 + amendments),
+    // 'only' keeps nothing else.
     "q_company_ownership" -> ((s, _) => {
-      val pages = graft.fetch.CompanyPaginator.paginate(s, Seq("0001000300"),
-        (cik, start) => s"mem://$cik/start_$start", memFetch(paginatedPages),
-        batchSize = 2, count = None, filingType = None)
       val modes = Seq("exclude", "only").map { m =>
         graft.api.Filings.CompanyQuery(
           lookups = Seq("0001000300"), filingType = None, count = None,
           startDate = None, endDate = None, ownership = m, batchSize = 2)
-          .entriesFromPages(pages)
+          .entries(s, companyMirrorDir)
           .select(lit(m).as("mode"), col("cik"), col("type"),
             col("date_filed"), col("txt_url"))
       }
@@ -523,14 +525,11 @@ object ParseQueries {
     // match_format option (`company.py:157-166`): EXACT keeps originals,
     // AMEND keeps only /A amendments.
     "q_company_amend" -> ((s, _) => {
-      val pages = graft.fetch.CompanyPaginator.paginate(s, Seq("0001000300"),
-        (cik, start) => s"mem://$cik/start_$start", memFetch(paginatedPages),
-        batchSize = 2, count = None, filingType = None)
       val modes = Seq("EXACT", "AMEND").map { m =>
         graft.api.Filings.CompanyQuery(
           lookups = Seq("0001000300"), filingType = None, count = None,
           startDate = None, endDate = None, matchFormat = m, batchSize = 2)
-          .entriesFromPages(pages)
+          .entries(s, companyMirrorDir)
           .select(lit(m).as("mode"), col("cik"), col("type"),
             col("date_filed"), col("txt_url"))
       }

@@ -1,74 +1,18 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.functions.EdgarFunctions
 
-/** Parser for `browse-edgar?action=getcompany&output=xml` result pages
-  * (`core/company.py:110-114,253-303`).
-  *
-  * The reference soup-parses each page and paginates until `count` links
-  * are collected. Here the page XML parses with Spark's built-in
-  * `from_xml`, the type filter is relational (`company.py:262-266`), the
-  * accession→`.txt` rewrite is a column expression (`company.py:295`), and
-  * the per-company `count` truncation is a per-key top-k — the pagination
-  * loop itself lives in the fetch layer, which stops requesting pages once
-  * a company has `count` matches (limit pushdown into the source).
+/** The relational residuals of the company-filings query
+  * (`core/company.py:198-213,287-303`) over the rows the `edgar-company`
+  * scan ([[graft.sources.dsv2.CompanyFilingsSource]]) emits: the scan runs
+  * the page loop, parses each page and applies the request params; what
+  * it cannot express per partition — the per-company `count` truncation
+  * and the count-shortfall report — lives here.
   */
 object CompanyIndexReader {
-
-  /** Schema of `<companyfilings>` — only the fields the pipeline consumes;
-    * column pruning drops the rest at parse time.
-    */
-  val pageSchema: StructType = StructType(Seq(
-    StructField("companyinfo", StructType(Seq(
-      StructField("cik", StringType),
-      StructField("name", StringType),
-      StructField("sic", StringType)))),
-    StructField("results", StructType(Seq(
-      StructField("filing", ArrayType(StructType(Seq(
-        StructField("type", StringType),
-        StructField("filinghref", StringType),
-        StructField("datefiled", StringType),
-        StructField("formname", StringType))))))))))
-
-  /** One row per `<filing>` from raw page XML strings.
-    *
-    * @param pages DataFrame with the page XML in `xmlCol` (plus any
-    *              provenance columns, which are preserved).
-    */
-  def parsePages(pages: DataFrame, xmlCol: String = "value"): DataFrame = {
-    // real pages wrap the payload in <?xml?><html><body>… — extract the
-    // <companyfilings> element before structured parsing
-    val parsed = pages.withColumn("__p",
-      from_xml(regexp_extract(col(xmlCol),
-        "(?s)(<companyfilings>.*</companyfilings>)", 1), pageSchema))
-    parsed
-      .withColumn("f", explode(col("__p.results.filing")))
-      .select(
-        parsed.columns.filter(c => c != xmlCol && c != "__p").map(col).toSeq ++ Seq(
-          col("__p.companyinfo.cik").as("cik"),
-          col("__p.companyinfo.name").as("company_name"),
-          col("f.type").as("type"),
-          col("f.filinghref").as("filinghref"),
-          to_date(col("f.datefiled"), "yyyy-MM-dd").as("date_filed"),
-          col("f.formname").as("formname")): _*)
-  }
-
-  /** `_filter_filing_links` (`company.py:253-266`): keep filings of exactly
-    * the requested type whose href survives the `.txt` rewrite. Malformed
-    * hrefs (the fixture's BAD_LINK rows) have no '-' so the rewrite leaves
-    * them recognizably invalid; the reference's soup-find simply yields the
-    * raw string and the download later 404s — we drop them eagerly.
-    */
-  def filterFilingLinks(filings: DataFrame, filingType: String): DataFrame =
-    filings
-      .filter(col("type") === lit(filingType))
-      .withColumn("txt_url",
-        EdgarFunctions.accessionToTxtUrl(col("filinghref")))
-      .filter(col("filinghref").contains("-"))
 
   /** Per-company `count` truncation (`company.py:198-213,287-303`):
     * newest-first top-k per CIK, deterministic via accession tiebreaker.
@@ -76,15 +20,6 @@ object CompanyIndexReader {
   def limitPerCompany(filings: DataFrame, count: Int): DataFrame =
     EdgarFunctions.perKeyTopK(filings, count, Seq("cik"),
       Seq(col("date_filed").desc, col("filinghref").desc))
-
-  /** Ownership / match_format request options (`company.py:107-108,144,157-166,226-235`)
-    * expressed as residual predicates for the mirrored tier.
-    */
-  def matchFormatPredicate(matchFormat: String): Column = matchFormat match {
-    case "EXACT" => !EdgarFunctions.isAmend(col("type"))
-    case "AMEND" => EdgarFunctions.isAmend(col("type"))
-    case _ => lit(true) // ALL
-  }
 
   /** The reference's count-shortfall warning (`company.py:297-303`:
     * "Only {num} of {count} filings were found for {cik}") as data: one
@@ -103,20 +38,4 @@ object CompanyIndexReader {
       .withColumn("n_found", coalesce(col("n_found"), lit(0L)))
       .filter(col("n_found") < count)
       .withColumn("n_requested", lit(count.toLong))
-
-  /** The insider-ownership form family the `ownership` request param
-    * (`company.py:229-235`) includes/excludes server-side: forms 3, 4, 5
-    * and their amendments.
-    */
-  private val ownershipForms = Seq("3", "3/A", "4", "4/A", "5", "5/A")
-
-  /** `ownership` option as a residual predicate for the mirrored tier:
-    * 'include' keeps everything, 'exclude' drops ownership forms, 'only'
-    * keeps nothing else.
-    */
-  def ownershipPredicate(ownership: String): Column = ownership match {
-    case "exclude" => !col("type").isin(ownershipForms: _*)
-    case "only" => col("type").isin(ownershipForms: _*)
-    case _ => lit(true) // include
-  }
 }

@@ -2,8 +2,6 @@ package graft.sources.dsv2
 
 import java.util
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -44,10 +42,13 @@ import graft.fetch.{Fetcher, RateLimiter}
   * budget (`client.py:30-35`) divides across partitions exactly like
   * [[graft.fetch.Fetcher.fetchAll]]: perTaskRate = rate / |ciks|.
   *
-  * The driver-loop form ([[graft.fetch.CompanyPaginator]]) remains the
-  * right tool when the caller wants the raw page DataFrame; this source
-  * is the SQL-facing face: `spark.read.format("edgar-company")` with
-  * pushdown that SQL users get for free.
+  * This is the engine's only company page loop:
+  * [[graft.api.Filings.CompanyQuery]] reads through it too. Each page
+  * request retries like [[graft.fetch.Fetcher.fetchAll]]
+  * ([[graft.fetch.Fetcher.fetchWithRetries]], same count and backoff);
+  * only a structured not-found ends a CIK's loop, and a page that still
+  * fails raises [[CikPageReader.PageFetchException]] naming the CIK and
+  * URL.
   *
   * Options: `root` (archive root — a mirrored page tree at
   * `$root/browse-edgar/<cik>/start_<n>.xml`, or an `http(s)://` base in
@@ -70,8 +71,8 @@ class CompanyFilingsSource extends TableProvider with DataSourceRegister {
 }
 
 object CompanyFilingsTable {
-  /** Output shape of `CompanyQuery.entriesFromPages` (provenance + parsed
-    * filing + the `.txt` rewrite of `company.py:295`).
+  /** Output shape: provenance (`cik_key`, `page_start`) + parsed filing
+    * + the `.txt` rewrite of `company.py:295`.
     */
   val schema: StructType = StructType(Seq(
     StructField("cik_key", StringType),
@@ -268,22 +269,25 @@ class CikPageReader(conf: CompanyScanConfig, cik: String,
     typeEq: Option[String], dateLo: Option[Int], dateHi: Option[Int],
     limit: Option[Int], required: StructType, perTaskRate: Double)
     extends PartitionReader[InternalRow] {
+  import CikPageReader._
 
   private val limiter = new RateLimiter(perTaskRate)
   // http tier: the pushed bounds become the datea/dateb/type request
   // params the server filters by (`company.py:132-145`); the mirror tier
-  // applies the same bounds residually in [[keep]] — both paths filter,
-  // the check is idempotent
+  // applies the same bounds residually in [[PageFilter]] — both
+  // paths filter, the check is idempotent
   private val fetch: Fetcher.FetchFn =
     if (conf.isHttp) Fetcher.http(conf.userAgent.get) else Fetcher.local
+  private val filter = PageFilter(conf.filingType, typeEq, dateLo, dateHi,
+    conf.ownership, conf.matchFormat)
   private def yyyymmdd(epochDay: Int): String =
     java.time.LocalDate.ofEpochDay(epochDay)
       .format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE)
-  private def pageUrl(start: Int): String =
+  private def urlAt(start: Int): String =
     if (conf.isHttp)
-      graft.fetch.CompanyPaginator.pageUrl(conf.root, cik,
-        conf.filingType.orElse(typeEq), start, conf.batchSize,
-        conf.ownership, dateLo.map(yyyymmdd), dateHi.map(yyyymmdd))
+      pageUrl(conf.root, cik, conf.filingType.orElse(typeEq), start,
+        conf.batchSize, conf.ownership, dateLo.map(yyyymmdd),
+        dateHi.map(yyyymmdd))
     else s"${conf.root}/browse-edgar/$cik/start_$start.xml"
 
   private var start = 0
@@ -305,19 +309,84 @@ class CikPageReader(conf: CompanyScanConfig, cik: String,
   override def get(): InternalRow = current
   override def close(): Unit = ()
 
+  private def fetchPage(): Unit = {
+    if (pagesFetched >= conf.maxPages || limit.exists(emitted >= _)) {
+      exhausted = true; return
+    }
+    val url = urlAt(start)
+    val bytes =
+      try Fetcher.fetchWithRetries(fetch, url, limiter)
+      catch {
+        case _: Fetcher.NotFoundException => exhausted = true; return
+        case e: Exception => throw new PageFetchException(
+          s"page fetch failed (not a missing page): cik=$cik url=$url: $e", e)
+      }
+    pagesFetched += 1
+    val page = filter.rows(cik, start, new String(bytes, "UTF-8"))
+    if (page.filings == 0) { exhausted = true; return }
+    matched += page.matched
+    val kept = limit.fold(page.rows)(l => page.rows.take(l - emitted))
+    emitted += kept.size
+    buffer = kept.iterator.map(full => new GenericInternalRow(proj.map(full)))
+    if (conf.count.exists(matched >= _)) exhausted = true
+    start += conf.batchSize
+  }
+}
+
+object CikPageReader {
+  /** A page request that failed past its retries with anything but a
+    * not-found: raised, never read as end-of-pages (`client.py:154-177`).
+    */
+  final class PageFetchException(msg: String, cause: Throwable)
+    extends RuntimeException(msg, cause)
+
+  /** `browse-edgar?action=getcompany` request URL (`company.py:96-144`
+    * params: CIK, type, datea/dateb, ownership, count=batch, start).
+    */
+  def pageUrl(base: String, cik: String, filingType: Option[String],
+      start: Int, batchSize: Int, ownership: String = "include",
+      datea: Option[String] = None, dateb: Option[String] = None): String = {
+    val params = Seq(
+      Some("action" -> "getcompany"), Some("CIK" -> cik),
+      filingType.map("type" -> _), datea.map("datea" -> _),
+      dateb.map("dateb" -> _), Some("ownership" -> ownership),
+      Some("count" -> batchSize.toString), Some("start" -> start.toString),
+      Some("output" -> "atom")).flatten
+    s"$base?" + params.map { case (k, v) => s"$k=$v" }.mkString("&")
+  }
+}
+
+/** One page after the page → rows step: how many filings it held (zero
+  * ends the loop), how many matched the `count` type, and the kept
+  * filings as full-schema rows in Catalyst values.
+  */
+final case class PageRows(filings: Int, matched: Int, rows: Seq[Array[Any]])
+
+/** The page → rows step of the company page loop: parse one page
+  * ([[CompanyPageXml]]), tally its `filingType` matches for the `count`
+  * early exit, and build the filings that pass the request-param filter
+  * (`keep`) with the `.txt` rewrite (`company.py:253-266,295`). The
+  * scan's reader runs it on every fetched page; a caller holding a page
+  * string runs it directly.
+  */
+final case class PageFilter(filingType: Option[String],
+    typeEq: Option[String] = None, dateLo: Option[Int] = None,
+    dateHi: Option[Int] = None, ownership: String = "include",
+    matchFormat: String = "ALL") {
+
   private def keep(typ: String, epochDay: Integer, href: String): Boolean = {
     // request-param semantics (`company.py:144,157-166,226-235,253-266`)
-    conf.filingType.forall(typ == _) &&
+    filingType.forall(typ == _) &&
       typeEq.forall(typ == _) &&
       (epochDay != null && dateLo.forall(epochDay >= _) &&
         dateHi.forall(epochDay <= _) ||
         epochDay == null && dateLo.isEmpty && dateHi.isEmpty) &&
-      (conf.ownership match {
+      (ownership match {
         case "exclude" => !CompanyFilingsTable.ownershipForms.contains(typ)
         case "only" => CompanyFilingsTable.ownershipForms.contains(typ)
         case _ => true
       }) &&
-      (conf.matchFormat match {
+      (matchFormat match {
         case "EXACT" => !typ.endsWith("/A")
         case "AMEND" => typ.endsWith("/A")
         case _ => true
@@ -325,27 +394,18 @@ class CikPageReader(conf: CompanyScanConfig, cik: String,
       href.contains("-") // bad links never survive the .txt rewrite
   }
 
-  private def fetchPage(): Unit = {
-    if (pagesFetched >= conf.maxPages || limit.exists(emitted >= _)) {
-      exhausted = true; return
-    }
-    val url = pageUrl(start)
-    limiter.acquire()
-    val bytes =
-      try fetch(url)
-      catch { case _: Fetcher.NotFoundException => exhausted = true; return }
-    pagesFetched += 1
-    val page = CompanyPageXml.parse(new String(bytes, "UTF-8"))
-    if (page.filings.isEmpty) { exhausted = true; return }
-    val rows = new ArrayBuffer[InternalRow](page.filings.size)
-    page.filings.foreach { f =>
-      // count bookkeeping mirrors CompanyPaginator: type matches count
-      // even when the row is later dropped (bad link, residual predicate)
-      if (conf.filingType.forall(f.typ == _)) matched += 1
-      if (limit.forall(emitted + rows.size < _) &&
-          keep(f.typ, f.epochDay, f.filinghref)) {
+  /** @param cik   the requested CIK (`cik_key`).
+    * @param start the page's offset (`page_start`).
+    */
+  def rows(cik: String, start: Int, xml: String): PageRows = {
+    val page = CompanyPageXml.parse(xml)
+    // type matches count even when the row is dropped (bad link,
+    // request-param filter), like the reference counts junk hrefs
+    val matched = page.filings.count(f => filingType.forall(f.typ == _))
+    val kept = page.filings.filter(f => keep(f.typ, f.epochDay, f.filinghref))
+      .map { f =>
         val txt = f.filinghref.substring(0, f.filinghref.lastIndexOf('-')) + ".txt"
-        val full = Array[Any](
+        Array[Any](
           UTF8String.fromString(cik), start,
           UTF8String.fromString(page.cik),
           UTF8String.fromString(page.name),
@@ -354,19 +414,13 @@ class CikPageReader(conf: CompanyScanConfig, cik: String,
           f.epochDay,
           UTF8String.fromString(f.formname),
           UTF8String.fromString(txt))
-        rows += new GenericInternalRow(proj.map(full))
       }
-    }
-    emitted += rows.size
-    buffer = rows.iterator
-    if (conf.count.exists(matched >= _)) exhausted = true
-    start += conf.batchSize
+    PageRows(page.filings.size, matched, kept)
   }
 }
 
-/** Executor-side parser for `browse-edgar&output=xml` pages — the scalar
-  * twin of [[graft.sources.CompanyIndexReader.parsePages]] (which is the
-  * Column/`from_xml` form). Parity is spec-pinned.
+/** Executor-side parser for `browse-edgar&output=xml` pages: the
+  * engine's only company page parser.
   */
 object CompanyPageXml {
   final case class PageFiling(typ: String, filinghref: String,
@@ -383,9 +437,11 @@ object CompanyPageXml {
     dbf.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
     val doc = dbf.newDocumentBuilder().parse(
       new java.io.ByteArrayInputStream(m.group(1).getBytes("UTF-8")))
+    // values are trimmed: real pages indent them (`<filinghref>` opens a
+    // new line in `aapl_10q_filings.xml`)
     def text(parent: org.w3c.dom.Element, tag: String): String = {
       val ns = parent.getElementsByTagName(tag)
-      if (ns.getLength == 0) null else ns.item(0).getTextContent
+      if (ns.getLength == 0) null else ns.item(0).getTextContent.trim
     }
     val root = doc.getDocumentElement
     val infoNodes = root.getElementsByTagName("companyinfo")

@@ -1,77 +1,119 @@
 package graft.fetch
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.api.Filings
 import graft.queries.ParseQueries
+import graft.sources.dsv2.CikPageReader
 
-/** Pagination-loop semantics per `core/company.py:269-303` and
-  * `tests/core/test_company.py:113+` (count truncation, pagination
-  * exhaustion).
+/** A fresh filesystem copy of [[ParseQueries.paginatedPages]] in the
+  * `$root/browse-edgar/<cik>/start_<n>.xml` mirror layout, for specs that
+  * change or delete the mirror under a query.
   */
-/** Fetch log shared across local-mode tasks (single test JVM); top-level
-  * so the fetch closure serializes without dragging the suite along.
-  */
-object FetchLog extends Serializable {
-  val urls = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  val loggingFetch: Fetcher.FetchFn = { url =>
-    urls.add(url)
-    ParseQueries.memFetch(ParseQueries.paginatedPages)(url)
+object CompanyMirror {
+  def fresh(): String = {
+    val root = java.nio.file.Files.createTempDirectory("edgar").toString
+    ParseQueries.paginatedPages.foreach { case (url, xml) =>
+      // mem://<cik>/start_<n> → $root/browse-edgar/<cik>/start_<n>.xml
+      val Array(cik, page) = url.stripPrefix("mem://").split("/")
+      val p = java.nio.file.Paths.get(root, "browse-edgar", cik, page + ".xml")
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.write(p, xml.getBytes("UTF-8"))
+    }
+    root
   }
 }
 
+/** The company page loop's semantics per `core/company.py:269-303` and
+  * `tests/core/test_company.py:113+` (count truncation, pagination
+  * exhaustion), pinned on the `edgar-company` scan and on
+  * [[Filings.CompanyQuery.entries]], which reads through it. Request
+  * sequences come from the scan's http tier over a canned session
+  * ([[Fetcher.httpTransport]]) that serves the same fixture pages.
+  */
 class CompanyPaginatorSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def loggingFetch: Fetcher.FetchFn = FetchLog.loggingFetch
+  private val Base = "https://replay.invalid/cgi-bin/browse-edgar"
+
+  /** The fixture page a request names by its CIK and start params. */
+  private def fixture(url: String): (Int, Array[Byte]) = {
+    val params = url.split('?')(1).split('&')
+      .map(_.split("=", 2)).map(kv => kv(0) -> kv(1)).toMap
+    ParseQueries.paginatedPages
+      .get(s"mem://${params("CIK")}/start_${params("start")}")
+      .fold((404, Array.empty[Byte]))(xml => (200, xml.getBytes("UTF-8")))
+  }
+
+  /** Runs `body` with the http tier answering through `answer`; returns
+    * its result and the URLs requested, in order.
+    */
+  private def replaying[A](answer: String => (Int, Array[Byte]))(
+      body: => A): (A, Seq[String]) = {
+    val log = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    Fetcher.httpTransport = Some { (url, _) => log.add(url); answer(url) }
+    try { val a = body; (a, log.asScala.toSeq) }
+    finally Fetcher.httpTransport = None
+  }
+
+  private def httpScan(ciks: String, options: (String, String)*): DataFrame =
+    options.foldLeft(spark.read.format("edgar-company")
+      .option("root", Base).option("ciks", ciks)
+      .option("batchSize", "2").option("rate", "1000000")
+      .option("userAgent", "graft-test test@example.com")) {
+      case (r, (k, v)) => r.option(k, v)
+    }.load()
+
+  private def starts(urls: Seq[String], cik: String): Seq[Int] =
+    urls.filter(_.contains(s"CIK=$cik"))
+      .map(_.split("start=")(1).split("&")(0).toInt)
+
+  /** The [[CikPageReader.PageFetchException]] a failed scan raised. */
+  private def pageFetchFailure(e: Throwable): CikPageReader.PageFetchException =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).collectFirst {
+      case p: CikPageReader.PageFetchException => p
+    }.getOrElse(fail("no PageFetchException in the cause chain", e))
 
   test("early exit: page past count is never requested; missing and empty " +
     "pages stop pagination (company.py:287-293)") {
-    FetchLog.urls.clear()
-    val pages = CompanyPaginator.paginate(spark,
-      Seq("0001000045", "0001000120", "0001000200"),
-      (cik, start) => s"mem://$cik/start_$start", loggingFetch,
-      batchSize = 2, count = Some(3), filingType = Some("10-Q"),
-      globalRate = 1e6)
-    val got = pages.select("cik_key", "page_start").collect()
-      .map(r => (r.getString(0), r.getInt(1))).toSet
-    // A fetched two pages, B one (start_2 404s), C one empty page
-    assert(got == Set(("0001000045", 0), ("0001000045", 2),
-      ("0001000120", 0), ("0001000200", 0)))
-    val requested = FetchLog.urls.toArray.map(_.toString).toSet
+    val (rows, urls) = replaying(fixture) {
+      httpScan("0001000045,0001000120,0001000200",
+        "type" -> "10-Q", "count" -> "3")
+        .select("cik_key", "page_start").collect()
+        .map(r => (r.getString(0), r.getInt(1))).toSet
+    }
+    assert(rows == Set(("0001000045", 0), ("0001000045", 2),
+      ("0001000120", 0)))
     // count reached for A at start_2 → start_4 never requested, even
     // though the fixture has it
-    assert(!requested.contains("mem://0001000045/start_4"))
+    assert(starts(urls, "0001000045") == Seq(0, 2))
     // B's missing page WAS requested (that's how exhaustion is detected)
-    assert(requested.contains("mem://0001000120/start_2"))
+    assert(starts(urls, "0001000120") == Seq(0, 2))
     // C stopped after its single empty page
-    assert(!requested.exists(_.startsWith("mem://0001000200/start_2")))
+    assert(starts(urls, "0001000200") == Seq(0))
   }
 
   test("count=None exhausts pagination instead of early-exiting") {
-    FetchLog.urls.clear()
-    val pages = CompanyPaginator.paginate(spark, Seq("0001000045"),
-      (cik, start) => s"mem://$cik/start_$start", loggingFetch,
-      batchSize = 2, count = None, filingType = Some("10-Q"),
-      globalRate = 1e6)
-    // start_4 has filings, start_6 is missing → 3 pages collected
-    assert(pages.count() == 3)
-    assert(FetchLog.urls.toArray.map(_.toString).toSet
-      .contains("mem://0001000045/start_6"))
+    val (pages, urls) = replaying(fixture) {
+      httpScan("0001000045", "type" -> "10-Q")
+        .select("page_start").collect().map(_.getInt(0)).toSet
+    }
+    // start_4 has a 10-Q, start_6 is missing → all three pages read
+    assert(pages == Set(0, 2, 4))
+    assert(starts(urls, "0001000045") == Seq(0, 2, 4, 6))
   }
 
-  test("entriesFromPages: type filter, BAD_LINK drop, per-CIK truncation") {
-    val cq = Filings.CompanyQuery(
+  test("CompanyQuery.entries: type filter, BAD_LINK drop, per-CIK " +
+    "truncation") {
+    val rows = Filings.CompanyQuery(
       lookups = Seq("0001000045", "0001000120", "0001000200"),
       filingType = Some("10-Q"), count = Some(1),
       startDate = None, endDate = None, batchSize = 2)
-    val pages = CompanyPaginator.paginate(spark, cq.lookups,
-      (cik, start) => s"mem://$cik/start_$start",
-      ParseQueries.memFetch(ParseQueries.paginatedPages),
-      batchSize = 2, count = Some(1), filingType = Some("10-Q"),
-      globalRate = 1e6)
-    val rows = cq.entriesFromPages(pages)
+      .entries(spark, ParseQueries.companyMirrorDir)
       .select("cik", "txt_url").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     // count=1 → newest valid 10-Q per company
@@ -84,98 +126,69 @@ class CompanyPaginatorSpec extends AnyFunSuite {
 
   test("filingType=None counts every filing toward count and keeps all " +
     "usable links (company.py:262-266)") {
-    val cq = Filings.CompanyQuery(
+    // page start_0 already has 2 filings (10-Q + 10-K) → early exit
+    val (_, urls) = replaying(fixture) {
+      httpScan("0001000045", "count" -> "2").count()
+    }
+    assert(starts(urls, "0001000045") == Seq(0))
+    val types = Filings.CompanyQuery(
       lookups = Seq("0001000045"), filingType = None, count = Some(2),
       startDate = None, endDate = None, batchSize = 2)
-    val pages = CompanyPaginator.paginate(spark, cq.lookups,
-      (cik, start) => s"mem://$cik/start_$start",
-      ParseQueries.memFetch(ParseQueries.paginatedPages),
-      batchSize = 2, count = Some(2), filingType = None, globalRate = 1e6)
-    // page start_0 already has 2 filings (10-Q + 10-K) → early exit
-    assert(pages.count() == 1)
-    val rows = cq.entriesFromPages(pages)
+      .entries(spark, ParseQueries.companyMirrorDir)
       .select("type").collect().map(_.getString(0)).sorted.toSeq
-    assert(rows == Seq("10-K", "10-Q"))
+    assert(types == Seq("10-K", "10-Q"))
   }
 
   test("CompanyQuery.entries end-to-end over a filesystem page mirror " +
     "(mirrorUrl layout + Fetcher.local)") {
-    val root = java.nio.file.Files.createTempDirectory("edgar").toString
-    ParseQueries.paginatedPages.foreach { case (url, xml) =>
-      // mem://<cik>/start_<n> → $root/browse-edgar/<cik>/start_<n>.xml
-      val rel = url.stripPrefix("mem://")
-      val p = java.nio.file.Paths.get(root, "browse-edgar",
-        rel.split("/")(0), rel.split("/")(1) + ".xml")
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, xml.getBytes("UTF-8"))
-    }
     val q = Filings(cikLookup = Seq("0001000045", "0001000120", "0001000200"),
       filingType = Some("10-Q"), count = Some(3))
       .asInstanceOf[Filings.CompanyQuery].copy(batchSize = 2)
-    val rows = q.entries(spark, root)
+    val rows = q.entries(spark, CompanyMirror.fresh())
       .select("cik", "txt_url").collect().map(_.getString(0)).sorted.toSeq
     assert(rows == Seq("0001000045", "0001000045", "0001000120"))
   }
 
   test("a non-404 fetch error raises instead of silently ending pagination " +
     "(client.py:154-177 raises; only missing pages mean exhaustion)") {
-    val flakyFetch: Fetcher.FetchFn = { url =>
-      if (url.endsWith("start_2"))
-        throw new RuntimeException("connection reset by peer")
-      ParseQueries.memFetch(ParseQueries.paginatedPages)(url)
+    val e = intercept[Exception] {
+      replaying { url =>
+        if (url.contains("start=2&"))
+          throw new RuntimeException("connection reset by peer")
+        fixture(url)
+      }(httpScan("0001000045", "type" -> "10-Q").collect())
     }
-    val e = intercept[CompanyPaginator.PageFetchException] {
-      CompanyPaginator.paginate(spark, Seq("0001000045"),
-        (cik, start) => s"mem://$cik/start_$start", flakyFetch,
-        batchSize = 2, count = None, filingType = Some("10-Q"),
-        globalRate = 1e6).count()
-    }
-    assert(e.getMessage.contains("connection reset"))
-    assert(e.getMessage.contains("0001000045"))
+    val msg = pageFetchFailure(e).getMessage
+    assert(msg.contains("connection reset"))
+    assert(msg.contains("cik=0001000045"))
+    assert(msg.contains("start=2"))
   }
 
   test("a transient error whose message embeds 'FileNotFoundException' " +
     "raises instead of being misread as end-of-pages") {
-    val spoofFetch: Fetcher.FetchFn = { url =>
-      if (url.endsWith("start_2"))
-        throw new RuntimeException(
-          "wrapped: caused by java.io.FileNotFoundException (transient mount)")
-      ParseQueries.memFetch(ParseQueries.paginatedPages)(url)
+    val e = intercept[Exception] {
+      replaying { url =>
+        if (url.contains("start=2&"))
+          throw new RuntimeException(
+            "wrapped: caused by java.io.FileNotFoundException (transient mount)")
+        fixture(url)
+      }(httpScan("0001000045", "type" -> "10-Q").collect())
     }
-    val e = intercept[CompanyPaginator.PageFetchException] {
-      CompanyPaginator.paginate(spark, Seq("0001000045"),
-        (cik, start) => s"mem://$cik/start_$start", spoofFetch,
-        batchSize = 2, count = None, filingType = Some("10-Q"),
-        globalRate = 1e6).count()
-    }
-    assert(e.getMessage.contains("FileNotFoundException"))
+    assert(pageFetchFailure(e).getMessage.contains("FileNotFoundException"))
   }
 
-  test("deep pagination keeps plan depth bounded via periodic collapse") {
-    // 40 pages for one CIK, each with one filing; page 40 missing → stop
-    def deepPage(start: Int) =
-      s"<companyfilings><companyinfo><cik>0009</cik><name>DEEP</name>" +
-        "<sic>1</sic></companyinfo><results><filing><type>10-Q</type>" +
-        s"<filinghref>https://x/$start-index.htm</filinghref>" +
-        "<datefiled>2021-01-01</datefiled><formname>x</formname>" +
-        "</filing></results></companyfilings>"
-    val pages = (0 until 40).map(i =>
-      s"mem://0009/start_${i * 2}" -> deepPage(i * 2)).toMap
-    val got = CompanyPaginator.paginate(spark, Seq("0009"),
-      (cik, start) => s"mem://$cik/start_$start",
-      ParseQueries.memFetch(pages), batchSize = 2, count = None,
-      filingType = Some("10-Q"), globalRate = 1e6, collapseEvery = 8)
-    assert(got.count() == 40)
-    // after collapse, lineage since the last checkpoint is at most
-    // collapseEvery unions; without it this plan would hold 40
-    def planSize(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
-      1 + p.children.map(planSize).sum
-    assert(planSize(got.queryExecution.optimizedPlan) <= 3 * 8 + 4,
-      s"plan too deep:\n${got.queryExecution.optimizedPlan.treeString}")
+  test("CompanyQuery refuses a lookup containing ',' instead of splitting " +
+    "it into two CIKs") {
+    val e = intercept[IllegalArgumentException] {
+      Filings.CompanyQuery(lookups = Seq("0001000045,0001000120"),
+        filingType = None, count = None, startDate = None, endDate = None)
+        .entries(spark, ParseQueries.companyMirrorDir)
+    }
+    assert(e.getMessage.contains("0001000045,0001000120"))
   }
 
   test("pageUrl builds the browse-edgar request (company.py:96-144)") {
-    val u = CompanyPaginator.pageUrl(
+    val u = CikPageReader.pageUrl(
       "https://www.sec.gov/cgi-bin/browse-edgar", "0000320193",
       Some("10-K"), 20, 10, dateb = Some("20211231"))
     assert(u == "https://www.sec.gov/cgi-bin/browse-edgar?" +

@@ -158,16 +158,23 @@ class FetchSpec extends AnyFunSuite {
       lookups, cikMap, fetch, l => s"mem://cik/$l", globalRate = 1e6)) == 1)
   }
 
-  test("paginate requests each page once across downstream actions") {
-    val fetch = FetchRequests.counting(
-      ParseQueries.memFetch(ParseQueries.paginatedPages))
-    // A: start_0, start_2 (count reached); B: start_0, start_2 (missing);
-    // C: start_0 (empty) — five work rows over two rounds
-    assert(requestsAcrossThreeActions(CompanyPaginator.paginate(spark,
-      Seq("0001000045", "0001000120", "0001000200"),
-      (cik, start) => s"mem://$cik/start_$start", fetch,
-      batchSize = 2, count = Some(3), filingType = Some("10-Q"),
-      globalRate = 1e6)) == 5)
+  test("CompanyQuery.entries requests each page once: three actions on " +
+    "the result read the materialized rows, not the pages") {
+    val root = CompanyMirror.fresh()
+    val df = graft.api.Filings.CompanyQuery(
+      lookups = Seq("0001000045", "0001000120", "0001000200"),
+      filingType = Some("10-Q"), count = Some(3),
+      startDate = None, endDate = None, batchSize = 2).entries(spark, root)
+    // the returned plan is rooted at the materialized blocks: no scan
+    // left in it to re-run
+    assert(!df.queryExecution.executedPlan.toString.contains("EdgarCompanyScan"),
+      df.queryExecution.executedPlan.toString)
+    // and with the pages gone, every action still reads the same rows
+    scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
+    assert(df.count() == 3)
+    assert(df.collect().map(_.getAs[String]("cik")).sorted.toSeq ==
+      Seq("0001000045", "0001000045", "0001000120"))
+    assert(df.filter(col("type") === "10-Q").count() == 3)
   }
 
   test("fetchAll plans its work list once: it runs the jobs of one " +

@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.sources.{CikMapReader, CompanyIndexReader}
+import graft.sources.CikMapReader
+import graft.sources.dsv2.{CompanyPageXml, PageFilter}
 
 class EntryOpsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -56,15 +57,24 @@ class EntryOpsSpec extends AnyFunSuite {
     "(company.py:253-266, tests/data/filings/aapl_10q_filings.xml)") {
     val xml = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(TestSpark.resource("aapl_10q_filings.xml"))))
-    val pages = Seq(xml).toDF("value")
-    val all = CompanyIndexReader.parsePages(pages)
-    assert(all.count() == 13) // 13 <filing> rows in the fixture
-    val tenQ = CompanyIndexReader.filterFilingLinks(all, "10-Q")
-    val urls = tenQ.select("txt_url").as[String].collect()
-    assert(urls.forall(_.endsWith(".txt")))
-    // fixture contains BAD_LINK rows that must be dropped
-    assert(all.filter($"filinghref" === "BAD_LINK").count() > 0)
-    assert(tenQ.filter($"filinghref" === "BAD_LINK").count() == 0)
+    // the edgar-company reader's page → rows step (full-schema rows:
+    // type at 4, filinghref at 5, txt_url at 8)
+    val all = PageFilter(filingType = None).rows("0000320193", 0, xml)
+    assert(all.filings == 13) // 13 <filing> rows in the fixture
+    val tenQ = PageFilter(filingType = Some("10-Q")).rows("0000320193", 0, xml)
+    assert(tenQ.rows.nonEmpty)
+    assert(tenQ.rows.forall(_(4).toString == "10-Q"))
+    assert(tenQ.rows.forall { r =>
+      val url = r(8).toString // trimmed: the fixture indents its hrefs
+      url.startsWith("https://") && url.endsWith(".txt")
+    })
+    // fixture contains BAD_LINK rows (its three 10-Q/As): they count
+    // toward `count` as type matches but are dropped from the rows
+    val hrefs = CompanyPageXml.parse(xml).filings.map(_.filinghref)
+    assert(hrefs.count(_ == "BAD_LINK") == 3)
+    assert(!all.rows.exists(_(5).toString == "BAD_LINK"))
+    val amends = PageFilter(filingType = Some("10-Q/A")).rows("0000320193", 0, xml)
+    assert(amends.matched == 3 && amends.rows.isEmpty)
   }
 
   test("entry filters reach the parquet scan as PushedFilters " +

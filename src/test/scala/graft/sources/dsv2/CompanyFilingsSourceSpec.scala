@@ -10,8 +10,8 @@ import graft.queries.ParseQueries
 import graft.sources.CompanyIndexReader
 
 /** DSv2 company source: pushdown reaches the scan, the page loop early-
-  * exits, and output is row-identical to the driver-loop paginator path
-  * on the same mirror (`core/company.py:96-144,269-303` semantics).
+  * exits, and output matches the hand-derived golden rows on the same
+  * mirror (`core/company.py:96-144,269-303` semantics).
   */
 class CompanyFilingsSourceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -28,24 +28,31 @@ class CompanyFilingsSourceSpec extends AnyFunSuite {
   private def scanDesc(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  test("row-identical to the CompanyPaginator + entriesFromPages path " +
-    "(type + count + per-CIK truncation)") {
-    val cq = Filings.CompanyQuery(
+  test("CompanyQuery.entries and the raw scan both return " +
+    "q_company_paginate's hand-derived golden rows (type + count + " +
+    "per-CIK truncation)") {
+    // the oracle's golden rows (ParseQueries, q_company_paginate): A
+    // reaches count=3 type-matches at start_2 (BAD_LINK counts, then is
+    // dropped), B stops on its missing page, C's empty page yields nothing
+    val golden = Set(
+      ("0001000045", "ACME CORP", "10-Q", "2021-04-29",
+        "https://www.sec.gov/Archives/edgar/data/1000045/0000912057-21-000303.txt"),
+      ("0001000045", "ACME CORP", "10-Q", "2021-06-30",
+        "https://www.sec.gov/Archives/edgar/data/1000045/0000912057-21-000601.txt"),
+      ("0001000120", "BETA FUND", "10-Q", "2021-02-10",
+        "https://www.sec.gov/Archives/edgar/data/1000120/0000912057-21-000201.txt"))
+    def rows(df: DataFrame) =
+      df.select("cik", "company_name", "type", "date_filed", "txt_url")
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
+          r.getDate(3).toString, r.getString(4))).toSet
+    val viaQuery = Filings.CompanyQuery(
       lookups = Seq("0001000045", "0001000120", "0001000200"),
       filingType = Some("10-Q"), count = Some(3),
       startDate = None, endDate = None, batchSize = 2)
-    val viaPaginator = cq
       .entries(spark, ParseQueries.companyMirrorDir)
-      .select("cik_key", "page_start", "cik", "company_name", "type",
-        "filinghref", "date_filed", "formname", "txt_url")
-      .collect().map(_.toSeq).toSet
-    val viaDsv2 = CompanyIndexReader.limitPerCompany(
-      read("type" -> "10-Q", "count" -> "3"), 3)
-      .select("cik_key", "page_start", "cik", "company_name", "type",
-        "filinghref", "date_filed", "formname", "txt_url")
-      .collect().map(_.toSeq).toSet
-    assert(viaDsv2 == viaPaginator)
-    assert(viaDsv2.nonEmpty)
+    assert(rows(viaQuery) == golden)
+    assert(rows(CompanyIndexReader.limitPerCompany(
+      read("type" -> "10-Q", "count" -> "3"), 3)) == golden)
   }
 
   test("date and type WHERE clauses push into the scan and filter " +

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.fetch.{CompanyPaginator, Fetcher}
+import graft.fetch.Fetcher
 import graft.queries.ParseQueries
 
 /** Record/replay gate for the `http(s)://` tier of the DSv2 company
@@ -33,16 +33,21 @@ class CompanyReplaySpec extends AnyFunSuite {
     ParseQueries.paginatedPages.map { case (k, xml) =>
       val Array(cik, st) = k.stripPrefix("mem://").split("/")
       val start = st.stripPrefix("start_").toInt
-      CompanyPaginator.pageUrl(Base, cik, None, start, 2) ->
+      CikPageReader.pageUrl(Base, cik, None, start, 2) ->
         xml.getBytes("UTF-8")
     }
 
-  private final class Replay(pages: Map[String, Array[Byte]]) {
+  /** @param failOnce a URL whose first request answers HTTP 500. */
+  private final class Replay(pages: Map[String, Array[Byte]],
+      failOnce: Option[String] = None) {
     val log = new java.util.concurrent.ConcurrentLinkedQueue[
       (String, String, Long)]()
+    private val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
     val transport: Fetcher.HttpTransport = (url, ua) => {
       log.add((url, ua, System.nanoTime()))
-      pages.get(url) match {
+      if (failOnce.contains(url) && failed.compareAndSet(false, true))
+        (500, Array.empty[Byte])
+      else pages.get(url) match {
         case Some(b) => (200, b)
         case None => (404, Array.empty[Byte])
       }
@@ -66,6 +71,14 @@ class CompanyReplaySpec extends AnyFunSuite {
       .option("userAgent", UA)
       .load()
 
+  private def mirrorRows: Set[Seq[Any]] =
+    spark.read.format("edgar-company")
+      .option("root", ParseQueries.companyMirrorDir)
+      .option("ciks", Ciks.mkString(","))
+      .option("batchSize", "2").option("rate", "1000000")
+      .load()
+      .select(Cols.head, Cols.tail: _*).collect().map(_.toSeq).toSet
+
   test("http tier over replay is row-identical to the mirror tier, " +
     "sends the User-Agent on every request, and stops at the 404 " +
     "terminator") {
@@ -74,13 +87,7 @@ class CompanyReplaySpec extends AnyFunSuite {
       readHttp(rate = "1000000")
         .select(Cols.head, Cols.tail: _*).collect().map(_.toSeq).toSet
     }
-    val viaMirror = spark.read.format("edgar-company")
-      .option("root", ParseQueries.companyMirrorDir)
-      .option("ciks", Ciks.mkString(","))
-      .option("batchSize", "2").option("rate", "1000000")
-      .load()
-      .select(Cols.head, Cols.tail: _*).collect().map(_.toSeq).toSet
-    assert(viaHttp == viaMirror)
+    assert(viaHttp == mirrorRows)
     assert(viaHttp.nonEmpty)
     val reqs = rp.requests
     assert(reqs.nonEmpty && reqs.forall(_._2 == UA),
@@ -113,5 +120,17 @@ class CompanyReplaySpec extends AnyFunSuite {
     assert(elapsedSec >= 2.0,
       s"4-request chain at ~1 req/s finished in ${elapsedSec}s — " +
         "limiter not engaged on the http path")
+  }
+
+  test("a transient 5xx is retried like fetchAll: a page that answers 500 " +
+    "once, then 200, still yields the mirror tier's rows") {
+    val flaky = CikPageReader.pageUrl(Base, "0001000045", None, 2, 2)
+    val rp = new Replay(replayPages, failOnce = Some(flaky))
+    val viaHttp = withReplay(rp) {
+      readHttp(rate = "1000000")
+        .select(Cols.head, Cols.tail: _*).collect().map(_.toSeq).toSet
+    }
+    assert(viaHttp == mirrorRows)
+    assert(rp.requests.count(_._1 == flaky) == 2)
   }
 }
