@@ -36,34 +36,13 @@ object Bench {
     // fixtures outside the timing loop (the registry entries do no I/O)
     graft.queries.ParseQueries.feedFixtureDir
     graft.queries.ParseQueries.companyMirrorDir
-    // Per-query Spark-JOB counts (r17 verdict #6): this host's wall
-    // clock drifts 1.2-3x within a run, so job counts ride beside the
-    // seconds in bench_out.json as a deterministic secondary metric
-    // (job submission is synchronous with the timed action; listener
-    // DELIVERY is async, so each snapshot waits for the counter to go
-    // quiet AFTER its timing stops — best-effort at bus saturation,
-    // never part of the timed region).
-    val jobCounter = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobCounter.incrementAndGet(); ()
-        }
-      })
-    def jobCountSnapshot(): Long = {
-      val deadline = System.nanoTime() + 200000000L // 200 ms bound
-      var last = jobCounter.get()
-      var quietSince = System.nanoTime()
-      while (System.nanoTime() < deadline &&
-          System.nanoTime() - quietSince < 20000000L) { // 20 ms quiet
-        Thread.sleep(2)
-        val now = jobCounter.get()
-        if (now != last) { last = now; quietSince = System.nanoTime() }
-      }
-      last
-    }
-    val jobCounts = scala.collection.mutable.LinkedHashMap[String, Long]()
+    // Per-query Spark work (r17 verdict #6): this host's wall clock
+    // drifts 1.2-3x within a run, so each query's first pass runs under
+    // the profiler and its job counts (deterministic) plus stages, tasks,
+    // shuffle, spill, per-job times and stream phases ride beside the
+    // seconds in bench_out.json. Read once after the suite, after a bus
+    // drain, so the counts are exact and nothing waits inside the loop.
+    val profile = Profile.install(spark)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // deterministic name order: map-hash order would hand the codegen/JIT
     // warmup cost to a different query every run
@@ -132,9 +111,7 @@ object Bench {
         val (sec, err) = timeOnce(af)
         if (err.isEmpty) series += ((i, sec))
       }
-      val jobsBefore = jobCountSnapshot()
-      val (t1, err1) = timeOnce(fn)
-      jobCounts(name) = jobCountSnapshot() - jobsBefore
+      val (t1, err1) = profile.within(name)(timeOnce(fn))
       if (err1.isEmpty && baseline.get(name).exists(b => t1 > 3.0 * b))
         deferred += ((name, t1))
       (name, t1, err1)
@@ -180,33 +157,24 @@ object Bench {
         case _ => (name, t1, err)
       }
     }
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val qs = results.map { case (k, v, _) => jstr(k) + ":" + v }
+    val qs = results.map { case (k, v, _) => Json.str(k) + ":" + v }
       .mkString("{", ",", "}")
     // a failed query records err (not a near-zero timing passed off as
     // success) and is excluded from the total so timings stay comparable;
     // only failures appear in the map — an all-null map doubled the line
     // length and overflowed the driver's tail capture in round 3
     val errs = results.collect { case (k, _, Some(e)) =>
-      jstr(k) + ":" + jstr(e)
+      Json.str(k) + ":" + Json.str(e)
     }.mkString("{", ",", "}")
     val nFailed = results.count(_._3.isDefined)
     val total = results.collect { case (_, v, None) => v }.sum
-    val anchorJson = anchors.map { case (k, v) => jstr(k) + ":" + v }
+    val anchorJson = anchors.map { case (k, v) => Json.str(k) + ":" + v }
       .mkString("{", ",", "}")
     val seriesJson = series.map { case (i, v) => s"[$i,$v]" }
       .mkString("[", ",", "]")
-    val retryJson = retried.map { case (k, a, b) => jstr(k) + s":[$a,$b]" }
+    val retryJson = retried.map { case (k, a, b) => Json.str(k) + s":[$a,$b]" }
       .mkString("{", ",", "}")
-    val retryAnchorJson = retryAnchors.map { case (k, v) => jstr(k) + ":" + v }
+    val retryAnchorJson = retryAnchors.map { case (k, v) => Json.str(k) + ":" + v }
       .mkString("{", ",", "}")
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"n_failed":$nFailed,"anchors":$anchorJson,"anchor_series":$seriesJson,"retries":$retryJson,"retry_anchors":$retryAnchorJson,"sf":"$sfDir"}"""
     // stdout is the driver contract (one JSON line), but the driver's
@@ -217,15 +185,19 @@ object Bench {
     // still prints FIRST (nothing removed from the contract), and a
     // compact summary line prints LAST so any bounded tail ends with
     // one complete, parsable JSON object; the full record (plus the
-    // per-query job counts, r17 verdict #6) lives in bench_out.json
+    // per-query job counts and profiles) lives in bench_out.json
     // under $SPARK_GRAFT_OUT (default `target/`, so a run at the repo
     // root leaves the tracked files alone).
-    val jobJson = jobCounts.map { case (k, v) => jstr(k) + ":" + v }
-      .mkString("{", ",", "}")
-    val fileJson = json.dropRight(1) + s""","job_counts":$jobJson}"""
+    val profiles = profile.drained()
+    val jobJson = results.map { case (k, _, _) =>
+      Json.str(k) + ":" + profiles(k).jobs.size }.mkString("{", ",", "}")
+    val profileJson = results.map { case (k, _, _) =>
+      Json.str(k) + ":" + profiles(k).json }.mkString("{", ",", "}")
+    val fileJson = json.dropRight(1) +
+      s""","job_counts":$jobJson,"profile":$profileJson}"""
     val outFile = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_OUT", "target"), "bench_out.json")
-    val compactLine = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"anchors":$anchorJson,"detail":${jstr(outFile.toString)},"sf":"$sfDir"}"""
+    val compactLine = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"anchors":$anchorJson,"detail":${Json.str(outFile.toString)},"sf":"$sfDir"}"""
     try {
       java.nio.file.Files.createDirectories(outFile.toAbsolutePath.getParent)
       java.nio.file.Files.write(outFile, (fileJson + "\n").getBytes("UTF-8"))

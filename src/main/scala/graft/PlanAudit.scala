@@ -26,12 +26,13 @@ object PlanAudit {
     spark.sparkContext.setLogLevel("ERROR")
     graft.queries.ParseQueries.feedFixtureDir
     graft.queries.ParseQueries.companyMirrorDir
+    val profile = Profile.install(spark)
     names.foreach { n =>
       try {
-        val t0 = System.nanoTime()
-        val plan = SparkEntry.queries(n)(spark, sfDir)
-          .queryExecution.executedPlan.toString
-        val ms = (System.nanoTime() - t0) / 1000000
+        val plan = profile.within(n) {
+          SparkEntry.queries(n)(spark, sfDir).queryExecution.executedPlan.toString
+        }
+        val jobs = profile.drained()(n).jobs.count(_.sqlExecution)
         // pre-execution AQE plans carry no codegen markers, so count
         // the structural facts that survive: shuffles, broadcast joins,
         // window sorts, and file scans
@@ -39,11 +40,13 @@ object PlanAudit {
         val bhj = "BroadcastHashJoin".r.findAllIn(plan).length
         val win = "Window".r.findAllIn(plan).length
         val scans = "FileScan".r.findAllIn(plan).length
-        // buildMs tells PlanFactsSpec's Audited list which queries are
-        // construction-lazy (plan compile only) vs eager (checkpoint /
-        // fixture work at build time) — the spec guards the lazy ones
+        // buildJobs — the jobs of SQL executions (checkpoints, streams,
+        // collects) the build ran; a parquet schema read runs a job too,
+        // but outside any execution — tells PlanFactsSpec which queries
+        // build lazily (0) and which eagerly; the default suite guards
+        // the lazy ones
         println(s"PLAN $n exchanges=$ex broadcastJoins=$bhj " +
-          s"windows=$win fileScans=$scans buildMs=$ms")
+          s"windows=$win fileScans=$scans buildJobs=$jobs")
         if (sys.env.contains("SPARK_GRAFT_PLAN_DUMP")) println(plan)
       } catch {
         case e: Throwable => println(s"PLAN $n ERROR ${e.getMessage}")

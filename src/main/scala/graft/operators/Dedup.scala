@@ -24,10 +24,22 @@ object Dedup {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.operators.Dedup")
 
+  /** Run `warn` once the caller's first action on a frame observed by
+    * `obs` completes, with a reader of its Long metrics (null reads 0). A
+    * callback on the observation's future, not a waiting thread: a frame
+    * that is built but never executed leaves nothing behind. It runs on
+    * the thread that completes the observation, so `warn` only logs.
+    */
+  private[operators] def onObserved(obs: org.apache.spark.sql.Observation)(
+      warn: (String => Long) => Unit): Unit =
+    obs.future.foreach { row =>
+      warn(k => Option(row.getAs[java.lang.Long](k)).fold(0L)(_.longValue))
+    }(scala.concurrent.ExecutionContext.parasitic)
+
   /** Attach a `CollectMetrics` node counting index rows that fall in
-    * over-cap buckets, and WARN from the pair generator ITSELF (on a
-    * daemon observer thread, as soon as the caller's first action on the
-    * result completes) whenever any bucket was excluded. The cap changes
+    * over-cap buckets, and WARN from the pair generator ITSELF (through
+    * [[onObserved]], as soon as the caller's first action on the result
+    * completes) whenever any bucket was excluded. The cap changes
     * results, so it must be loud at the point of use — mirroring how Bench
     * surfaces per-query errors — not only visible to callers who know to
     * run the separate `*BucketStats` diagnostic. Accumulator-backed: adds
@@ -39,19 +51,14 @@ object Dedup {
     val out = indexed.observe(obs,
       sum(when(col(szCol) > maxBucketSize, 1L).otherwise(0L))
         .as("rows_in_capped_buckets"))
-    val t = new Thread(() => {
-      val capped = obs.get.get("rows_in_capped_buckets") match {
-        case Some(l: java.lang.Long) => l.longValue()
-        case _ => 0L
-      }
+    onObserved(obs) { cnt =>
+      val capped = cnt("rows_in_capped_buckets")
       if (capped > 0)
         log.warn(s"$opName: $capped index rows fell in (band, key) buckets " +
           s"larger than maxBucketSize=$maxBucketSize and were EXCLUDED from " +
           s"pairing; true near-dup pairs inside those buckets are not " +
           s"emitted. Run the matching bucket-stats function to size the cap.")
-    }, s"graft-$opName-cap-observer")
-    t.setDaemon(true)
-    t.start()
+    }
     out
   }
 
@@ -75,11 +82,7 @@ object Dedup {
     val out = indexed.observe(obs,
       sum(intentionalCol).as("buckets_capped_intentional"),
       sum(shrapnelCol).as("buckets_capped_collision"))
-    val t = new Thread(() => {
-      def cnt(k: String): Long = obs.get.get(k) match {
-        case Some(l: java.lang.Long) => l.longValue()
-        case _ => 0L
-      }
+    onObserved(obs) { cnt =>
       val intentional = cnt("buckets_capped_intentional")
       val shrapnel = cnt("buckets_capped_collision")
       if (intentional > 0)
@@ -92,9 +95,7 @@ object Dedup {
           s"grams merged by a 64-bit hash collision (collision shrapnel): " +
           s"member grams may be individually under-cap but ALL their " +
           s"postings were dropped with the bucket.")
-    }, s"graft-$opName-cap-observer")
-    t.setDaemon(true)
-    t.start()
+    }
     out
   }
 

@@ -324,33 +324,14 @@ object ImageDedup {
     val obs = org.apache.spark.sql.Observation()
     val observed = frames.observe(obs,
       sum(col("dropped")).as("frames_dropped"))
-    val t = new Thread(() => {
-      // bounded wait (r15 advice): if the caller never runs an action
-      // on the returned frame — or the listener bus drops the
-      // SQLExecutionEnd event — the future never completes; time out
-      // instead of leaking a forever-parked thread per call. The WARN
-      // is best-effort by design; the cap itself is enforced upstream.
-      val droppedFrames =
-        try {
-          scala.concurrent.Await.result(obs.future,
-              scala.concurrent.duration.Duration(15, "minutes"))
-            .getValuesMap[Any](Seq("frames_dropped"))
-            .get("frames_dropped") match {
-            case Some(l: java.lang.Long) => l.longValue()
-            case _ => 0L
-          }
-        } catch {
-          case _: java.util.concurrent.TimeoutException => 0L
-          case _: InterruptedException => 0L
-        }
+    Dedup.onObserved(obs) { cnt =>
+      val droppedFrames = cnt("frames_dropped")
       if (droppedFrames > 0)
         log.warn(s"videoFrameNearDupPairs: $droppedFrames frames beyond " +
           s"maxFramesPerVideo=$maxFramesPerVideo were DROPPED before " +
           "sketching; near-dup pairs involving those frames are not " +
           "emitted. Raise maxFramesPerVideo deliberately for long clips.")
-    }, "graft-videoFrameNearDupPairs-truncation-observer")
-    t.setDaemon(true)
-    t.start()
+    }
     nearDupPairs(observed.drop("dropped"), hammingMax, maxBucketSize)
   }
 }

@@ -67,7 +67,8 @@ object CoreQueries {
     * and a production deployment sizes this to its volume via
     * `graft.gate.statePartitions`.
     *
-    * Why 1 and not 4 (r18, StreamProfile measurement): per micro-batch
+    * Why 1 and not 4 (r18, per-batch `durationMs` measurement, which
+    * Bench's `profile.<query>.stream` now records): per micro-batch
     * a stream-stream join runs 4 state stores PER partition, and each
     * store commit is a delta-file write + fsync into the checkpoint —
     * at 4 partitions that is 16 fsyncs per batch, measured at

@@ -144,26 +144,15 @@ object PatternSink {
       case m: Map[_, _] if m.isEmpty => "{}"
       case m: Map[_, _] =>
         m.asInstanceOf[Map[String, Any]].toSeq.sortBy(_._1)
-          .map { case (k, x) => s"$pad${jsonStr(k)}: ${renderJson(x, depth + 1)}" }
+          .map { case (k, x) => s"$pad${graft.Json.str(k)}: ${renderJson(x, depth + 1)}" }
           .mkString("{\n", ",\n", s"\n$close}")
       case s: Seq[_] if s.isEmpty => "[]"
       case s: Seq[_] =>
         s.map(x => pad + renderJson(x, depth + 1))
           .mkString("[\n", ",\n", s"\n$close]")
       case null => "null"
-      case s: String => jsonStr(s)
+      case s: String => graft.Json.str(s)
       case other => other.toString
     }
   }
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }

@@ -20,7 +20,6 @@ trait PlanFactsChecks { self: AnyFunSuite =>
   protected lazy val spark = TestSpark.spark
 
   protected val SfDir = "/root/testdata/sf0.01"
-  protected val LazyBuildMs = 300
 
   /** Queries excluded even from the slow suite: their plan facts are
     * nondeterministic across sessions (sample-derived literals) or
@@ -43,15 +42,22 @@ trait PlanFactsChecks { self: AnyFunSuite =>
     candidates.maxBy(_._1)._2
   }
 
+  /** Query -> (plan facts, Spark jobs its build ran). */
   protected lazy val baseline: Map[String, (Facts, Int)] = {
     val Line =
       ("""PLAN (\S+) exchanges=(\d+) broadcastJoins=(\d+) windows=(\d+) """ +
-        """fileScans=(\d+) buildMs=(\d+)""").r
+        """fileScans=(\d+) buildJobs=(\d+)""").r
     scala.io.Source.fromFile(baselineFile).getLines().collect {
-      case Line(n, e, b, w, s, ms) =>
-        n -> (Facts(e.toInt, b.toInt, w.toInt, s.toInt), ms.toInt)
+      case Line(n, e, b, w, s, jobs) =>
+        n -> (Facts(e.toInt, b.toInt, w.toInt, s.toInt), jobs.toInt)
     }.toMap
   }
+
+  /** Builds with `buildJobs=0` ran no action, checkpoint or stream (a
+    * parquet schema read is not counted): they compile a plan and
+    * nothing more. */
+  protected lazy val lazyBuilds: Set[String] =
+    baseline.collect { case (n, (_, 0)) if !Excluded(n) => n }.toSet
 
   protected def currentFacts(name: String): Facts = {
     val plan = SparkEntry.queries(name)(spark, SfDir)
@@ -76,24 +82,22 @@ trait PlanFactsChecks { self: AnyFunSuite =>
   }
 }
 
-/** Default-run half of the gate: every query whose recorded `buildMs`
-  * is under [[PlanFactsChecks.LazyBuildMs]] constructs lazily (plan
-  * compilation only — no fixture IO, no eager localCheckpoint, no
-  * streaming harness), so guarding it costs milliseconds per query in
-  * the ordinary `sbt test` run; eager queries live in
-  * [[SlowPlanFactsSpec]].
+/** Default-run half of the gate: every query whose recorded build ran
+  * no Spark job (`buildJobs=0`) constructs lazily (plan compilation
+  * only — no eager localCheckpoint, no streaming harness, no collect),
+  * so guarding it costs milliseconds per query in the ordinary
+  * `sbt test` run; eager queries live in [[SlowPlanFactsSpec]]. A job
+  * count, unlike a build time, does not move with host load.
   */
 class PlanFactsSpec extends AnyFunSuite with PlanFactsChecks {
 
-  private lazy val audited: Seq[String] = baseline.collect {
-    case (n, (_, ms)) if ms < LazyBuildMs && !Excluded(n) => n
-  }.toSeq.sorted
+  private lazy val audited: Seq[String] = lazyBuilds.toSeq.sorted
 
   test("the lazy-build majority of the registry is plan-guarded") {
     assert(audited.size >= 100,
-      s"only ${audited.size} queries under ${LazyBuildMs}ms in " +
+      s"only ${audited.size} queries with buildJobs=0 in " +
         s"${baselineFile.getName} — regenerate the baseline " +
-        "(did PlanAudit stop emitting buildMs?)")
+        "(did PlanAudit stop emitting buildJobs?)")
   }
 
   test("plan facts unchanged across the audited registry") {
@@ -113,9 +117,8 @@ class PlanFactsSpec extends AnyFunSuite with PlanFactsChecks {
   */
 class SlowPlanFactsSpec extends AnyFunSuite with PlanFactsChecks {
 
-  private lazy val slowAudited: Seq[String] = baseline.collect {
-    case (n, (_, ms)) if ms >= LazyBuildMs && !Excluded(n) => n
-  }.toSeq.sorted
+  private lazy val slowAudited: Seq[String] =
+    (baseline.keySet -- lazyBuilds -- Excluded).toSeq.sorted
 
   // a plain boolean: a cancel message renders the assumed expression,
   // and `sys.env.contains(…)` would render the whole environment
@@ -127,13 +130,8 @@ class SlowPlanFactsSpec extends AnyFunSuite with PlanFactsChecks {
 
   test("fast + slow suites cover the ENTIRE committed baseline") {
     optIn()
-    val fast = baseline.collect {
-      case (n, (_, ms)) if ms < LazyBuildMs && !Excluded(n) => n
-    }.toSet
-    val covered = fast ++ slowAudited ++ Excluded
-    val missing = baseline.keySet -- covered
-    assert(missing.isEmpty, s"baseline lines guarded by neither suite: " +
-      missing.toSeq.sorted.mkString(", "))
+    // every baseline line is lazy or eager by construction; what can
+    // still go wrong is a baseline out of step with the registry
     val stale = baseline.keySet -- SparkEntry.queries.keySet
     assert(stale.isEmpty, "baseline lines for queries no longer in the " +
       "registry: " + stale.toSeq.sorted.mkString(", "))

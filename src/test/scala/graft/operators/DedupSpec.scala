@@ -191,6 +191,16 @@ class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(stats.getAs[Long]("capped_buckets") > 0) // surfaced, not silent
   }
 
+  test("a cap observer on a frame that never runs leaves no thread behind") {
+    val boiler = (0L until 50L).map(i => (i, base.trim)).toDF("doc_id", "text")
+    // built, never executed: its observation never completes
+    Dedup.minhashCandidates(boiler, "doc_id", "text", maxBucketSize = 10)
+    val observers = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.isAlive && t.getName.matches("graft-.*-cap-observer"))
+    assert(observers.isEmpty,
+      s"parked cap observers: ${observers.map(_.getName).toSeq}")
+  }
+
   test("simhash band guard caps degenerate buckets, pairs stay bounded") {
     // 50 identical docs land on one key in EVERY band — unguarded this is
     // O(n²) = 1225 pairs; with the cap they are excluded and reported

@@ -10,7 +10,9 @@ the anchor-median ratio between the two runs before flagging anything:
 Accepts either a raw bench_out.json or a driver BENCH_r{N}.json wrapper
 (with a "parsed" payload). Prints the anchor ratio, then every query
 whose normalized time changed more than `thresh` x (default 1.5),
-slowest-regression first, plus totals.
+slowest-regression first, plus totals, then every common query whose
+Spark job count (`job_counts`, written to bench_out.json) changed. Job
+counts do not depend on host speed, so they need no normalizing.
 """
 import json
 import statistics
@@ -64,6 +66,20 @@ def main():
           f"({tb/host/ta:.2f}x); {len(rows)} queries past {thresh}x; "
           f"only-in-a: {len(set(qa)-set(qb))}, "
           f"only-in-b: {len(set(qb)-set(qa))}")
+    compare_jobs(a, b, common)
+
+
+def compare_jobs(a, b, common):
+    ja, jb = a.get("job_counts"), b.get("job_counts")
+    if ja is None or jb is None:
+        print("job counts: skipped, a record has no job_counts "
+              "(a driver BENCH wrapper, or a bench_out.json older than them)")
+        return
+    both = [q for q in common if q in ja and q in jb]
+    changed = [q for q in both if ja[q] != jb[q]]
+    for q in changed:
+        print(f"jobs {ja[q]:4d} \u2192 {jb[q]:4d}  {q}")
+    print(f"job counts: {len(changed)} of {len(both)} common queries changed")
 
 
 if __name__ == "__main__":
