@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.EdgarFunctions
 import graft.operators.Materialize
-import graft.ops.{ComboPlanner, EntryOps}
+import graft.ops.ComboPlanner
 import graft.sources.{CompanyIndexReader, IndexReader}
 
 /** The user-facing dispatcher mirroring `secedgar.core.filings.filings`
@@ -23,9 +23,9 @@ import graft.sources.{CompanyIndexReader, IndexReader}
   *
   * Each query compiles to a DataFrame over a mirrored EDGAR archive root
   * (local/HDFS/object store), so the analytics tier is identical across
-  * strategies; only index-file selection differs — and with the analytic
-  * parquet layout ([[graft.sink.PatternSink.writeAnalytic]]) Catalyst's
-  * partition pruning performs the planner's file selection automatically.
+  * strategies; only index-file selection differs. Once saved with the
+  * analytic layout ([[graft.sink.PatternSink.writeAnalytic]]), `year`/
+  * `quarter` predicates prune partitions: later scans need no planner.
   */
 object Filings {
 
@@ -37,9 +37,7 @@ object Filings {
   final case class DailyQuery(date: LocalDate, filter: Option[Column])
       extends FilingsQuery {
     def entries(spark: SparkSession, root: String): DataFrame = {
-      val path = s"$root/daily-index/${date.getYear}/QTR${ComboPlanner.quarterOf(date)}/" +
-        s"master.${EdgarFunctions.eraIdxDateStr(date)}.idx"
-      val df = IndexReader.read(spark, path)
+      val df = IndexReader.readStrict(spark, dailyIdx(root, date))
       filter.map(df.filter).getOrElse(df)
     }
   }
@@ -49,40 +47,30 @@ object Filings {
     require(year >= 1993, s"Given year must be greater than 1993, given $year")
     require(quarter >= 1 && quarter <= 4, s"Quarter must be between 1 and 4, given $quarter")
     def entries(spark: SparkSession, root: String): DataFrame = {
-      val path = s"$root/full-index/$year/QTR$quarter/master.idx"
-      val df = IndexReader.read(spark, path)
+      val df = IndexReader.readStrict(spark, quarterlyIdx(root, year, quarter))
       filter.map(df.filter).getOrElse(df)
     }
   }
 
+  /** A date range as ONE multi-path scan over the decomposition's
+    * quarterly `master.idx` files and uncovered-day daily files, clipped to
+    * [start, end] — which implies every quarterly `OnOrAfter`/`OnOrBefore`
+    * residual, and is the reference's documented contract (`combo.py:110-112`)
+    * that its lambda path leaks for a shared start/end quarter
+    * (`combo.py:186-192`). A missing daily idx is a day without filings
+    * (`combo.py:234-237`); a missing quarterly idx raises `EdgarQueryError`.
+    */
   final case class ComboQuery(start: LocalDate, end: LocalDate,
       filter: Option[Column], balancingPoint: Int = 30) extends FilingsQuery {
     def entries(spark: SparkSession, root: String): DataFrame = {
       val d = ComboPlanner.decompose(start, end, balancingPoint)
-      val parts: Seq[DataFrame] =
-        d.quarters.map { q =>
-          val base = QuarterlyQuery(q.year, q.quarter, None).entries(spark, root)
-          q.filter match {
-            case ComboPlanner.All => base
-            case ComboPlanner.OnOrAfter(s) =>
-              base.filter(col("date_filed") >= lit(java.sql.Date.valueOf(s)))
-            case ComboPlanner.OnOrBefore(e) =>
-              base.filter(col("date_filed") <= lit(java.sql.Date.valueOf(e)))
-          }
-        } ++ ComboPlanner.uncoveredDays(d).flatMap { day =>
-          // redundant end-edge daily scan pruned (see uncoveredDays);
-          // missing daily idx == no filings that day (`combo.py:234-237`)
-          scala.util.Try(DailyQuery(day, None).entries(spark, root)).toOption
-        }
-      val unioned = EntryOps.unionByKey(parts)
-        // the range bounds as a residual predicate: the reference's
-        // documented contract ("date before which no filings fetched",
-        // `combo.py:110-112`) — its lambda path leaks pre-start days of a
-        // shared start/end quarter (`combo.py:186-192` has no >= start),
-        // which only the filesystem sink masks
+      val days = ComboPlanner.uncoveredDays(d).map(dailyIdx(root, _))
+        .filter(IndexReader.idxExists(spark, _))
+      val scanned = IndexReader.readStrict(spark,
+        d.quarters.map(q => quarterlyIdx(root, q.year, q.quarter)) ++ days: _*)
         .filter(col("date_filed").between(
           lit(java.sql.Date.valueOf(start)), lit(java.sql.Date.valueOf(end))))
-      filter.map(unioned.filter).getOrElse(unioned)
+      filter.map(scanned.filter).getOrElse(scanned)
     }
   }
 
@@ -156,6 +144,12 @@ object Filings {
         "You must provide at least one of cik_lookup or date(s)")
     }
   }
+
+  private def dailyIdx(root: String, date: LocalDate): String =
+    s"$root/daily-index/${date.getYear}/QTR${ComboPlanner.quarterOf(date)}/" +
+      s"master.${EdgarFunctions.eraIdxDateStr(date)}.idx"
+  private def quarterlyIdx(root: String, year: Int, quarter: Int): String =
+    s"$root/full-index/$year/QTR$quarter/master.idx"
 
   private def isExactQuarterRange(s: LocalDate, e: LocalDate): Boolean = {
     val q = ComboPlanner.quarterOf(s)

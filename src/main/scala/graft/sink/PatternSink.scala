@@ -14,9 +14,9 @@ import graft.functions.EdgarFunctions
   * QTR{quarter}, {accession_number}, {type}.
   *
   * Two tiers:
-  *   - [[writeAnalytic]]: the 100 TB path — parquet `partitionBy` on the
-    *   pattern columns; partition pruning then serves date/cik predicates
-  *     for free (the combo planner's work, done by the storage layout);
+  *   - [[writeAnalytic]]: the 100 TB path — parquet in quarter directories
+  *     sorted by `cik`; partition pruning serves date predicates (the combo
+  *     planner's work, done by the storage layout), statistics serve cik;
   *   - [[writeExact]]: byte-exact file-tree layout via `foreachPartition`,
   *     for drop-in parity with the reference's output directory shape.
   */
@@ -45,15 +45,18 @@ object PatternSink {
     if (parts.isEmpty) lit("") else concat(parts.toSeq: _*)
   }
 
-  /** Analytic tier: parquet partitioned by (year, quarter, cik) — the
-    * layout Catalyst prunes with `date_filed`/`cik` predicates.
+  /** Analytic tier: parquet partitioned by (year, quarter), files sorted
+    * by `cik` (a local sort, no shuffle) so row-group statistics serve
+    * `cik` predicates. Files follow tasks × quarters, not CIKs, and `cik`
+    * stays a string (a `cik=` directory reads back as an unpadded int).
     */
   def writeAnalytic(entries: DataFrame, directory: String): Unit =
     entries
       .withColumn("year", year(col("date_filed")))
       .withColumn("quarter", quarter(col("date_filed")))
+      .sortWithinPartitions("year", "quarter", "cik")
       .write.mode("overwrite")
-      .partitionBy("year", "quarter", "cik")
+      .partitionBy("year", "quarter")
       .parquet(directory)
 
   /** Exact tier: reproduce the reference's file tree. Input must carry the

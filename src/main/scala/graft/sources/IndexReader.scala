@@ -19,19 +19,18 @@ import graft.functions.EdgarFunctions
 object IndexReader {
 
   /** Raw idx lines with provenance: (file, line_no, value). */
-  def readLines(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("wholetext", "true").text(path)
+  def readLines(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.option("wholetext", "true").text(paths: _*)
       .select(input_file_name().as("file"), col("value"))
       .select(col("file"),
         posexplode(split(col("value"), "\n")).as(Seq("line_no", "value")))
 
   /** Parsed FilingEntry rows (without the running count — that is
-    * filter-dependent, see [[graft.ops.EntryOps.withRunningCount]]).
-    * Raises the reference's "no filings for day/quarter" behavior
-    * (`_index.py:140-142`) as an `EdgarQueryError` when nothing matches.
+    * filter-dependent, see [[graft.ops.EntryOps.withRunningCount]]); any
+    * number of idx files read as one relation.
     */
-  def read(spark: SparkSession, path: String): DataFrame =
-    EdgarFunctions.parseIdxLines(readLines(spark, path))
+  def read(spark: SparkSession, paths: String*): DataFrame =
+    EdgarFunctions.parseIdxLines(readLines(spark, paths: _*))
       .withColumn("file", input_file_name())
 
   final class EdgarQueryError(msg: String) extends RuntimeException(msg)
@@ -46,11 +45,12 @@ object IndexReader {
     fs.exists(hadoopPath)
   }
 
-  /** Strict variant: error like `EDGARQueryError` when the idx is absent. */
-  def readStrict(spark: SparkSession, path: String): DataFrame = {
-    if (!idxExists(spark, path))
+  /** Strict variant: `EDGARQueryError` naming an absent idx (`_index.py:140-142`). */
+  def readStrict(spark: SparkSession, paths: String*): DataFrame = {
+    paths.find(!idxExists(spark, _)).foreach { path =>
       throw new EdgarQueryError(
         s"File $path not found. There may be no filings for the given day/quarter.")
-    read(spark, path)
+    }
+    read(spark, paths: _*)
   }
 }

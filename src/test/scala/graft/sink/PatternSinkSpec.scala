@@ -2,6 +2,8 @@ package graft.sink
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -32,16 +34,50 @@ class PatternSinkSpec extends AnyFunSuite {
       "0000950131-94-000021.txt")))
   }
 
-  test("analytic tier partitions by (year, quarter, cik) for pruning") {
+  test("analytic tier lays out (year, quarter) directories sorted by cik") {
+    // 50 zero-padded CIKs in one input partition, over two quarters of
+    // two years
+    val rows = (0 until 50).flatMap { i =>
+      val cik = f"${1000000 + i}%010d"
+      Seq((cik, s"CO $i", "10-K", java.sql.Date.valueOf("2003-11-03")),
+        (cik, s"CO $i", "10-Q", java.sql.Date.valueOf("2004-02-10")))
+    }
+    val input = rows.toDF("cik", "company_name", "form_type", "date_filed")
+      .repartition(1)
     val dir = Files.createTempDirectory("sink3").toString + "/t"
-    PatternSink.writeAnalytic(entries, dir)
+    PatternSink.writeAnalytic(input, dir)
+
+    def ls(p: java.nio.file.Path): Seq[String] = {
+      val s = Files.list(p)
+      try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+      finally s.close()
+    }
+    assert(ls(Paths.get(dir)).filter(_.startsWith("year=")) == Seq("year=2003", "year=2004"))
+    val quarters = Seq("year=2003/quarter=4", "year=2004/quarter=1").map(Paths.get(dir, _))
+    quarters.foreach { q =>
+      val names = ls(q)
+      assert(!names.exists(_.startsWith("cik=")), s"cik partition under $q: $names")
+      assert(names.count(_.endsWith(".parquet")) == 1,
+        s"one input partition must write one file per quarter: $q has $names")
+    }
+
     val read = spark.read.parquet(dir)
-    assert(read.count() == 20)
-    // partition pruning: filter on partition cols must prune the scan
-    val pruned = read.filter($"year" === 1993 && $"cik" === "29082")
-    val scan = pruned.queryExecution.executedPlan.toString
-    assert(pruned.count() == 1)
-    assert(Files.exists(Paths.get(dir, "year=1993/quarter=4/cik=29082")))
+    assert(read.count() == 100)
+    assert(read.schema("cik").dataType == org.apache.spark.sql.types.StringType)
+    // a zero-padded CIK reads back as the same string
+    val padded = read.filter($"cik" === "0001000045")
+    assert(padded.select("cik").as[String].collect().toSeq ==
+      Seq("0001000045", "0001000045"))
+
+    val pruned = read.filter($"year" === 2003 && $"cik" === "0001000045")
+    val scan = pruned.queryExecution.executedPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }.get
+    assert(scan.metadata("PushedFilters").contains("EqualTo(cik,0001000045)"),
+      scan.metadata("PushedFilters"))
+    assert(scan.selectedPartitions.partitionCount == 1,
+      s"year predicate must prune to one quarter: ${scan.metadata("PartitionFilters")}")
+    assert(pruned.select("form_type").as[String].collect().toSeq == Seq("10-K"))
   }
 
   test("co-bucketed tables join with zero exchange (bucketBy locality)") {
