@@ -672,37 +672,22 @@ object Dedup {
         .join(labels.select(col("id").as("dst"), col("label")), Seq("dst"))
         .groupBy(col("src").as("id"))
         .agg(min(col("label")).as("nlabel"))
-      // changed-label count rides the checkpoint's own action as an
-      // Observation (the ckptFp recipe — bounded wait, explicit-agg
-      // fallback): the r16 loop paid a second join+action per round for
-      // the same convergence boolean
-      val obs = org.apache.spark.sql.Observation()
-      val updated = labels.withColumnRenamed("label", "__old")
-        .join(neighborMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("__old"), coalesce(col("nlabel"), col("__old")))
-            .as("label"),
-          col("__old"))
-        .observe(obs, coalesce(sum(
-            when(col("label") =!= col("__old"), 1L).otherwise(0L)),
-          lit(0L)).as("nchg"))
-        .drop("__old")
-        .localCheckpoint(true)
-      val nChanged =
-        try scala.concurrent.Await.result(obs.future,
-            scala.concurrent.duration.Duration(60, "seconds"))
-          .getAs[Long]("nchg")
-        catch {
-          case _: java.util.concurrent.TimeoutException =>
-            // fallback loses the dropped __old column — recompute the
-            // diff against the PREVIOUS labels frame (both sides are
-            // materialized RDDs, one bounded join)
-            updated.join(labels.withColumnRenamed("label", "__old"),
-                Seq("id"))
-              .filter(col("label") =!= col("__old")).count()
-        }
-      converged = nChanged == 0L
-      labels = updated
+      // changed-label count rides the checkpoint's own action
+      // (Materialize.observed): the r16 loop paid a second join+action
+      // per round for the same convergence boolean. `__old` is dropped
+      // after the checkpoint so the metric can be recounted over it.
+      val (ck, nchg) = Materialize.observed(
+        labels.withColumnRenamed("label", "__old")
+          .join(neighborMin, Seq("id"), "left")
+          .select(col("id"),
+            least(col("__old"), coalesce(col("nlabel"), col("__old")))
+              .as("label"),
+            col("__old")),
+        "Dedup.resolveKeepers",
+        coalesce(sum(when(col("label") =!= col("__old"), 1L)
+          .otherwise(0L)), lit(0L)).as("nchg"))
+      converged = nchg.getLong(0) == 0L
+      labels = ck.drop("__old")
       i += 1
     }
     if (!converged)
@@ -834,55 +819,24 @@ object Dedup {
     // set-equality check (`except`) runs ONCE, when the fingerprint first
     // repeats — so convergence is still decided exactly, without paying a
     // full anti-join shuffle every round. The fingerprint rides the
-    // checkpoint's own materialization as an Observation (r15): one job
-    // per round computes next-edges AND their fingerprint, where the
+    // checkpoint's own materialization (Materialize.observed, r15): one
+    // job per round computes next-edges AND their fingerprint, where the
     // separate post-checkpoint agg cost a second job per round — pure
     // fixed-overhead, but CC fixed overhead is the floor under every
-    // family/dedup/graph probe. The observation completes on the
-    // listener bus after the eager checkpoint's action — normally
-    // instantaneous, but the bus can DROP events under pressure, so the
-    // wait is bounded (r15 advice: a bare obs.get would hang CC) and
-    // falls back to an explicit aggregation over the checkpointed frame
-    // (one extra job, exceptional path only).
+    // family/dedup/graph probe. Round edge lists are corpus-scale on the
+    // distributed path, so they take the size-tiered materialization
+    // (r18, §5: reliable checkpoint above the threshold so a lost
+    // executor can't kill the round lineage).
     // DECIMAL(38,0) sum: ANSI-overflow-proof for full-range 64-bit hashes
-    def ckptFp(e: DataFrame): (DataFrame, (Long, String)) = {
-      val obs = org.apache.spark.sql.Observation()
-      // round edge lists are corpus-scale on the distributed path —
-      // size-tiered materialization (r18, §5: reliable checkpoint
-      // above the threshold so a lost executor can't kill the round
-      // lineage; the Observation completes on either tier)
-      val ck = Materialize.eager(e.observe(obs,
-          count(lit(1)).as("n"),
-          coalesce(sum(xxhash64(col("u"), col("v"))
-            .cast(DecimalType(38, 0))),
-            lit(0).cast(DecimalType(38, 0))).as("hs")))
-      val m: Map[String, Any] =
-        try {
-          scala.concurrent.Await.result(obs.future,
-              scala.concurrent.duration.Duration(60, "seconds"))
-            .getValuesMap[Any](Seq("n", "hs"))
-        } catch {
-          case _: java.util.concurrent.TimeoutException =>
-            val r = ck.agg(count(lit(1)).as("n"),
-              coalesce(sum(xxhash64(col("u"), col("v"))
-                .cast(DecimalType(38, 0))),
-                lit(0).cast(DecimalType(38, 0))).as("hs")).head()
-            Map("n" -> r.get(0), "hs" -> r.get(1))
-        }
-      val n = m("n") match {
-        case l: java.lang.Long => l.longValue()
-        case other => String.valueOf(other).toLong
-      }
-      val hs = m("hs") match {
-        case d: java.math.BigDecimal => d.toPlainString
-        case d: scala.math.BigDecimal => d.bigDecimal.toPlainString
-        case other => String.valueOf(other)
-      }
-      (ck, (n, hs))
-    }
+    def ckptFp(e: DataFrame): (DataFrame, org.apache.spark.sql.Row) =
+      Materialize.observed(e, "Dedup.connectedComponents",
+        count(lit(1)).as("n"),
+        coalesce(sum(xxhash64(col("u"), col("v"))
+          .cast(DecimalType(38, 0))),
+          lit(0).cast(DecimalType(38, 0))).as("hs"))
     var (edges, fp) = ckptFp(
       canon(pairs.select(col("id_a").as("u"), col("id_b").as("v"))))
-    if (fp._1 == 0L) {
+    if (fp.getLong(0) == 0L) {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(Seq(StructField("id", LongType), StructField("label", LongType))))

@@ -60,11 +60,13 @@ import org.apache.spark.sql.functions._
   * actions, no per-hop checkpoints; the whole closure materializes
   * inside the single components pass that consumes it (the r15 probe
   * spent ~4 driver actions per hop discovering closure dynamically,
-  * the dominant term of its fixed-phase floor). A store without the
-  * metadata file (pre-r16 layout) falls back to the dynamic per-hop
-  * loop. Depth past `maxChase` still throws loudly — chains deeper
-  * than the bridging generations since the last fold mean
-  * compaction is overdue, and a silent partial closure would mislabel.
+  * the dominant term of its fixed-phase floor). A labels store without
+  * the metadata file was not written by [[init]]: every operation on
+  * it throws, naming the path, as [[SegmentStore.read]] does for a
+  * store without `_schema`. Depth past `maxChase` throws loudly too —
+  * chains deeper than the bridging generations since the last fold
+  * mean compaction is overdue, and a silent partial closure would
+  * mislabel.
   *
   * Equality contract (the `q_family_append` / `q_family_chain`
   * oracles): with id spaces disjoint and no gram crossing the cap
@@ -108,15 +110,14 @@ object FamilyStore {
         maxDocsPerGram))
     writeIndexSegment(idx, -1L, indexPath, nBands)
     // the emptiness probe for the depth bound rides the label frame's
-    // own materialization as an Observation (r18, the ckptFp recipe —
-    // the separate isEmpty job was one fixed action per bootstrap)
-    val obsL = org.apache.spark.sql.Observation()
-    val lbl = Materialize.eager(SuffixDedup.familyLabels(idx,
-      maxDocsPerGram).filter(col("id") =!= col("label"))
-      .observe(obsL, count(lit(1)).as("n")))
+    // own materialization (r18, Materialize.observed — the separate
+    // isEmpty job was one fixed action per bootstrap)
+    val (lbl, nLbl) = Materialize.observed(SuffixDedup.familyLabels(idx,
+        maxDocsPerGram).filter(col("id") =!= col("label")),
+      "FamilyStore.init", count(lit(1)).as("n"))
     writeLabelSegment(lbl, -1L, labelsPath)
     SegmentStore.writeMeta(spark, labelsPath, "depth",
-      if (observedCount(obsL, lbl) == 0L) 0L else 1L)
+      nLbl.getLong(0).min(1L))
     // -1 (the bootstrap segment id — never a stream batch id) = "no
     // batch owns the current bound": any replayed batch re-bumps,
     // which over-estimates and is safe
@@ -180,20 +181,17 @@ object FamilyStore {
     // one scheduled job set), eager BEFORE the appends: both outputs
     // must reflect the pre-append store (lazy evaluation after the
     // writes would probe the batch against its own rows). The depth
-    // probe's two emptiness checks ride the same action as an
-    // Observation (the ckptFp recipe — bounded wait, explicit
-    // fallback): two more driver actions the r16 form paid per append
-    val obs = org.apache.spark.sql.Observation()
-    val combined = fams
-      .select(col("doc_id").as("id"), col("family").as("label"),
-        lit(1L).as("__isb"), lit(0).as("__kind"))
-      .unionByName(updates0.withColumn("__kind", lit(1)))
-      .observe(obs,
-        coalesce(sum(when(col("__kind") === 1, 1L)), lit(0L)).as("n"),
-        coalesce(sum(when(col("__kind") === 1 && col("__isb").isNull,
-          1L)), lit(0L)).as("nc"))
-      .drop("__isb")
-      .localCheckpoint(true)
+    // probe's two emptiness checks ride the same action
+    // (Materialize.observed): two more driver actions the r16 form paid
+    // per append
+    val (combined, upd) = Materialize.observed(fams
+        .select(col("doc_id").as("id"), col("family").as("label"),
+          lit(1L).as("__isb"), lit(0).as("__kind"))
+        .unionByName(updates0.withColumn("__kind", lit(1))),
+      "FamilyStore.processBatch",
+      coalesce(sum(when(col("__kind") === 1, 1L)), lit(0L)).as("n"),
+      coalesce(sum(when(col("__kind") === 1 && col("__isb").isNull,
+        1L)), lit(0L)).as("nc"))
     val famsOut = combined.filter(col("__kind") === 0)
       .select(col("id").as("doc_id"), col("label").as("family"))
     val updates = combined.filter(col("__kind") === 1)
@@ -201,9 +199,6 @@ object FamilyStore {
     // depth bound FIRST, before the label segment lands: +1 only when
     // a CORPUS-side id is re-pointed (a standing row may now chain
     // through it); batch-only updates start chains, never extend them.
-    // Cheap driver probes on the already checkpointed batch-scale
-    // updates frame. Legacy stores (no metadata file) stay legacy —
-    // the probe's dynamic loop needs no bound.
     //
     // ORDERING INVARIANT: the bound must only ever OVER-estimate — a
     // crash between the depth write and the segment write leaves an
@@ -216,34 +211,17 @@ object FamilyStore {
     // restart. The depth write precedes the depth_batch write for the
     // same reason: a crash between them makes the replay bump AGAIN
     // (over-estimate, safe), never skip a bump it still owes.
-    SegmentStore.readMeta(spark, labelsPath, "depth").foreach { old =>
-      val (nUpd, nCorpusUpd) =
-        try {
-          val r = scala.concurrent.Await.result(obs.future,
-            scala.concurrent.duration.Duration(60, "seconds"))
-          (r.getAs[Long]("n"), r.getAs[Long]("nc"))
-        } catch {
-          case _: java.util.concurrent.TimeoutException =>
-            val r = updates
-              .join(broadcast(batchIds.withColumn("__isb", lit(1L))),
-                Seq("id"), "left")
-              .agg(count(lit(1)).as("n"),
-                coalesce(sum(when(col("__isb").isNull, 1L)
-                  .otherwise(0L)), lit(0L)).as("nc"))
-              .head()
-            (r.getAs[Long]("n"), r.getAs[Long]("nc"))
-        }
-      val hasUpdates = nUpd > 0L
-      val deepens = nCorpusUpd > 0L
-      val alreadyBumped = SegmentStore
-        .readMeta(spark, labelsPath, "depth_batch").contains(batchId)
-      val next = if (deepens && !alreadyBumped) old.max(1L) + 1L
-        else if (hasUpdates) old.max(1L) else old
-      if (next != old)
-        SegmentStore.writeMeta(spark, labelsPath, "depth", next)
-      if (deepens && !alreadyBumped)
-        SegmentStore.writeMeta(spark, labelsPath, "depth_batch", batchId)
-    }
+    val old = recordedDepth(spark, labelsPath)
+    val hasUpdates = upd.getLong(0) > 0L
+    val deepens = upd.getLong(1) > 0L
+    val alreadyBumped = SegmentStore
+      .readMeta(spark, labelsPath, "depth_batch").contains(batchId)
+    val next = if (deepens && !alreadyBumped) old.max(1L) + 1L
+      else if (hasUpdates) old.max(1L) else old
+    if (next != old)
+      SegmentStore.writeMeta(spark, labelsPath, "depth", next)
+    if (deepens && !alreadyBumped)
+      SegmentStore.writeMeta(spark, labelsPath, "depth_batch", batchId)
     // the batch's index segment, derived from the probe's posting
     // frame (one gram pass per append, not two — the r16 form re-ran
     // familyIndex over the batch text the probe had already reduced
@@ -261,19 +239,26 @@ object FamilyStore {
     * plus one metadata read; no Spark job.
     */
   def stats(spark: SparkSession, indexPath: String,
-      labelsPath: String): (Long, Long) = {
-    val nSegments = SegmentStore.segmentCount(spark, indexPath)
-    val depth = SegmentStore.readMeta(spark, labelsPath, "depth")
-      .getOrElse(-1L)
-    (nSegments, depth)
-  }
+      labelsPath: String): (Long, Long) =
+    (SegmentStore.segmentCount(spark, indexPath),
+      recordedDepth(spark, labelsPath))
+
+  /** The recorded pointer-chain depth bound (`labelsPath/_depth`).
+    * [[init]] writes it right after the bootstrap label segment, so a
+    * labels store without it was not created by this object — throws,
+    * naming the path.
+    */
+  private def recordedDepth(spark: SparkSession, labelsPath: String): Long =
+    SegmentStore.readMeta(spark, labelsPath, "depth").getOrElse(
+      throw new IllegalStateException(
+        s"FamilyStore: no chain-depth record (_depth) under $labelsPath " +
+          "— not a labels store created by FamilyStore.init"))
 
   /** The store's compaction policy, under the AUTOMATED
     * checkpoint-safety rule (r16 verdict #4): fires when the recorded
     * chain depth exceeds `maxDepth` (probe cost grows with depth) or
     * the index store has accumulated more than `maxSegments` segments
-    * (small-file pressure) — a legacy store without depth metadata
-    * fires on the segment trigger only — and otherwise returns
+    * (small-file pressure), and otherwise returns
     * [[SegmentStore.CompactIdle]]. Reads the owning stream's committed
     * offsets from its checkpoint ([[SegmentStore.lastCommittedBatch]])
     * and never folds a segment whose batch is still replayable — its
@@ -341,13 +326,13 @@ object FamilyStore {
     * contributes at most one generation post-flatten and each live
     * batch's segment at most one (the structural per-batch deepening
     * bound) — written AFTER the fold so a crash can only leave the old
-    * (over-estimating, safe) bound. A legacy store (no depth metadata)
-    * gains the structural bound, upgrading it to the lazy probe path.
+    * (over-estimating, safe) bound.
     */
   def compactPrefix(spark: SparkSession, indexPath: String,
       labelsPath: String, upTo: Long, maxDocsPerGram: Int = 1000): Unit = {
     SegmentStore.completeFold(spark, indexPath)
     SegmentStore.completeFold(spark, labelsPath)
+    val recorded = recordedDepth(spark, labelsPath)
     // ---- labels: path-compress the prefix, fold into segment -1 ----
     val lbl = SegmentStore.read(spark, labelsPath)
       .filter(col("ingest_batch") <= upTo)
@@ -365,19 +350,16 @@ object FamilyStore {
         tag = "FamilyStore.compactPrefix")
       .withColumnRenamed("label", "final")
     // the flatten's emptiness (depth-bound input) rides its own
-    // materialization as an Observation (r18, the ckptFp recipe)
-    val obsF = org.apache.spark.sql.Observation()
-    val flat = Materialize.eager(latest.join(resolved, Seq("id"), "left")
-      .select(col("id"), coalesce(col("final"), col("label")).as("label"))
-      .filter(col("id") =!= col("label"))
-      .observe(obsF, count(lit(1)).as("n")))
+    // materialization (r18, Materialize.observed)
+    val (flat, nFlat) = Materialize.observed(
+      latest.join(resolved, Seq("id"), "left")
+        .select(col("id"), coalesce(col("final"), col("label")).as("label"))
+        .filter(col("id") =!= col("label")),
+      "FamilyStore.compactPrefix", count(lit(1)).as("n"))
     SegmentStore.foldPrefix(spark, labelsPath, upTo, flat)
     val nLive = SegmentStore.segmentIds(spark, labelsPath).count(_ > upTo)
-    val flattenedDepth = if (observedCount(obsF, flat) == 0L) 0L else 1L
-    val bound = SegmentStore.readMeta(spark, labelsPath, "depth")
-      .fold(flattenedDepth + nLive)(old =>
-        old.min(flattenedDepth + nLive))
-    SegmentStore.writeMeta(spark, labelsPath, "depth", bound)
+    SegmentStore.writeMeta(spark, labelsPath, "depth",
+      recorded.min(nFlat.getLong(0).min(1L) + nLive))
     // a folded (committed) bumping batch can never be replayed — re-arm
     // the replay-idempotence sentinel; a LIVE bumping batch keeps it
     if (SegmentStore.readMeta(spark, labelsPath, "depth_batch")
@@ -475,18 +457,15 @@ object FamilyStore {
     * closure is a forest the CC fixpoint flattens for free). Ids with
     * no row resolve to themselves via the caller's coalesce.
     *
-    * With depth metadata (r16 stores): composes exactly `depth` fetch
-    * generations LAZILY — per generation, the LATEST row per frontier
-    * id (broadcast frontier semi-join — the store is scanned, never
-    * shuffled), next frontier = the fetched label values. No driver
+    * Composes exactly the recorded `depth` of fetch generations LAZILY
+    * — per generation, the LATEST row per frontier id (broadcast
+    * frontier semi-join — the store is scanned, never shuffled), next
+    * frontier = the fetched label values. No driver
     * actions here at all; the closure materializes inside the caller's
     * components pass. Depth 0 (empty labels store) skips the store
     * read entirely. Throws when the recorded depth exceeds `maxChase`
     * — compaction is overdue, and a silent partial closure would
     * mislabel.
-    *
-    * Without metadata (pre-r16 layout): the dynamic per-hop loop,
-    * fetching until the frontier closes, `maxChase`-bounded.
     */
   private def fetchPointerClosure(spark: SparkSession, labelsPath: String,
       touched: DataFrame, maxChase: Int,
@@ -495,74 +474,26 @@ object FamilyStore {
       // identity rows (component centers label themselves) carry no
       // information — resolution already defaults to self
       .filter(col("id") =!= col("label"))
-    val empty = touched.select(col("id"), col("id").as("label")).limit(0)
-    SegmentStore.readMeta(spark, labelsPath, "depth") match {
-      case Some(depth) =>
-        if (depth > maxChase)
-          throw new IllegalStateException(
-            s"FamilyStore.fetchPointerClosure: recorded pointer-chain " +
-              s"depth $depth exceeds maxChase=$maxChase — run " +
-              "FamilyStore.maybeCompactChecked to flatten the labels " +
-              "store (or raise maxChase deliberately)")
-        var frontier = touched.select(col("id"))
-        var acc: Option[DataFrame] = None
-        var gen = 0L
-        while (gen < depth) {
-          val rows = store.join(broadcast(frontier), Seq("id"))
-            .groupBy(col("id"))
-            .agg(max_by(col("label"), col("ingest_batch")).as("label"))
-          acc = Some(acc.fold(rows)(_.unionByName(rows)))
-          frontier = rows.select(col("label").as("id")).distinct()
-          gen += 1
-        }
-        acc.getOrElse(empty)
-      case None =>
-        var frontier = touched.select(col("id")).distinct()
-          .localCheckpoint(true)
-        var visited = frontier
-        var pointers: Option[DataFrame] = None
-        var hops = 0
-        var closed = false
-        while (!closed && hops < maxChase) {
-          val rows = store.join(broadcast(frontier), Seq("id"))
-            .groupBy(col("id"))
-            .agg(max_by(col("label"), col("ingest_batch")).as("label"))
-            .localCheckpoint(true)
-          if (rows.isEmpty) closed = true
-          else {
-            pointers = Some(pointers.fold(rows)(_.unionByName(rows)))
-            frontier = rows.select(col("label").as("id")).distinct()
-              .join(visited, Seq("id"), "left_anti")
-              .localCheckpoint(true)
-            if (frontier.isEmpty) closed = true
-            else visited = visited.unionByName(frontier)
-              .localCheckpoint(true)
-          }
-          hops += 1
-        }
-        if (!closed)
-          throw new IllegalStateException(
-            s"FamilyStore.fetchPointerClosure: pointer chains deeper " +
-              s"than maxChase=$maxChase — run " +
-              "FamilyStore.maybeCompactChecked to flatten the labels " +
-              "store (or raise maxChase deliberately)")
-        pointers.getOrElse(empty)
+    val depth = recordedDepth(spark, labelsPath)
+    if (depth > maxChase)
+      throw new IllegalStateException(
+        s"FamilyStore.fetchPointerClosure: recorded pointer-chain " +
+          s"depth $depth exceeds maxChase=$maxChase — run " +
+          "FamilyStore.maybeCompactChecked to flatten the labels " +
+          "store (or raise maxChase deliberately)")
+    var frontier = touched.select(col("id"))
+    var acc: Option[DataFrame] = None
+    var gen = 0L
+    while (gen < depth) {
+      val rows = store.join(broadcast(frontier), Seq("id"))
+        .groupBy(col("id"))
+        .agg(max_by(col("label"), col("ingest_batch")).as("label"))
+      acc = Some(acc.fold(rows)(_.unionByName(rows)))
+      frontier = rows.select(col("label").as("id")).distinct()
+      gen += 1
     }
+    acc.getOrElse(touched.select(col("id"), col("id").as("label")).limit(0))
   }
-
-  /** Row count of an already-materialized frame, read from the
-    * Observation that rode its materialization — bounded wait with an
-    * explicit-count fallback (the ckptFp recipe: the listener bus can
-    * drop events under pressure, so a bare `obs.get` could hang).
-    */
-  private def observedCount(obs: org.apache.spark.sql.Observation,
-      materialized: DataFrame): Long =
-    try scala.concurrent.Await.result(obs.future,
-        scala.concurrent.duration.Duration(60, "seconds"))
-      .getAs[Long]("n")
-    catch {
-      case _: java.util.concurrent.TimeoutException => materialized.count()
-    }
 
   private def writeIndexSegment(index: DataFrame, batchId: Long,
       path: String, nBands: Int, dynamic: Boolean = false): Unit = {

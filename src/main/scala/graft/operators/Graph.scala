@@ -211,39 +211,30 @@ object Graph {
     def degrees(e: DataFrame): DataFrame =
       e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
-    // per-round survivor count rides the checkpoint's own action as an
-    // Observation (the ckptFp recipe — bounded wait, explicit-count
-    // fallback): one scheduled job set per peeling round instead of two
-    def ckptN(e: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = e.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-      val n =
-        try scala.concurrent.Await.result(obs.future,
-            scala.concurrent.duration.Duration(60, "seconds"))
-          .getAs[Long]("n")
-        catch {
-          case _: java.util.concurrent.TimeoutException => ck.count()
-        }
-      (ck, n)
-    }
-    var (cur, n) = ckptN(edges
+    // per-round survivor count rides the checkpoint's own action
+    // (Materialize.observed): one scheduled job set per peeling round
+    // instead of two
+    val (e0, n0) = Materialize.observed(edges
       .select(col(srcCol).cast(LongType).as("a"),
         col(dstCol).cast(LongType).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull &&
         col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("u"),
         greatest(col("a"), col("b")).as("v"))
-      .distinct())
+      .distinct(), "Graph.kCore", count(lit(1)).as("n"))
+    var cur = e0
+    var n = n0.getLong(0)
     var prev = -1L
     var round = 0
     while (n != prev && n > 0 && round < maxRounds) {
       prev = n
       val keep = degrees(cur).filter(col("deg") >= k).select("node")
-      val (ck, nn) = ckptN(cur
+      val (ck, nn) = Materialize.observed(cur
         .join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
-        .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi"))
+        .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi"),
+        "Graph.kCore", count(lit(1)).as("n"))
       cur = ck
-      n = nn
+      n = nn.getLong(0)
       round += 1
     }
     degrees(cur)
@@ -283,24 +274,12 @@ object Graph {
       .distinct()
       .localCheckpoint(true) // standing hash(src) layout for every round
     // per-hop frontier count rides the frontier checkpoint's own action
-    // as an Observation (the ckptFp recipe) — one job fewer per hop
-    // than the r16 count() loop. (r17 note: ALSO keeping `visited` as a
-    // lazy union of the per-hop frontiers was tried and MEASURED WORSE
-    // — 3.8 → 6.6 s at sf0.1 despite fewer jobs; the per-round
-    // anti-join against a k-piece union costs more than the one
-    // re-checkpoint it saves, so visited stays materialized per hop.)
-    def ckptN(e: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = e.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-      val n =
-        try scala.concurrent.Await.result(obs.future,
-            scala.concurrent.duration.Duration(60, "seconds"))
-          .getAs[Long]("n")
-        catch {
-          case _: java.util.concurrent.TimeoutException => ck.count()
-        }
-      (ck, n)
-    }
+    // (Materialize.observed) — one job fewer per hop than the r16
+    // count() loop. (r17 note: ALSO keeping `visited` as a lazy union of
+    // the per-hop frontiers was tried and MEASURED WORSE — 3.8 → 6.6 s
+    // at sf0.1 despite fewer jobs; the per-round anti-join against a
+    // k-piece union costs more than the one re-checkpoint it saves, so
+    // visited stays materialized per hop.)
     var visited = sources.select(col("node").cast(LongType))
       .distinct()
       .withColumn("hops", lit(0L))
@@ -309,12 +288,13 @@ object Graph {
     var hop = 1
     var frontierSize = frontier.count()
     while (hop <= maxHops && frontierSize > 0) {
-      val (next, n) = ckptN(ed
+      val (next, n) = Materialize.observed(ed
         .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("dst").as("node"))
         .distinct()
-        .join(visited.select("node"), Seq("node"), "left_anti"))
-      frontierSize = n
+        .join(visited.select("node"), Seq("node"), "left_anti"),
+        "Graph.bfsLevels", count(lit(1)).as("n"))
+      frontierSize = n.getLong(0)
       if (frontierSize > 0) {
         visited = visited
           .unionByName(next.withColumn("hops", lit(hop.toLong)))

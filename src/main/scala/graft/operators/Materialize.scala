@@ -1,6 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Size-tiered EAGER materialization — the shared helper behind every
   * "compute once, reuse from both consumers" checkpoint on the engine's
@@ -36,27 +42,36 @@ import org.apache.spark.sql.DataFrame
   * 8 GiB; `-1` pins the local tier unconditionally). The reliable
   * tier's directory comes from `spark.graft.checkpoint.dir` (default: a
   * tmpdir keyed by the application id; production points it at durable
-  * storage). Frames whose materialized partition count is below
-  * `spark.graft.localCheckpoint.measureMinPartitions` (default 16)
-  * skip the storage lookup outright — see the fast-path comment in
-  * [[eager]] for why that lookup must not run per tiny frame.
-  * Both ways of staying on the local tier without a measurement are
-  * logged: the fast-path skip at INFO (the expected case at gate
-  * scale), a storage lookup that finds no entry at WARN (a frame of
-  * any size then stays local unmeasured).
+  * storage). A frame whose materialized partition count times
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes` stays within the
+  * threshold skips the storage lookup outright (128 partitions at the
+  * defaults) — see the fast-path comment in [[eager]] for why that
+  * lookup must not run per tiny frame. Both ways of staying on the
+  * local tier without a measurement are logged: the fast-path skip at
+  * INFO (the expected case at gate scale), a storage lookup that finds
+  * no entry at WARN (a frame of any size then stays local unmeasured).
   *
   * Both tiers are EAGER and both truncate lineage — callers that rely
   * on "materialized before the next write mutates the store" (the
-  * pre-append-state contracts) are equally safe on either tier. An
-  * `Observation` riding the frame completes on either tier: it fires on
-  * the local materialization both paths start with.
+  * pre-append-state contracts) are equally safe on either tier.
+  *
+  * '''Observed checkpoints.''' The iterative operators (the dedup
+  * components loops, k-core, BFS, the family and suffix stores) read
+  * their per-round counts off the round's own materialization instead
+  * of paying a second action: [[observed]] attaches an `Observation`,
+  * which completes on either tier (it fires on the local
+  * materialization both paths start with). The observation arrives over
+  * the listener bus, which can drop events under pressure, so the wait
+  * is bounded; a missed (or empty) observation is recounted over the
+  * materialized frame — one extra job, logged at WARN with the
+  * caller's tag.
   */
 object Materialize {
 
   private lazy val log =
     org.slf4j.LoggerFactory.getLogger("graft.operators.Materialize")
   private val DefaultMaxLocalBytes: Long = 8L * 1024 * 1024 * 1024
-  private val DefaultMeasureMinPartitions = 16
+  private val ObservationWait = 60.seconds
 
   /** Eagerly materialize `df` on the size-appropriate tier (see object
     * doc). Returns the materialized frame; lineage is truncated on both
@@ -65,11 +80,10 @@ object Materialize {
   def eager(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val ck = df.localCheckpoint(true)
-    def confLong(key: String, dflt: Long): Long =
-      try spark.conf.get(key, dflt.toString).toLong
-      catch { case _: NumberFormatException => dflt }
     val maxLocal =
-      confLong("spark.graft.localCheckpoint.maxBytes", DefaultMaxLocalBytes)
+      try spark.conf.get("spark.graft.localCheckpoint.maxBytes",
+        DefaultMaxLocalBytes.toString).toLong
+      catch { case _: NumberFormatException => DefaultMaxLocalBytes }
     if (maxLocal < 0L) return ck
     val sc = spark.sparkContext
     val rdd = ck.queryExecution.analyzed.collectFirst {
@@ -80,17 +94,16 @@ object Materialize {
     // persistent RDD in the application — O(all checkpoints ever made)
     // per call, a tax that grows over a long-lived session (the CC
     // loop's per-round eager() doubled q_cc_components by suite
-    // position ~34). A frame that materialized into few post-AQE
-    // partitions (sized ~tens of MB each) cannot plausibly exceed a
-    // multi-GiB threshold, so the lookup is skipped for it entirely;
-    // the floor is deliberately far below maxBytes / advisory-size.
-    val minParts = confLong(
-      "spark.graft.localCheckpoint.measureMinPartitions",
-      DefaultMeasureMinPartitions.toLong)
-    if (rdd.forall(_.getNumPartitions < minParts)) {
-      log.info(s"eager: ${rdd.map(_.getNumPartitions).mkString} partitions " +
-        s"< measureMinPartitions=$minParts — tier measurement skipped, " +
-        "frame stays on the local tier")
+    // position ~34). AQE sizes post-shuffle partitions toward the
+    // advisory size, so a frame whose partition count times that size
+    // stays within maxBytes cannot plausibly exceed the threshold, and
+    // the lookup is skipped for it entirely.
+    val advisory = spark.sessionState.conf
+      .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    if (rdd.forall(_.getNumPartitions.toLong * advisory <= maxLocal)) {
+      log.info(s"eager: ${rdd.map(_.getNumPartitions).mkString} " +
+        s"partitions x $advisory B advisory <= maxBytes=$maxLocal — tier " +
+        "measurement skipped, frame stays on the local tier")
       return ck
     }
     // the checkpointed blocks' REAL footprint (driver-side status
@@ -115,5 +128,40 @@ object Materialize {
       // once `ck` is unreachable
       ck.checkpoint(eager = true)
     } else ck
+  }
+
+  /** [[eager]] with `metrics` read off the same materializing action:
+    * returns the materialized frame and one row of the metrics' values,
+    * in order and under their aliases. The observation is awaited at
+    * most 60 s; past that, or when it completes without values, the
+    * same aggregate is computed over the materialized frame and a WARN
+    * names `tag`. The materialized frame keeps every column of `df`, so
+    * a metric may read a column the caller drops afterwards.
+    */
+  def observed(df: DataFrame, tag: String,
+      metrics: Column*): (DataFrame, Row) =
+    observedWith(df, tag, metrics, obs =>
+      try Some(Await.result(obs.future, ObservationWait))
+      catch { case _: TimeoutException => None })
+
+  /** [[observed]] with the wait supplied by the caller (`None` or an
+    * empty row takes the recount path) — the seam that runs either path
+    * deterministically.
+    */
+  private[operators] def observedWith(df: DataFrame, tag: String,
+      metrics: Seq[Column],
+      await: Observation => Option[Row]): (DataFrame, Row) = {
+    val obs = Observation()
+    val ck = eager(df.observe(obs, metrics.head, metrics.tail: _*))
+    // Spark completes an observation with an EMPTY row when the query
+    // ran without executing the observed node; that row holds no values
+    val row = await(obs).filter(_.length == metrics.length).getOrElse {
+      log.warn(s"observed[$tag]: no observed metrics within " +
+        s"$ObservationWait (the listener bus dropped or delayed the event, " +
+        "or Spark completed the observation empty) — recounting over the " +
+        "materialized frame, one extra job")
+      ck.agg(metrics.head, metrics.tail: _*).head()
+    }
+    (ck, row)
   }
 }

@@ -369,8 +369,8 @@ object SegmentStore {
     writeText(spark, path, name, value.toString)
 
   /** Read a metadata scalar written by [[writeMeta]]; `None` when the
-    * file is absent (legacy store layouts — callers fall back to their
-    * discovery path) or unparseable.
+    * file is absent or unparseable — the caller decides whether that
+    * means a default or a store it cannot serve.
     */
   def readMeta(spark: SparkSession, path: String,
       name: String): Option[Long] =

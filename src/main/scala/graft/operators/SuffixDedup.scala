@@ -647,13 +647,12 @@ object SuffixDedup {
     // exchange(h, doc_id) — and the checkpoint preserves the
     // partitioning, so the per-gram count aggregate below stays
     // map-side too.
-    val obs = org.apache.spark.sql.Observation()
-    val bposts = gramHashes(batch, idCol, textCol, minLen)
-      .select(col("h"), col("doc_id"))
-      .repartition(col("h"))
-      .dropDuplicates(Seq("h", "doc_id"))
-      .observe(obs, count(lit(1)).as("rows"))
-      .localCheckpoint(true)
+    val (bposts, bstats) = Materialize.observed(
+      gramHashes(batch, idCol, textCol, minLen)
+        .select(col("h"), col("doc_id"))
+        .repartition(col("h"))
+        .dropDuplicates(Seq("h", "doc_id")),
+      "SuffixDedup.batchProbeEdges", count(lit(1)).as("rows"))
     // per-gram batch doc counts as a MAP-SIDE aggregate off the
     // checkpoint (hash(h) partitioning satisfied — no exchange): the
     // previous window form paid a WindowExec SORT of the whole posting
@@ -667,19 +666,12 @@ object SuffixDedup {
     // enforced via a TWO-TIER guard (r16 verdict #3: the separate
     // distinct-count job was a fixed term of every probe): rows ≥
     // distinct keys, and the row count rides the checkpoint's own
-    // action as an observation — an increment-sized batch clears with
-    // ZERO extra jobs; only a batch past maxBatchKeys ROWS pays the
-    // exact key-count job before the refuse decision. The wait is
-    // bounded with an explicit-count fallback (the ckptFp recipe: the
-    // listener bus can drop events under pressure).
+    // action as an observation (Materialize.observed) — an
+    // increment-sized batch clears with ZERO extra jobs; only a batch
+    // past maxBatchKeys ROWS pays the exact key-count job before the
+    // refuse decision.
     val bkeys = bnb
-    val nRows =
-      try scala.concurrent.Await.result(obs.future,
-          scala.concurrent.duration.Duration(60, "seconds"))
-        .getAs[Long]("rows")
-      catch {
-        case _: java.util.concurrent.TimeoutException => bposts.count()
-      }
+    val nRows = bstats.getLong(0)
     if (nRows > maxBatchKeys) {
       val nKeys = bkeys.count()
       require(nKeys <= maxBatchKeys,

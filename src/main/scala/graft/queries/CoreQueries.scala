@@ -108,40 +108,6 @@ object CoreQueries {
     out
   }
 
-  /** Two-input sibling of [[emitted]] for stream-stream operators: the
-    * i-th A-batch and i-th B-batch are added together, then the
-    * micro-batch drains — both streams advance in lockstep. Same
-    * internal-API note as [[emitted]] applies.
-    */
-  private def emitted2[A, B](s: org.apache.spark.sql.SparkSession,
-      name: String, aBatches: Seq[Seq[A]], bBatches: Seq[Seq[B]],
-      build: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)
-        => org.apache.spark.sql.DataFrame)(
-      implicit encA: org.apache.spark.sql.Encoder[A],
-      encB: org.apache.spark.sql.Encoder[B]): org.apache.spark.sql.DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    s.catalog.dropTempView(name)
-    val inA = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[A]
-    val inB = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[B]
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", GateStatePartitions)
-    try {
-      val q = build(inA.toDF(), inB.toDF()).writeStream.format("memory")
-        .queryName(name).outputMode("append").start()
-      try aBatches.zipAll(bBatches, Seq.empty[A], Seq.empty[B]).foreach {
-        case (a, b) =>
-          if (a.nonEmpty) inA.addData(a: _*)
-          if (b.nonEmpty) inB.addData(b: _*)
-          q.processAllAvailable()
-      } finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    val sink = s.table(name)
-    val out = s.createDataFrame(
-      s.sparkContext.parallelize(sink.collect().toSeq, 1), sink.schema)
-    s.catalog.dropTempView(name)
-    out
-  }
-
   /** Part-chain graph for the traversal queries (`q_bfs_hops`/`q_sssp`):
     * consecutive (by `l_linenumber`) low-quantity lineitems within an
     * order contribute a directed `part → next part` edge weighted by the
@@ -654,31 +620,41 @@ object CoreQueries {
         .orderBy("user_id")
     }),
 
-    // REAL stream-stream interval join through two lockstep
-    // MemoryStreams: purchases join the same user's views in the
-    // strictly preceding 24 h — inner matches emit per micro-batch with
-    // no flush sentinel needed (only state EVICTION waits on the
-    // watermark). The oracle replays the identical slice as a batch
-    // range join.
+    // REAL stream-stream interval join over one tagged MemoryStream
+    // split into its purchase (tag 0) and view (tag 1) sides: each
+    // lockstep step adds both sides' chunks in ONE addData, so no
+    // trigger can fire between them and the micro-batch count is fixed.
+    // Purchases join the same user's views in the strictly preceding
+    // 24 h — inner matches emit per micro-batch with no flush sentinel
+    // needed (only state EVICTION waits on the watermark). The oracle
+    // replays the identical slice as a batch range join.
     "q_stream_join" -> ((s, dir) => {
       import s.implicits._
       val ev0 = t(s, dir, "events")
-      def side(tp: String): Seq[(Long, Long, Long)] =
+      def side(tp: String, tag: Long): Seq[(Long, Long, Long, Long)] =
         ev0.filter(col("user_id") < 100 && col("event_type") === tp)
-          .select(col("user_id").cast(LongType),
+          .select(lit(tag), col("user_id").cast(LongType),
             Q.usCol(ev0).cast(LongType), col("event_id").cast(LongType))
-          .as[(Long, Long, Long)].collect().toSeq.sortBy(_._2)
-      def chunks(xs: Seq[(Long, Long, Long)]) =
+          .as[(Long, Long, Long, Long)].collect().toSeq.sortBy(_._3)
+      def chunks(xs: Seq[(Long, Long, Long, Long)]) =
         xs.grouped(math.max(1, (xs.size + 3) / 4)).toSeq
-      emitted2[(Long, Long, Long), (Long, Long, Long)](s,
-        "graft_stream_join", chunks(side("purchase")), chunks(side("view")),
-        (pa, vi) => graft.streaming.StreamingIntervalJoin.joinWithin(
-          pa.toDF("user_id", "p_us", "p_id")
-            .withColumn("p_ts", expr("timestamp_micros(p_us)")).drop("p_us"),
-          vi.toDF("user_id", "v_us", "v_id")
-            .withColumn("v_ts", expr("timestamp_micros(v_us)")).drop("v_us"),
-          "user_id", "p_ts", "v_ts",
-          lookback = "24 hours", delayThreshold = "30 days"))
+      val steps = chunks(side("purchase", 0L))
+        .zipAll(chunks(side("view", 1L)), Nil, Nil)
+        .map { case (p, v) => p ++ v }
+      emitted[(Long, Long, Long, Long)](s, "graft_stream_join", steps,
+        in => {
+          def part(tag: Long, names: String*) =
+            in.filter(col("_1") === tag).drop("_1").toDF(names: _*)
+          graft.streaming.StreamingIntervalJoin.joinWithin(
+            part(0L, "user_id", "p_us", "p_id")
+              .withColumn("p_ts", expr("timestamp_micros(p_us)"))
+              .drop("p_us"),
+            part(1L, "user_id", "v_us", "v_id")
+              .withColumn("v_ts", expr("timestamp_micros(v_us)"))
+              .drop("v_us"),
+            "user_id", "p_ts", "v_ts",
+            lookback = "24 hours", delayThreshold = "30 days")
+        })
         .select(asLong(col("user_id")).as("user_id"),
           expr("unix_micros(p_ts)").as("p_us"),
           asLong(col("p_id")).as("p_id"),

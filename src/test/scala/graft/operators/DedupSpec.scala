@@ -481,37 +481,6 @@ class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(sk.values.forall(s => s >= 0 && s < (1L << 52)))
   }
 
-  /** WARN lines the `graft.operators.Dedup` logger emits while `body`
-    * runs, collected until `expect` of them arrived or 20 s passed (the
-    * cap observers log from daemon threads after the action completes).
-    */
-  private def dedupWarnings(expect: Int)(body: => Unit): Seq[String] = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    val logger = LogManager.getLogger("graft.operators.Dedup")
-      .asInstanceOf[Logger]
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val app = new AbstractAppender("dedup-spec-capture", null, null, true,
-        Array.empty) {
-      override def append(e: LogEvent): Unit =
-        if (e.getLevel == Level.WARN)
-          seen.add(e.getMessage.getFormattedMessage)
-    }
-    app.start()
-    logger.addAppender(app)
-    try {
-      body
-      val deadline = System.nanoTime() + 20000000000L
-      while (seen.size < expect && System.nanoTime() < deadline)
-        Thread.sleep(50)
-    } finally {
-      logger.removeAppender(app)
-      app.stop()
-    }
-    seen.toArray(Array.empty[String]).toSeq
-  }
-
   test("fused incremental pair generator equals cross ∪ bandPairs row " +
     "for row, n_bands_matched included, and both caps still WARN") {
     val cap = 4
@@ -559,7 +528,8 @@ class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val want = cross.unionByName(internal).localCheckpoint(true)
     // threshold 0: every candidate pair survives verification
     var got: DataFrame = null
-    val warnings = dedupWarnings(expect = 2) {
+    val warnings = graft.LogCapture.warnings("graft.operators.Dedup",
+        expect = 2) {
       got = Dedup.incrementalMinhashPairsFromIndex(
           batchDocs.unionByName(corpusDocs), cIdx, bIdx, "doc_id", "text",
           threshold = 0.0, maxBucketSize = cap)

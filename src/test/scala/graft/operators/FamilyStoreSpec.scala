@@ -269,6 +269,28 @@ class FamilyStoreSpec extends AnyFunSuite {
     assert(probeMap(late, idxP, lblP)(200L) == 1L)
   }
 
+  test("a labels store without its _depth record fails loudly, naming " +
+      "the path, instead of chasing pointers hop by hop") {
+    val corpus = Seq(
+      (1L, "aaaaaaaaaa" + P1 + "bbbbbbbbbb"),
+      (2L, "cccccccccc" + P1 + "dddddddddd"))
+    val (idxP, lblP) = tmp("famnodepth")
+    FamilyStore.init(df(corpus), "doc_id", "text", idxP, lblP, L)
+    SegmentStore.deleteMeta(spark, lblP, "depth")
+    val batch = Seq((100L, "mmmmmmmmmm" + P1 + "nnnnnnnnnn"))
+    def rejects(op: => Any): Unit = {
+      val e = intercept[IllegalStateException](op)
+      assert(e.getMessage.contains("_depth") && e.getMessage.contains(lblP),
+        e.getMessage)
+    }
+    rejects(probeMap(batch, idxP, lblP))
+    rejects(FamilyStore.processBatch(df(batch), 0L, "doc_id", "text",
+      idxP, lblP, L))
+    rejects(FamilyStore.stats(spark, idxP, lblP))
+    rejects(FamilyStore.compactPrefix(spark, idxP, lblP,
+      upTo = Long.MaxValue))
+  }
+
   test("10-append chain with a bridging merge per batch: parity vs the " +
       "one-shot rerun after EVERY batch, depth bound grows only on " +
       "bridges, compaction mid-chain flattens and the chain keeps " +
